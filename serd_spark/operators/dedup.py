@@ -467,10 +467,11 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     early exit.  Near-dup components are near-cliques, so real corpora
     converge in 2-4 rounds.  Each round is one shuffle join + one
     map-side-combined min aggregation; labels persist round-to-round
-    and the previous round unpersists.  (For adversarial long-chain
-    graphs at extreme scale, the alternating large-star/small-star
-    algorithm halves chains per round; duplicate clusters don't need
-    it.)
+    and the previous round unpersists.  ``max_iter`` is a diameter
+    backstop with the closures' contract
+    (:func:`serd_spark.operators.util.frontier_fixpoint`): if it runs
+    out, one more changed-count probe decides — labels that still move
+    raise ``RuntimeError`` instead of returning wrong components.
 
     Output: (doc_id, cluster_id) for every doc appearing in ≥1 pair.
     """
@@ -486,15 +487,8 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
                      F.col("doc_a").alias("v"))).localCheckpoint()
     labels = edges.select("u").distinct() \
         .withColumn("lbl", F.col("u")).localCheckpoint()
-    # Convergence witness: count of labels that CHANGED this round.
-    # (A sum-of-labels witness is cheaper on paper but silently breaks
-    # for non-numeric ids — F.sum over strings is NULL, so NULL==NULL
-    # "converges" after one round — and risks >2^53 precision ties for
-    # doubles.  The changed-count is type-agnostic: min-label
-    # propagation only needs an ordering, which least()/min() give any
-    # orderable type.)  Each round is one checkpointed materialization
-    # plus a cheap count over the already-checkpointed result.
-    for _ in range(max_iter):
+
+    def _round(labels):
         # the label table is node-sized but carries unknown stats
         # after localCheckpoint, so without the explicit hint the
         # planner shuffle-joins — re-shuffling the EDGE table every
@@ -507,84 +501,34 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
             .groupBy("u")
             .agg(F.min("vlbl").alias("nlbl"))
         )
-        labels = (
-            labels.join(F.broadcast(nbr), "u", "left")
-            .select("u", F.col("lbl").alias("_prev"), F.least(
+        return labels.join(F.broadcast(nbr), "u", "left").select(
+            "u", F.col("lbl").alias("_prev"), F.least(
                 F.col("lbl"),
                 F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"))
-            .localCheckpoint()
-        )
-        n_changed = labels.where(
-            F.col("lbl") != F.col("_prev")).count()
+
+    changed = F.col("lbl") != F.col("_prev")
+    # Convergence witness: count of labels that CHANGED this round.
+    # (A sum-of-labels witness is cheaper on paper but silently breaks
+    # for non-numeric ids — F.sum over strings is NULL, so NULL==NULL
+    # "converges" after one round — and risks >2^53 precision ties for
+    # doubles.  The changed-count is type-agnostic: min-label
+    # propagation only needs an ordering, which least()/min() give any
+    # orderable type.)  Each round is one checkpointed materialization
+    # plus a cheap count over the already-checkpointed result.
+    for _ in range(max_iter):
+        labels = _round(labels).localCheckpoint()
+        n_changed = labels.where(changed).count()
         labels = labels.drop("_prev")
         if n_changed == 0:
             break
+    else:
+        if _round(labels).where(changed).count():
+            raise RuntimeError(
+                f"dup_clusters: labels still changing after"
+                f" max_iter={max_iter} rounds — a component is deeper"
+                f" than the backstop; raise max_iter")
     return labels.select(F.col("u").alias("doc_id"),
                          F.col("lbl").alias("cluster_id"))
-
-
-def dup_clusters_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the variant for adversarial long-chain graphs, where plain
-    min-label propagation needs O(diameter) rounds: star operations
-    contract chains geometrically, converging in O(log n) rounds.
-
-    large-star: every node connects its LARGER neighbors to its
-    current minimum (incl. itself); small-star: every node connects
-    its smaller-or-equal neighbors to its minimum.  Each is one
-    groupBy + one explode; edges localCheckpoint per round (lineage
-    truncation, same reason as :func:`dup_clusters`).  Output matches
-    :func:`dup_clusters`: (doc_id, cluster_id = component minimum).
-    """
-    edges = pairs.select(F.col("doc_a").alias("u"),
-                         F.col("doc_b").alias("v")) \
-        .where(F.col("u") != F.col("v")).distinct().localCheckpoint()
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        # operate on the symmetric closure; each node u computes
-        # m = min(neighbors ∪ {u}) and re-points its larger (large-
-        # star) / smaller-or-equal (small-star) neighbors AND itself
-        # at m — chains contract geometrically
-        # (fresh aliases at every union branch: self-unions of shared
-        # lineage otherwise hit Catalyst attribute-id collisions)
-        sym = e.select(F.col("u").alias("u"), F.col("v").alias("v")) \
-            .union(e.select(F.col("v").alias("u"),
-                            F.col("u").alias("v")))
-        nbrs = sym.groupBy("u").agg(F.collect_set("v").alias("vs"))
-        m = F.array_min(F.array_union(F.col("vs"), F.array(F.col("u"))))
-        cond = ((F.col("v") > F.col("u")) if large
-                else (F.col("v") <= F.col("u")))
-        with_m = nbrs.withColumn("m", m)
-        repointed = (
-            with_m.select("u", "m", F.explode("vs").alias("v"))
-            .where(cond)
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        self_edge = with_m.select(F.col("u").alias("u"),
-                                  F.col("m").alias("v"))
-        return repointed.union(self_edge) \
-            .where(F.col("u") != F.col("v")).distinct()
-
-    for _ in range(max_iter):
-        after = star(star(edges, large=True), large=False) \
-            .localCheckpoint()
-        # converged when the edge set is stable
-        delta = after.exceptAll(edges).count() + \
-            edges.exceptAll(after).count()
-        edges = after
-        if delta == 0:
-            break
-
-    # at convergence every node points at its component minimum
-    members = edges.select(F.col("u").alias("doc_id"),
-                           F.col("v").alias("cluster_id"))
-    roots = edges.select(F.col("v").alias("doc_id")) \
-        .distinct() \
-        .join(edges.select(F.col("u").alias("doc_id")).distinct(),
-              "doc_id", "left_anti") \
-        .withColumn("cluster_id", F.col("doc_id"))
-    return members.union(roots)
 
 
 def simhash(docs: DataFrame, text_col: str = "text",

@@ -14,12 +14,17 @@ round (lineage truncation — same requirement as ``dup_clusters``);
 out-degrees are computed once and reused every round.  Fixed
 iteration count (not convergence-driven) keeps the operator
 deterministic AND exactly SQL-mirrorable: the oracle unrolls the same
-K rounds as chained CTEs.
+K rounds as chained CTEs.  The one convergence-driven verb here,
+``bfs_levels``, runs the shared closure loop
+:func:`serd_spark.operators.util.frontier_fixpoint`, which owns the
+visited-set, checkpoint and ``max_iters`` contract.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from serd_spark.operators.util import frontier_fixpoint
 
 
 def _rank_e4(r):
@@ -301,7 +306,6 @@ def pagerank_weighted(
 def bfs_levels(
     edges: DataFrame, roots: DataFrame, max_iters: int = 30,
     src: str = "src", dst: str = "dst", id_col: str = "node",
-    on_max_iters: str = "raise",
 ) -> DataFrame:
     """Multi-source BFS reachability with hop counts: the SPARQL
     property-path query ``?root p+ ?x`` (transitive closure from a
@@ -316,61 +320,21 @@ def bfs_levels(
 
     Scale shape (Pregel-style): per round, ONE shuffle join of the
     edge table against the current frontier (frontier-sized, not
-    graph-sized), an anti-join against the visited set to keep the
-    frontier shrinking on converging paths, and localCheckpoint on
-    both accumulators to truncate the iterative lineage (the
-    pagerank/k-core discipline).  Terminates at the first empty
-    frontier — ``max_iters`` is a diameter backstop, not a tuning
-    knob.  Works on cyclic graphs: a cycle's nodes enter ``visited``
-    on first touch and the anti-join keeps them out of later
-    frontiers (the recursive-CTE oracle, by contrast, needs an
-    acyclic input to terminate).
-
-    If the loop exhausts ``max_iters`` with a NON-empty frontier the
-    closure is incomplete; ``on_max_iters`` picks the contract:
-    ``"raise"`` (default — a silently partial reachability set is a
-    wrong answer), or ``"truncate"`` to return the ≤max_iters-hop
-    neighborhood (the bounded form some callers genuinely want, e.g.
-    quantified paths)."""
-    if on_max_iters not in ("raise", "truncate"):
-        raise ValueError(
-            f"on_max_iters must be 'raise' or 'truncate',"
-            f" got {on_max_iters!r}")
-    frontier = roots.select(F.col(id_col).alias("node")).distinct() \
+    graph-sized), run by :func:`serd_spark.operators.util.
+    frontier_fixpoint` keyed on ``node`` — see it for the visited-set,
+    checkpoint and ``max_iters`` contract (a graph deeper than the
+    backstop raises).  Works on cyclic graphs: a cycle's nodes enter
+    the visited set on first touch (the recursive-CTE oracle, by
+    contrast, needs an acyclic input to terminate)."""
+    seed = roots.select(F.col(id_col).alias("node")).distinct() \
         .withColumn("level", F.lit(0)).localCheckpoint()
-    visited = frontier
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
 
-    def _expand(frontier, visited):
-        return (
-            e.join(frontier, e["_s"] == frontier["node"])
-            .select(F.col("_d").alias("node"),
-                    (F.col("level") + 1).alias("level"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint()
-        )
+    def expand(frontier):
+        return (e.join(frontier, e["_s"] == frontier["node"])
+                .select(F.col("_d").alias("node"),
+                        (F.col("level") + 1).alias("level")))
 
-    for _ in range(max_iters):
-        nxt = _expand(frontier, visited)
-        if nxt.isEmpty():
-            break
-        # union of already-checkpointed frontier frames — no
-        # re-checkpoint of the growing set (see bgp_path_quant)
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    else:
-        # loop exhausted with a non-empty LAST frontier — the closure
-        # is incomplete only if that frontier still expands (a graph
-        # of depth exactly max_iters is complete; one extra
-        # frontier-sized probe join settles it instead of raising a
-        # false alarm)
-        if on_max_iters == "raise" \
-                and not _expand(frontier, visited).isEmpty():
-            raise RuntimeError(
-                f"bfs_levels: frontier still expanding after"
-                f" max_iters={max_iters} rounds — the graph is deeper"
-                f" than the backstop; raise max_iters or pass"
-                f" on_max_iters='truncate' for the bounded"
-                f" neighborhood")
+    visited = frontier_fixpoint(seed, expand, ["node"], max_iters,
+                                "bfs_levels")
     return visited.select("node", F.col("level").cast("int").alias("level"))

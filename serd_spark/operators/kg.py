@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import _shingles_from_tokens
+from .util import frontier_fixpoint
 
 MENTIONS_PRED = "urn:kg:mentions"
 
@@ -582,84 +583,6 @@ def _bgp_arm(t: DataFrame, pat, gcols: list):
     return df, names
 
 
-def _seeded_path_quant(
-    t: DataFrame, spec, seed: str, n_min: int, n_max: int | None,
-    reverse: bool, max_iters: int, carry_graph: bool,
-) -> DataFrame:
-    """Quantified/closure path with ONE CONSTANT endpoint — the
-    seeded form of :func:`bgp_path_quant`: a NODE frontier walked
-    from the constant (``reverse`` walks object→subject for a
-    constant object) instead of the all-pairs PAIR closure, so
-    instance-scale reachability (``<seed> knows+ ?z``) stays
-    frontier-bounded — the all-pairs blowup the pair closure's
-    docstring warns about never materializes.  Same existence
-    semantics: nodes with SOME path of length k, n_min ≤ k ≤ n_max,
-    from/to the seed; the zero-length row binds the seed to itself
-    iff the seed is a node term (per graph with ``carry_graph``).
-    Output columns: ``[g,] _pa, _pz`` with the seed on the constant
-    side, matching :func:`_bgp_path_arm`'s arm shape."""
-    gcols = ["g"] if carry_graph else []
-    step = _path_hop(t, spec, "_a", "_z", gcols).distinct() \
-        .localCheckpoint()
-    away, back = ("_z", "_a") if reverse else ("_a", "_z")
-    fwd = step.select(*gcols, F.col(away).alias("_r"),
-                      F.col(back).alias("_t"))
-    parts: list[DataFrame] = []
-    if n_min == 0:
-        nodes = t.select(*gcols, F.col("s").alias("_r")).unionByName(
-            t.select(*gcols, F.col("o").alias("_r"))).distinct()
-        parts.append(nodes.where(F.col("_r") == F.lit(seed)))
-    frontier = (fwd.where(F.col("_r") == F.lit(seed))
-                .select(*gcols, F.col("_t").alias("_r"))
-                .distinct().localCheckpoint())
-    hop_join = fwd  # keyed on _r, emits _t
-
-    def _next(cur):
-        return (cur.join(hop_join, gcols + ["_r"])
-                .select(*gcols, F.col("_t").alias("_r")).distinct())
-
-    if n_max == 0:
-        pass
-    elif n_max is not None:
-        if n_min <= 1:
-            parts.append(frontier)
-        for k in range(2, n_max + 1):
-            frontier = _next(frontier).localCheckpoint()
-            if frontier.isEmpty():
-                break
-            if k >= n_min:
-                parts.append(frontier)
-    else:
-        # unbounded closures arrive with n_min <= 1 (bgp_path_quant's
-        # contract), so the reached set IS the answer for k >= 1
-        visited = frontier
-        cur = frontier
-        for _ in range(max_iters):
-            nxt = (_next(cur)
-                   .join(visited, gcols + ["_r"], "left_anti")
-                   .localCheckpoint())
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint()
-            cur = nxt
-        else:
-            if not (_next(cur).join(visited, gcols + ["_r"],
-                                    "left_anti")).isEmpty():
-                raise RuntimeError(
-                    f"seeded path closure still expanding after"
-                    f" max_iters={max_iters} rounds — raise"
-                    f" max_iters")
-        parts.append(visited)
-    if not parts:
-        parts.append(frontier.limit(0))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    pa, pz = ("_pz", "_pa") if reverse else ("_pa", "_pz")
-    return df.select(*gcols, F.lit(seed).alias(pa),
-                     F.col("_r").alias(pz)).distinct()
-
-
 def _bgp_path_arm(t: DataFrame, pat, gcols: list,
                   carry_graph: bool):
     """One PROPERTY-PATH pattern as a binding arm of the composer —
@@ -684,10 +607,9 @@ def _bgp_path_arm(t: DataFrame, pat, gcols: list,
     Endpoint terms follow the normal pattern grammar: variables
     bind, constants filter — pushed into the scan for fixed
     sequences, and for QUANTIFIED forms a constant endpoint
-    switches to the SEEDED frontier walk
-    (:func:`_seeded_path_quant`) so ``<seed> knows+ ?z`` never
-    materializes the all-pairs closure — and the same variable at
-    both ends (``?a p+ ?a`` — cycle membership) becomes an equality
+    SEEDS the walk (:func:`_quant_pairs`) so ``<seed> knows+ ?z``
+    never materializes the all-pairs closure — and the same variable
+    at both ends (``?a p+ ?a`` — cycle membership) becomes an equality
     filter.  Returns the same ``(df, names)`` shape as
     :func:`_bgp_arm`."""
     s, spec, o = pat
@@ -731,20 +653,20 @@ def _bgp_path_arm(t: DataFrame, pat, gcols: list,
                 f"min > 1 with unbounded max in {pat!r}: compose"
                 f" the fixed prefix with a {{'path': […]}} arm"
                 f" (p{{2,}} == p/p+)")
-        if not _is_bgp_var(s) or not _is_bgp_var(o):
-            # constant endpoint: walk a SEEDED node frontier from
-            # it instead of materializing the all-pairs closure and
-            # post-filtering (the filter cannot cross the closure's
-            # localCheckpoint barrier) — instance-scale seeded
-            # reachability stays frontier-bounded
-            seed, rev = ((s, False) if not _is_bgp_var(s)
-                         else (o, True))
-            df = _seeded_path_quant(t, hop, seed, nmin, nmax, rev,
-                                    max_iters, carry_graph)
-        else:
-            df = bgp_path_quant(
-                t, hop, nmin, nmax, out_cols=("_pa", "_pz"),
-                max_iters=max_iters, carry_graph=carry_graph)
+        # constant endpoint: walk from its own step edges instead of
+        # materializing the all-pairs closure and post-filtering (the
+        # filter cannot cross the closure's localCheckpoint barrier) —
+        # instance-scale seeded reachability stays frontier-bounded;
+        # a constant OBJECT walks the reversed step table
+        seed, rev = None, False
+        if not _is_bgp_var(s):
+            seed = s
+        elif not _is_bgp_var(o):
+            seed, rev = o, True
+        df = _quant_pairs(t, hop, nmin, nmax, max_iters, gcols,
+                          seed, rev) \
+            .select(*gcols, F.col("_a").alias("_pa"),
+                    F.col("_z").alias("_pz")).distinct()
     names: dict[str, str] = {}
     for pos, term in (("_pa", s), ("_pz", o)):
         if _is_bgp_var(term):
@@ -1420,11 +1342,10 @@ def bgp_path_quant(
     keyed on the frontier node, each followed by a distinct — the
     frontier never exceeds the distinct reachable-pair count, and an
     empty frontier short-circuits.  Unbounded form: the same frontier
-    joins plus a LEFT ANTI join against the visited-pair set per
-    round (cycle-safe, frontier strictly shrinking on converging
-    paths) with localCheckpoint truncating the iterative lineage —
-    and the ``max_iters`` backstop RAISES on exhaustion rather than
-    returning a partial closure.  The both-ends-unbound closure is
+    joins run by :func:`serd_spark.operators.util.frontier_fixpoint`
+    keyed on the pair — see it for the cycle-safe visited set and the
+    ``max_iters`` backstop, which raises rather than returning a
+    partial closure.  The both-ends-unbound closure is
     inherently output-bounded, not input-bounded: its natural 100 TB
     use is schema-sized predicates (``rdfs:subClassOf*``,
     ``skos:broader+``); for instance-scale reachability from a seed
@@ -1449,64 +1370,62 @@ def bgp_path_quant(
     oa, oz = out_cols
     t = _graph_scope(triples, graph, carry_graph)
     gcols = ["g"] if carry_graph else []
+    df = _quant_pairs(t, spec, n_min, n_max, max_iters, gcols)
+    return df.select(*gcols, F.col("_a").alias(oa),
+                     F.col("_z").alias(oz)).distinct()
+
+
+def _quant_pairs(
+    t: DataFrame, spec, n_min: int, n_max: int | None, max_iters: int,
+    gcols: list, seed: str | None = None, reverse: bool = False,
+) -> DataFrame:
+    """The one ``p{n,m}``/``p*``/``p+`` walk behind
+    :func:`bgp_path_quant` and the seeded path arms: ``[g,] _a, _z``
+    pairs joined by SOME path of length k, ``n_min ≤ k ≤ n_max``
+    (not yet distinct across lengths; ``_a`` is the subject end).
+    The walk starts from the length-1 step pairs — all of them, or
+    with ``seed`` only the seed's own step edges (the walk's start
+    node is the seed, so the pair frontier is a node frontier in
+    disguise), over the REVERSED step table when ``reverse`` (the
+    seed is the object end).  Each round joins the pair frontier to
+    the step table on its far end.  Bounded: ``n_max − 1`` such rounds, each distinct and
+    checkpointed, an empty frontier short-circuiting.  Unbounded:
+    :func:`serd_spark.operators.util.frontier_fixpoint` keyed on the
+    pair — see it for the visited-set and ``max_iters`` contract."""
     parts: list[DataFrame] = []
     if n_min == 0:
         nodes = t.select(*gcols, F.col("s").alias("_a")).unionByName(
             t.select(*gcols, F.col("o").alias("_a"))).distinct()
+        if seed is not None:
+            nodes = nodes.where(F.col("_a") == F.lit(seed))
         parts.append(nodes.select(*gcols, "_a",
                                   F.col("_a").alias("_z")))
-    if n_max == 0:
-        step = None
-    else:
-        step = _path_hop(t, spec, "_a", "_z", gcols).distinct() \
+    if n_max != 0:
+        a, z = ("_z", "_a") if reverse else ("_a", "_z")
+        step = _path_hop(t, spec, a, z, gcols).distinct() \
             .localCheckpoint()
+        frontier = step if seed is None else step.where(
+            F.col("_a") == F.lit(seed)).localCheckpoint()
         nxt_step = step.select(*gcols, F.col("_a").alias("_z"),
                                F.col("_z").alias("_z2"))
-    if step is not None and n_max is not None:
-        frontier = step
-        if n_min <= 1:
-            parts.append(frontier)
-        for k in range(2, n_max + 1):
-            frontier = (
-                frontier.join(nxt_step, gcols + ["_z"])
-                .select(*gcols, "_a", F.col("_z2").alias("_z"))
-                .distinct().localCheckpoint())
-            if frontier.isEmpty():
-                break
-            if k >= n_min:
-                parts.append(frontier)
-    elif step is not None:
-        def _next(frontier, visited):
-            return (
-                frontier.join(nxt_step, gcols + ["_z"])
-                .select(*gcols, "_a", F.col("_z2").alias("_z"))
-                .distinct()
-                .join(visited, gcols + ["_a", "_z"], "left_anti")
-                .localCheckpoint())
 
-        visited = step
-        frontier = step
-        for _ in range(max_iters):
-            nxt = _next(frontier, visited)
-            if nxt.isEmpty():
-                break
-            # visited stays a UNION of already-checkpointed frontier
-            # frames — re-checkpointing the union re-materialized the
-            # whole growing pair set every round (O(depth × |closure|)
-            # row writes; dropping it measured 23.3 → 18.5 s on the
-            # sf1.0 p* row).  The lineage stays flat: k RDD scans.
-            visited = visited.unionByName(nxt)
-            frontier = nxt
+        def expand(f):
+            return (f.join(nxt_step, gcols + ["_z"])
+                    .select(*gcols, "_a", F.col("_z2").alias("_z")))
+
+        if n_max is None:
+            parts.append(frontier_fixpoint(
+                frontier, expand, gcols + ["_a", "_z"], max_iters,
+                "path closure"))
         else:
-            # complete iff the last frontier no longer expands (depth
-            # exactly max_iters is fine; see bfs_levels)
-            if not _next(frontier, visited).isEmpty():
-                raise RuntimeError(
-                    f"bgp_path_quant: pair frontier still expanding"
-                    f" after max_iters={max_iters} rounds — raise"
-                    f" max_iters (the closure is deeper than the"
-                    f" backstop)")
-        parts.append(visited)
+            if n_min <= 1:
+                parts.append(frontier)
+            for k in range(2, n_max + 1):
+                frontier = expand(frontier).distinct().localCheckpoint()
+                if frontier.isEmpty():
+                    break
+                if k >= n_min:
+                    parts.append(frontier)
     if not parts:
         # n_min >= 2 with no path reaching length n_min (the bounded
         # loop emptied early): a valid quantified-path query over
@@ -1515,8 +1434,10 @@ def bgp_path_quant(
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    return df.select(*gcols, F.col("_a").alias(oa),
-                     F.col("_z").alias(oz)).distinct()
+    if reverse:
+        df = df.select(*gcols, F.col("_z").alias("_a"),
+                       F.col("_a").alias("_z"))
+    return df
 
 
 def bgp_minus(

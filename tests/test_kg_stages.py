@@ -906,8 +906,7 @@ def test_bgp_ask_existence(spark):
 
 def test_bfs_levels_max_iters_contract(spark):
     """ADVICE r6: exhausting max_iters with a non-empty frontier used
-    to return a silently partial closure; the default now raises and
-    'truncate' opts into the bounded neighborhood explicitly."""
+    to return a silently partial closure; it raises instead."""
     from serd_spark.operators.graph import bfs_levels
 
     edges = spark.createDataFrame(
@@ -915,9 +914,6 @@ def test_bfs_levels_max_iters_contract(spark):
     roots = spark.createDataFrame([(0,)], "node long")
     with pytest.raises(RuntimeError, match="max_iters"):
         bfs_levels(edges, roots, max_iters=3)
-    got = {(r.node, r.level) for r in bfs_levels(
-        edges, roots, max_iters=3, on_max_iters="truncate").collect()}
-    assert got == {(0, 0), (1, 1), (2, 2), (3, 3)}
     full = {(r.node, r.level)
             for r in bfs_levels(edges, roots).collect()}
     assert full == {(i, i) for i in range(7)}
@@ -927,8 +923,54 @@ def test_bfs_levels_max_iters_contract(spark):
     exact = {(r.node, r.level)
              for r in bfs_levels(edges, roots, max_iters=6).collect()}
     assert exact == full
-    with pytest.raises(ValueError, match="on_max_iters"):
-        bfs_levels(edges, roots, on_max_iters="bogus")
+
+
+def _chain_closure(spark, which: str, n_edges: int, k: int) -> tuple:
+    """Run one closure over the chain 0 → 1 → … → ``n_edges`` with
+    backstop ``k``; return (got, the full closure it must equal)."""
+    from serd_spark.operators.dedup import dup_clusters
+    from serd_spark.operators.graph import bfs_levels
+    from serd_spark.operators.kg import bgp, bgp_path_quant
+
+    chain = [(i, i + 1) for i in range(n_edges)]
+    if which == "bfs_levels":
+        got = bfs_levels(
+            spark.createDataFrame(chain, "src long, dst long"),
+            spark.createDataFrame([(0,)], "node long"), max_iters=k)
+        return ({(r.node, r.level) for r in got.collect()},
+                {(i, i) for i in range(n_edges + 1)})
+    if which == "dup_clusters":
+        got = dup_clusters(
+            spark.createDataFrame(chain, "doc_a long, doc_b long"),
+            max_iter=k)
+        return ({(r.doc_id, r.cluster_id) for r in got.collect()},
+                {(i, 0) for i in range(n_edges + 1)})
+    t = _triples_df(spark, [(f"n{a}", "e", f"n{b}") for a, b in chain])
+    if which == "bgp_path_quant":
+        got = bgp_path_quant(t, "e", 1, None, max_iters=k)
+        return ({(r.a, r.z) for r in got.collect()},
+                {(f"n{a}", f"n{b}") for a in range(n_edges + 1)
+                 for b in range(a + 1, n_edges + 1)})
+    got = bgp(t, [("n0", {"path": "e", "min": 1, "max": None,
+                          "max_iters": k}, "?z")])
+    return ({r.z for r in got.collect()},
+            {f"n{b}" for b in range(1, n_edges + 1)})
+
+
+@pytest.mark.parametrize("which, seed_len", [
+    ("bfs_levels", 0), ("bgp_path_quant", 1), ("seeded_bgp_arm", 1),
+    ("dup_clusters", 0)])
+def test_closure_max_iters_contract(spark, which, seed_len):
+    """Every convergence loop shares one exhaustion contract: a closure
+    needing exactly ``max_iters`` rounds is returned complete (no false
+    alarm from the exhausted loop), one round deeper raises.  The path
+    closures start from the length-1 step pairs, so their chain is one
+    edge longer than BFS's or min-label propagation's."""
+    k = 3
+    got, want = _chain_closure(spark, which, k + seed_len, k)
+    assert got == want
+    with pytest.raises(RuntimeError, match="max_iter"):
+        _chain_closure(spark, which, k + seed_len + 1, k)
 
 
 def test_write_bucketed_triples_rejects_bad_identifier(spark):
@@ -986,17 +1028,6 @@ def test_bgp_path_quant_forms(spark):
     # ('f' has a single edge, so p{2,3} over it matches nothing)
     assert bgp_path_quant(t, "f", 2, 3).count() == 0
     assert bgp_path_quant(t, "nosuchpred", 1, 2).count() == 0
-
-    # pair-BFS depth exactly max_iters: the closure IS complete —
-    # must not raise a false incompleteness alarm (the last new pair
-    # (a,d) lands in round 2; with max_iters=2 the loop exhausts on a
-    # non-empty frontier that no longer expands)
-    got2 = {(r.a, r.z) for r in
-            bgp_path_quant(t, "e", 1, None, max_iters=2).collect()}
-    assert got2 == plus
-    # genuinely too shallow still raises
-    with pytest.raises(RuntimeError, match="max_iters"):
-        bgp_path_quant(t, "e", 1, None, max_iters=1)
 
 
 def test_bgp_path_quant_matches_bruteforce_random(spark):

@@ -797,23 +797,35 @@ def test_bgp_star_bucketed_has_no_exchange(spark, tmpdir_path):
         spark.sql("DROP TABLE IF EXISTS t_star_bucketed")
 
 
-def test_dup_clusters_star_matches_label_prop(spark):
-    """large-star/small-star CC == min-label propagation on chains,
-    triangles, and a long adversarial path (the O(log n) variant)."""
-    from serd_spark.operators.dedup import dup_clusters, dup_clusters_star
+def test_dup_clusters_matches_union_find(spark):
+    """Min-label CC == a pure-Python union-find on chains, a triangle
+    and a long adversarial path; the 31-node path needs 30 rounds, so
+    the default backstop raises instead of mislabelling its tail."""
+    from serd_spark.operators.dedup import dup_clusters
 
     edges = [(1, 2), (2, 3), (3, 4), (4, 5),
              (10, 11),
              (20, 21), (21, 22), (20, 22)]
-    # adversarial 30-node chain
+    # adversarial 30-edge chain
     edges += [(100 + i, 101 + i) for i in range(30)]
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {(d, find(d)) for d in parent}
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    a = {(r.doc_id, r.cluster_id)
-         for r in dup_clusters(pairs, max_iter=60).collect()}
-    b = {(r.doc_id, r.cluster_id)
-         for r in dup_clusters_star(pairs).collect()}
-    assert a == b
-    assert all(c == 100 for d, c in b if d >= 100)
+    got = {(r.doc_id, r.cluster_id)
+           for r in dup_clusters(pairs, max_iter=40).collect()}
+    assert got == want
+    assert all(c == 100 for d, c in got if d >= 100)
+    with pytest.raises(RuntimeError, match="max_iter"):
+        dup_clusters(pairs)
 
 
 def test_image_header_probe(spark):
