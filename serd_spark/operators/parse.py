@@ -1,19 +1,24 @@
 """Parse stages: transcripts DataFrame → triples DataFrame.
 
-Three paths, all Arrow-batched (no per-row Python UDFs):
+Three passes, all Arrow-batched (no per-row Python UDFs).
+``parse_documents`` picks one by syntax, as serd's
+``serd_reader_start`` picks a reader (SURVEY.md O-3): Turtle/TriG run
+pass 1, NT/NQ pass 3.  ``KGPipeline`` runs pass 2 for Turtle/TriG.
 
-1. ``parse_documents`` — the default Turtle/TriG path: one
-   conversation = one document, grouped-map ``applyInPandas`` over
-   ``conv_id`` with the in-order Env fold inside the UDF (SURVEY.md
-   O-6/O-8; document order cannot be a global join).
+1. ``parse_documents_colocated`` — conversations parse whole inside
+   one partition: local sort, then one ``mapInArrow`` that cuts each
+   conversation into bounded chunks at turn boundaries and carries the
+   Env forward from chunk to chunk.  ``parse_documents`` runs it behind
+   a ``repartition(conv_id)``.
 
-2. ``parse_documents_chunked`` — the mega-conversation skew path:
+2. ``parse_documents_chunked`` — the mega-conversation skew pass:
    conversations are split at turn boundaries (statement boundaries by
    the F1 invariant) into bounded chunks; each chunk's directive patch
    list is extracted in the same pass, the tiny patch table is folded
    per conversation and broadcast back, and chunks parse independently
    with a seeded Env + offset blank ids (pure function of
-   (conv, chunk, position) — deterministic under retries).
+   (conv, chunk, position) — deterministic under retries).  The two
+   Turtle passes are row-identical.
 
 3. ``parse_ntriples_lines`` — NTriples/NQuads: line-based, so the
    stage is a shuffle-free explode + mapInPandas; the embarrassingly
@@ -21,7 +26,8 @@ Three paths, all Arrow-batched (no per-row Python UDFs):
 
 Output schema is shared: triple rows plus quarantined error rows
 (``err`` non-null), serd's lax semantics (O-17) — bad input never
-fails the job; strict mode is a downstream filter/assert.
+fails the job.  Strict mode (``lax=False``) keeps each conversation up
+to and including its first error row (:func:`_cut_at_first_error`).
 """
 
 from __future__ import annotations
@@ -133,18 +139,20 @@ def parse_documents(
     lax: bool = True,
     base_template: str = DEFAULT_BASE_TEMPLATE,
 ) -> DataFrame:
-    """Default path: applyInPandas per conv_id, turns ordered by
-    turn_idx inside the UDF (north rule's stable turn ordering).
+    """Parse transcripts with the pass their syntax calls for
+    (reference: serd O-3, ``serd_reader_start`` picks the reader by
+    syntax).
 
-    Syntax dispatch (reference: serd O-3, ``serd_reader_start`` picks
-    the reader by syntax): the stateful Turtle/TriG grammar parses
-    per-conversation here; ``ntriples``/``nquads`` are LINE
-    grammars with no cross-line state, so they route to
+    Turtle/TriG keep Env state across a conversation's turns, so they
+    run :func:`parse_documents_colocated` behind one
+    ``repartition(conv_id)``: one Exchange, no Spark job while the
+    plan is built, nothing persisted.  ``ntriples``/``nquads`` are
+    LINE grammars with no cross-line state, so they route to
     :func:`parse_ntriples_lines` — the shuffle-free vectorized path —
     which also handles NQ graph labels the Turtle grammar has no
     production for.  (NT statement indices are the deterministic
-    ``(turn_idx << 20) | line_no`` rather than a per-conv running
-    count; both orderings are stable.)
+    ``(turn_idx << 20) | line_no``; Turtle ones are
+    ``(chunk_idx << 40) + position``; both orderings are stable.)
 
     The line grammars REQUIRE absolute IRIs (no @base production in
     NT/NQ), so a caller-supplied ``base_template`` cannot affect
@@ -159,24 +167,36 @@ def parse_documents(
                 " production to resolve against it")
         return parse_ntriples_lines(
             transcripts, nquads=(syntax == "nquads"), lax=lax)
+    return parse_documents_colocated(
+        transcripts, syntax=syntax, lax=lax, base_template=base_template,
+        on_split="repartition")
 
-    def parse_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        conv_id = pdf["conv_id"].iloc[0]
-        texts = pdf["text"].tolist()
-        text = "\n".join(texts)
-        turn_lens = list(zip((int(t) for t in pdf["turn_idx"]),
-                             (len(t) for t in texts)))
-        base = base_template.format(conv_id=conv_id)
-        rows = _rows_for_doc(conv_id, text, base, syntax, lax,
-                             turn_lens=turn_lens)
-        return pd.DataFrame(rows, columns=_COLS)
 
-    return (
-        transcripts.select("conv_id", "turn_idx", "text")
-        .groupBy("conv_id")
-        .applyInPandas(parse_group, schema=PARSED_SCHEMA)
-    )
+def _cut_at_first_error(parsed: DataFrame) -> DataFrame:
+    """Strict mode (serd O-17): the reader stops a document at its
+    FIRST error — triples before it stand, everything after (later
+    triples AND later errors) drops.
+
+    Every pass numbers a conversation's rows in document order: NT/NQ
+    by ``(turn << 20) | line``, Turtle by ``(chunk << 40) + position``
+    with a chunk's error rows after its triples, and a strict chunk
+    stops at its first error.  A chunk boundary is a resync point, so
+    the chunks after a conversation's first error still parse; this
+    cut is what stops them.  It is a per-conv min over the error rows
+    (error-bounded, tiny in the strict/validated regime) joined back
+    against the parse.  No broadcast() hint: AQE broadcasts the tiny
+    error set on the happy path anyway, while an adversarial
+    mostly-broken corpus (conv-cardinality error table) degrades to a
+    shuffle join instead of OOMing the driver.  The parse plan feeds
+    both branches; strict is the validation path, where the extra
+    evaluation is the price of failing precisely."""
+    first_err = (parsed.where(F.col("err").isNotNull())
+                 .groupBy("conv_id")
+                 .agg(F.min("stmt_idx").alias("_fe")))
+    return (parsed.join(first_err, "conv_id", "left")
+            .where(F.col("_fe").isNull()
+                   | (F.col("stmt_idx") <= F.col("_fe")))
+            .drop("_fe"))
 
 
 # ---- chunked mega-conversation path ----
@@ -267,24 +287,10 @@ def parse_documents_chunked(
     base_template: str = DEFAULT_BASE_TEMPLATE,
     chunks: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Skew-splitting path.  ``chunks`` may be passed pre-computed
-    (e.g. read back from a stage checkpoint) to avoid recomputing the
-    assemble pass for the patch aggregate and the parse.
-
-    NT/NQ dispatch mirrors :func:`parse_documents`: line grammars
-    have no cross-chunk state to patch, so chunking buys nothing —
-    the line path IS the skew-proof plan (a mega-conversation's
-    lines spread across partitions for free); a non-default
-    ``base_template`` is rejected the same way (no relative-IRI
-    production to resolve against it)."""
-    if syntax in ("ntriples", "nquads"):
-        if base_template != DEFAULT_BASE_TEMPLATE:
-            raise ValueError(
-                f"base_template is not supported for syntax={syntax!r}:"
-                " the NT/NQ line grammars have no relative-IRI"
-                " production to resolve against it")
-        return parse_ntriples_lines(
-            transcripts, nquads=(syntax == "nquads"), lax=lax)
+    """Skew-splitting Turtle/TriG pass.  ``chunks`` may be passed
+    pre-computed (e.g. read back from a stage checkpoint) to avoid
+    recomputing the assemble pass for the patch aggregate and the
+    parse.  NT/NQ input goes through :func:`parse_documents`."""
     if chunks is None:
         # chunks feeds two plan branches (patch aggregate + parse);
         # persist so the assemble groupBy runs once.
@@ -329,7 +335,8 @@ def parse_documents_chunked(
                 )
             yield pd.DataFrame(out, columns=_COLS)
 
-    return joined.mapInPandas(parse_part, schema=PARSED_SCHEMA)
+    parsed = joined.mapInPandas(parse_part, schema=PARSED_SCHEMA)
+    return parsed if lax else _cut_at_first_error(parsed)
 
 
 # ---- co-located (bucketed) path ----
@@ -388,7 +395,7 @@ def parse_documents_colocated(
       bucketed table or the bench corpus generator).
 
     One pass: ``sortWithinPartitions`` (local sort, no exchange) →
-    ``mapInPandas`` that streams turns, cuts bounded chunks at turn
+    ``mapInArrow`` that streams turns, cuts bounded chunks at turn
     boundaries, and *carries the Env forward sequentially* between a
     conversation's chunks (serd's single-pass semantics — no directive
     scan, no patch broadcast, because chunks of a conv stay local and
@@ -502,7 +509,8 @@ def parse_documents_colocated(
             if out[0]:
                 yield to_batch(out)
 
-    return src.mapInArrow(parse_part, schema=PARSED_SCHEMA)
+    parsed = src.mapInArrow(parse_part, schema=PARSED_SCHEMA)
+    return parsed if lax else _cut_at_first_error(parsed)
 
 
 # ---- NTriples / NQuads line path ----
@@ -634,29 +642,7 @@ def parse_ntriples_lines(
                 yield fast_df
 
     parsed = lines.mapInPandas(parse_part, schema=PARSED_SCHEMA)
-    if not lax:
-        # Strict mode (serd O-17): the reader stops a document at
-        # its FIRST error — triples before it stand, everything
-        # after (later triples AND later errors) drops.  stmt_idx =
-        # (turn << 20) | line is document order, so this is a
-        # per-conv min over the error rows (error-bounded, tiny in
-        # the strict/validated regime) joined back against the
-        # parse.  No broadcast() hint: AQE broadcasts the tiny
-        # error set on the happy path anyway, while an adversarial
-        # mostly-broken corpus (conv-cardinality error table)
-        # degrades to a shuffle join instead of OOMing the driver.
-        # The parse plan feeds both branches; strict is the
-        # validation path, where the extra evaluation is the price
-        # of failing precisely.
-        first_err = (parsed.where(F.col("err").isNotNull())
-                     .groupBy("conv_id")
-                     .agg(F.min("stmt_idx").alias("_fe")))
-        parsed = (parsed.join(first_err, "conv_id",
-                              "left")
-                  .where(F.col("_fe").isNull()
-                         | (F.col("stmt_idx") <= F.col("_fe")))
-                  .drop("_fe"))
-    return parsed
+    return parsed if lax else _cut_at_first_error(parsed)
 
 
 def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -9,10 +9,11 @@ Run via spark-submit:
     spark-submit --py-files serd_spark.zip -m serd_spark.pipeline \
         --input /path/transcripts --output /path/kg --syntax turtle
 
-Scale design (10^12 turns): transcripts are salted-hash partitioned by
-conv_id (the groupBy shuffle hashes conv_id); mega-conversations split
-into bounded chunks whose Env state is folded via a tiny broadcast
-patch table (operators/parse.py); blank ids and stmt indices are pure
+Scale design (10^12 turns): Turtle/TriG always run the chunked pass —
+the chunk groupBy hashes conv_id, and mega-conversations split into
+bounded chunks whose Env state is folded via a tiny broadcast patch
+table (operators/parse.py); NT/NQ go through ``parse_documents`` to
+the shuffle-free line pass.  Blank ids and stmt indices are pure
 functions of input coordinates so retries/speculative tasks are safe;
 the only wide operations are the chunk groupBy, the dedup, and the
 final range-partition sort.
@@ -38,7 +39,10 @@ from .operators.materialize import (
     write_checkpoint,
     write_sorted_nquads,
 )
-from .operators.parse import (
+# parse_ntriples_lines is unused here but stays importable: the
+# benchmark's tracer (perfbench/workloads.py) wraps each parse builder
+# by name on this module.
+from .operators.parse import (  # noqa: F401
     assemble_chunks,
     parse_documents,
     parse_documents_chunked,
@@ -55,7 +59,6 @@ class KGPipeline:
         syntax: str = "turtle",
         lax: bool = True,
         chunk_turns: int = 64,
-        chunked: bool = True,
         dedup: bool = True,
         fmt: str = "parquet",
     ):
@@ -64,7 +67,6 @@ class KGPipeline:
         self.syntax = syntax
         self.lax = lax
         self.chunk_turns = chunk_turns
-        self.chunked = chunked
         self.dedup = dedup
         self.fmt = fmt
         self.stage_infos: list[dict] = []
@@ -91,11 +93,9 @@ class KGPipeline:
         if self.syntax in ("ntriples", "nquads"):
             parsed = self._stage(
                 "parsed",
-                lambda: parse_ntriples_lines(
-                    transcripts, nquads=(self.syntax == "nquads"),
-                    lax=self.lax),
+                lambda: parse_documents(transcripts, self.syntax, self.lax),
             )
-        elif self.chunked:
+        else:
             chunks = self._stage(
                 "chunks",
                 lambda: assemble_chunks(
@@ -106,11 +106,6 @@ class KGPipeline:
                 lambda: parse_documents_chunked(
                     transcripts, self.chunk_turns, self.syntax, self.lax,
                     chunks=chunks),
-            )
-        else:
-            parsed = self._stage(
-                "parsed",
-                lambda: parse_documents(transcripts, self.syntax, self.lax),
             )
 
         triples, errors = split_quarantine(parsed)
@@ -158,7 +153,6 @@ def main() -> None:
                     choices=["turtle", "trig", "ntriples", "nquads"])
     ap.add_argument("--strict", action="store_true")
     ap.add_argument("--chunk-turns", type=int, default=64)
-    ap.add_argument("--no-chunking", action="store_true")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -169,7 +163,7 @@ def main() -> None:
         transcripts = transcripts_df(spark, args.n_convs)
     pipe = KGPipeline(
         spark, args.output, syntax=args.syntax, lax=not args.strict,
-        chunk_turns=args.chunk_turns, chunked=not args.no_chunking,
+        chunk_turns=args.chunk_turns,
     )
     summary = pipe.run(transcripts)
     print(json.dumps({k: v for k, v in summary.items() if k != "stages"}))

@@ -227,136 +227,6 @@ def stateful_incremental_parse(
     )
 
 
-def stateful_incremental_parse_tws(
-    transcripts: DataFrame,
-    max_pending: int = 256,
-    state_ttl_ms: int = 0,
-) -> DataFrame:
-    """`transformWithStateInPandas` variant of
-    :func:`stateful_incremental_parse` — the Spark 4.x stateful API
-    (typed per-state variables + optional TTL instead of one packed
-    GroupState tuple).  Same semantics: conversations spanning
-    micro-batches keep their Env, out-of-order turns buffer up to
-    ``max_pending`` (gap quarantine past it), blank/stmt ids stay
-    deterministic.  State layout: a ValueState for the lexical control
-    tuple and a MapState keyed by turn index for the pending buffer,
-    so a large buffer updates per-turn instead of rewriting one JSON
-    blob.  ``state_ttl_ms`` > 0 lets the store reclaim idle
-    conversations (the TTL replaces the old processing-time timeout).
-
-    NB: TWS moves state over a protobuf channel between the Python
-    worker and the JVM state server and needs the RocksDB state-store
-    provider; environments without ``google.protobuf`` can only run
-    the ``applyInPandasWithState`` path above (the pytest for this
-    variant skips itself accordingly).
-    """
-    import json as _json
-
-    import pandas as _pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from ..operators.parse import _COLS, _format_err, DEFAULT_BASE_TEMPLATE
-    from ..turtle import TurtleParser
-
-    GAP_BIT = 1 << 50
-    ttl = state_ttl_ms if state_ttl_ms > 0 else None
-
-    class ParseProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.ctl = handle.getValueState(
-                "ctl", "prefixes string, base string, next_turn int, "
-                "n_chunks int", ttlDurationMs=ttl)
-            self.pending = handle.getMapState(
-                "pending", "turn_idx int", "text string",
-                ttlDurationMs=ttl)
-
-        def handleInputRows(self, key, rows, timerValues):
-            conv_id = key[0]
-            if self.ctl.exists():
-                prefixes_j, base, next_turn, n_chunks = self.ctl.get()
-            else:
-                prefixes_j, base, next_turn, n_chunks = None, None, 0, 0
-
-            for pdf in rows:
-                for turn_idx, text in zip(pdf["turn_idx"].values,
-                                          pdf["text"].values):
-                    self.pending.updateValue((int(turn_idx),), (text,))
-
-            def pending_keys():
-                return sorted(k[0] for k in self.pending.keys())
-
-            out: list[tuple] = []
-            while True:
-                start = next_turn
-                run: list[str] = []
-                while self.pending.containsKey((next_turn,)):
-                    run.append(self.pending.getValue((next_turn,))[0])
-                    self.pending.removeKey((next_turn,))
-                    next_turn += 1
-                if run:
-                    base_uri = base or DEFAULT_BASE_TEMPLATE.format(
-                        conv_id=conv_id)
-                    text = "\n".join(run)
-                    turn_lens = [(start + i, len(t))
-                                 for i, t in enumerate(run)]
-                    parser = TurtleParser(
-                        text, base_uri=base_uri,
-                        blank_prefix=f"{conv_id}-", lax=True,
-                        init_prefixes=(_json.loads(prefixes_j)
-                                       if prefixes_j else None),
-                        blank_offset=n_chunks << 32)
-                    triples, errors = parser.parse()
-                    stmt_offset = n_chunks << 40
-                    out.extend(
-                        (conv_id, stmt_offset + i, t.g, t.s, t.s_type,
-                         t.p, t.o, t.o_type, t.o_datatype, t.o_lang,
-                         None)
-                        for i, t in enumerate(triples))
-                    n_t = len(triples)
-                    out.extend(
-                        (conv_id, stmt_offset + n_t + j, None, None,
-                         None, None, None, None, None, None,
-                         _format_err(pos, msg, text, turn_lens))
-                        for j, (pos, msg) in enumerate(errors))
-                    prefixes_j = _json.dumps(parser.env.prefixes)
-                    base = parser.env.base_uri
-                    n_chunks += 1
-                ks = pending_keys()
-                if len(ks) <= max_pending:
-                    break
-                skip_to = ks[0]
-                out.append(
-                    (conv_id, GAP_BIT | next_turn, None, None, None,
-                     None, None, None, None, None,
-                     f"turn gap: expected turn {next_turn}, buffer "
-                     f"cap {max_pending} exceeded; skipping to turn "
-                     f"{skip_to}"))
-                next_turn = skip_to
-
-            self.ctl.update((prefixes_j, base, int(next_turn),
-                             int(n_chunks)))
-            if out:
-                yield _pd.DataFrame(out, columns=_COLS)
-
-        def close(self) -> None:
-            pass
-
-    from ..operators.parse import PARSED_SCHEMA
-
-    return (
-        transcripts.groupBy("conv_id")
-        .transformWithStateInPandas(
-            ParseProcessor(),
-            outputStructType=PARSED_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 def streaming_exact_dedup(
     transcripts: DataFrame, watermark: str = "10 minutes",
 ) -> DataFrame:

@@ -373,82 +373,6 @@ def test_asof_join_semantics(spark):
     assert got2[1] == 51 and got2[2] is None and got2[3] is None
 
 
-def test_stateful_parse_tws_variant(spark, tmpdir_path):
-    """transformWithStateInPandas variant: same cross-batch Env carry
-    + out-of-order buffering semantics as the applyInPandasWithState
-    path, on the Spark 4.x typed-state API (RocksDB state store)."""
-    # TWS streams state over a protobuf channel; this sandbox has no
-    # usable google.protobuf, so the variant is container-gated (the
-    # applyInPandasWithState path above is the tested default).
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf unavailable: "
-                    "transformWithStateInPandas needs it")
-    from serd_spark.compare import isomorphic
-    from serd_spark.nodes import Triple
-    from serd_spark.operators.parse import parse_documents, split_quarantine
-    from serd_spark.streaming.ingest import (
-        stateful_incremental_parse_tws,
-        stream_transcripts,
-    )
-    from serd_spark.transcripts import TRANSCRIPT_SCHEMA, gen_local
-
-    rows = gen_local(3, mega_every=0)
-    b1 = [r for r in rows if r[1] < 3]
-    b2 = [r for r in rows if r[1] >= 3]
-
-    inp = os.path.join(tmpdir_path, "twsin")
-    out = os.path.join(tmpdir_path, "twsout")
-    ckpt = os.path.join(tmpdir_path, "twsckpt")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        for batch in (b1, b2):
-            spark.createDataFrame(batch, TRANSCRIPT_SCHEMA) \
-                .write.mode("append").parquet(inp)
-            q = (
-                stateful_incremental_parse_tws(
-                    stream_transcripts(spark, inp))
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
-
-    got = spark.read.parquet(out).where(F.col("err").isNull()).collect()
-    want_df, _ = split_quarantine(parse_documents(
-        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), lax=True))
-    want = want_df.collect()
-
-    def by_conv(recs):
-        d = {}
-        for r in recs:
-            d.setdefault(r.conv_id, []).append(Triple(
-                r.g, r.s, r.s_type, r.p, r.o, r.o_type,
-                r.o_datatype, r.o_lang))
-        return d
-
-    g, w = by_conv(got), by_conv(want)
-    assert set(g) == set(w)
-    for conv in w:
-        assert isomorphic(g[conv], w[conv]), conv
-
-
 def test_stratified_sample_deterministic(spark):
     """Hash sampling: rerun-identical, partitioning-independent,
     salt-independent draws, approximate rate."""

@@ -11,6 +11,7 @@ from serd_spark.nodes import Triple
 from serd_spark.operators.parse import (
     parse_documents,
     parse_documents_chunked,
+    parse_documents_colocated,
     parse_ntriples_lines,
     split_quarantine,
 )
@@ -36,7 +37,7 @@ def small_corpus(spark):
 
 
 def test_parse_matches_driver_side(spark, small_corpus):
-    """Spark grouped-map parse == driver-side parse of the same docs."""
+    """Spark parse == driver-side parse of the same docs."""
     from serd_spark.operators.parse import DEFAULT_BASE_TEMPLATE
     from serd_spark.turtle import parse_turtle
 
@@ -60,15 +61,23 @@ def test_parse_matches_driver_side(spark, small_corpus):
 
 
 def test_chunked_equals_whole(spark, small_corpus):
-    whole = collect_triples(
-        split_quarantine(parse_documents(small_corpus))[0])
-    chunked = collect_triples(
-        split_quarantine(
-            parse_documents_chunked(small_corpus, chunk_turns=8))[0])
-    assert set(whole) == set(chunked)
-    for conv in whole:
-        m, a, b = match_counts(whole[conv], chunked[conv])
-        assert m == a == b, (conv, m, a, b)
+    """parse_documents == parse_documents_chunked: triples up to blank
+    bijection, error rows exactly.  The error corpus parses at the
+    default 64-turn chunks on both sides: a chunk boundary is a lax
+    resync point, so error rows depend on where chunks are cut."""
+    err_corpus = transcripts_df(spark, 60, mega_every=7, mega_factor=12,
+                                with_errors=True)
+    for tdf, chunk_turns in ((small_corpus, 8), (err_corpus, 64)):
+        wt, we = split_quarantine(parse_documents(tdf))
+        ct, ce = split_quarantine(
+            parse_documents_chunked(tdf, chunk_turns=chunk_turns))
+        whole, chunked = collect_triples(wt), collect_triples(ct)
+        assert set(whole) == set(chunked)
+        for conv in whole:
+            m, a, b = match_counts(whole[conv], chunked[conv])
+            assert m == a == b, (conv, m, a, b)
+        assert sorted(map(tuple, we.collect())) == \
+            sorted(map(tuple, ce.collect()))
 
 
 def test_ntriples_line_path(spark):
@@ -319,30 +328,21 @@ def test_conv_metrics_single_pass_equivalence(spark):
 
 
 def test_syntax_dispatch_routes_nq_to_line_parser(spark):
-    """parse_documents / parse_documents_chunked with an NT/NQ
-    syntax route to the line parser (serd O-3 dispatch): a quad's
+    """parse_documents with an NT/NQ syntax routes to the line
+    parser (serd O-3 dispatch): a quad's
     graph label lands in ``g`` — the Turtle grammar has no
     production for it and would quarantine the line — and the
     default graph stays NULL."""
-    from serd_spark.operators.parse import (
-        parse_documents,
-        parse_documents_chunked,
-        split_quarantine,
-    )
-
     tdf = spark.createDataFrame(
         [("c1", 0, "user",
           "<urn:s:1> <urn:p> <urn:o:1> <urn:g:x> .\n"
           "<urn:s:2> <urn:p> <urn:o:2> .", None, None)],
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts string")
-    for fn in (parse_documents, parse_documents_chunked):
-        kw = ({"syntax": "nquads"} if fn is parse_documents
-              else {"syntax": "nquads", "chunk_turns": 4})
-        t, e = split_quarantine(fn(tdf, **kw))
-        got = {(r.s, r.g) for r in t.collect()}
-        assert got == {("urn:s:1", "urn:g:x"), ("urn:s:2", None)}
-        assert e.count() == 0
+    t, e = split_quarantine(parse_documents(tdf, syntax="nquads"))
+    got = {(r.s, r.g) for r in t.collect()}
+    assert got == {("urn:s:1", "urn:g:x"), ("urn:s:2", None)}
+    assert e.count() == 0
     # ntriples dispatch REJECTS the graph label instead.
     t2, e2 = split_quarantine(
         parse_documents(tdf, syntax="ntriples"))
@@ -381,10 +381,72 @@ def test_nt_strict_stops_at_first_error(spark):
     assert e2.count() == 2
 
 
+def _strict_pipeline(spark, tdf, tmpdir):
+    from serd_spark.operators.materialize import read_checkpoint
+    from serd_spark.pipeline import KGPipeline
+
+    KGPipeline(spark, tmpdir, lax=False, chunk_turns=2).run(tdf)
+    tri = read_checkpoint(spark, os.path.join(tmpdir, "triples"))
+    err = read_checkpoint(spark, os.path.join(tmpdir, "errors"))
+    return tri, err
+
+
+@pytest.mark.parametrize("run", [
+    lambda spark, tdf, _: split_quarantine(
+        parse_documents(tdf, lax=False)),
+    lambda spark, tdf, _: split_quarantine(
+        parse_documents_chunked(tdf, chunk_turns=2, lax=False)),
+    lambda spark, tdf, _: split_quarantine(
+        parse_documents_colocated(tdf, chunk_turns=2, lax=False,
+                                  on_split="repartition")),
+    _strict_pipeline,
+], ids=["parse_documents", "chunked", "colocated", "KGPipeline"])
+def test_turtle_strict_stops_at_first_error(spark, tmpdir_path, run):
+    """Strict Turtle stops each conversation at its FIRST error even
+    when later chunks parse cleanly on their own: c1 breaks in turn 0
+    (chunk 0), c2 in turn 3 (chunk 1, after turn 2's triple), c3 is
+    clean."""
+    good = "<http://a/{c}{i}> <http://a/p> <http://a/o> ."
+    rows = []
+    for conv, bad_turn in (("c1", 0), ("c2", 3), ("c3", None)):
+        rows += [(conv, i, "user",
+                  "<http://a/s <broken" if i == bad_turn
+                  else good.format(c=conv, i=i), None, None)
+                 for i in range(6)]
+    tdf = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string")
+    t, e = run(spark, tdf, tmpdir_path)
+    assert sorted(r.s for r in t.collect()) == (
+        [f"http://a/c2{i}" for i in range(3)]
+        + [f"http://a/c3{i}" for i in range(6)])
+    assert sorted(r.conv_id for r in e.collect()) == ["c1", "c2"]
+
+
+def test_turtle_parse_documents_plan(spark, small_corpus):
+    """Turtle parse_documents is one repartition(conv_id) in front of
+    one mapInArrow pass: no grouped-map UDF, and no Spark job started
+    while the plan is built."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = last_job()
+    parsed = parse_documents(small_corpus)
+    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    assert last_job() == before
+    assert "MapInArrow" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(conv_id" in exchanges[0], plan
+
+
 def test_line_syntax_rejects_base_template(spark):
     """ADVICE r6: the NT/NQ dispatch used to silently drop a caller's
     base_template (the line grammars have no relative-IRI production);
-    a non-default value is now rejected on both entry points."""
+    a non-default value is now rejected."""
     tdf = spark.createDataFrame(
         [("c1", 0, "user", "<urn:a> <urn:b> <urn:c> .", None, None)],
         "conv_id string, turn_idx int, role string, text string, "
@@ -392,8 +454,5 @@ def test_line_syntax_rejects_base_template(spark):
     with pytest.raises(ValueError, match="base_template"):
         parse_documents(tdf, syntax="ntriples",
                         base_template="http://x/{conv_id}")
-    with pytest.raises(ValueError, match="base_template"):
-        parse_documents_chunked(tdf, syntax="nquads",
-                                base_template="http://x/{conv_id}")
     # the default template stays accepted (and ignored, per NT spec)
     assert parse_documents(tdf, syntax="ntriples").count() == 1
