@@ -3215,8 +3215,8 @@ def _o_kg_substring_mentions(_: str) -> str:
 
 
 def _q_kg_parse_nt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG pipeline plumbing with an EXACT oracle: the same chunked
-    skew-split parse → quarantine → conv_metrics path as
+    """KG pipeline plumbing with an EXACT oracle: the same Turtle
+    parse → quarantine → conv_metrics path as
     kg_parse_turtle, but over an NT-line corpus derived from orders —
     NT is line-splittable, so DuckDB can reconstruct the expected
     per-conversation triple/error counts with pure string ops (the
@@ -3227,7 +3227,7 @@ def _q_kg_parse_nt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from serd_spark.operators.canonicalize import conv_metrics_from_parsed
-    from serd_spark.operators.parse import parse_documents_chunked
+    from serd_spark.operators.parse import parse_documents
 
     orders = _t(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
@@ -3251,7 +3251,7 @@ def _q_kg_parse_nt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("timestamp").alias("ts"),
     )
     m = conv_metrics_from_parsed(
-        parse_documents_chunked(tdf, chunk_turns=8))
+        parse_documents(tdf))
     return m.select(
         "conv_id",
         F.col("n_triples").cast("long").alias("n_triples"),
@@ -3381,7 +3381,7 @@ def _order_cust_nation_triples(
     spark: SparkSession, sf_dir: str, with_region: bool = False,
 ) -> DataFrame:
     """Parse the synthesized NT corpus of order→customer and
-    customer→nation edges through the real chunked parser — shared
+    customer→nation edges through the real Turtle parser — shared
     by kg_2hop (localCheckpoint stand-in) and kg_2hop_bucketed (the
     real ``write_bucketed_triples`` materialization).  With
     ``with_region`` the corpus additionally carries nation→region
@@ -3391,7 +3391,7 @@ def _order_cust_nation_triples(
     from pyspark.sql import Window
 
     from serd_spark.operators.parse import (
-        parse_documents_chunked,
+        parse_documents,
         split_quarantine,
     )
 
@@ -3441,15 +3441,14 @@ def _order_cust_nation_triples(
             F.lit(None).cast("timestamp").alias("ts"),
         )
         tdf = tdf.unionByName(t3)
-    triples, _ = split_quarantine(parse_documents_chunked(
-        tdf, chunk_turns=8))
+    triples, _ = split_quarantine(parse_documents(tdf))
     return triples
 
 
 def _q_kg_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The read-side payoff of KG materialization: parse an NT corpus
-    of order→customer and customer→nation edges (real parser, chunked
-    skew-split path), then answer the 2-hop basic graph pattern
+    of order→customer and customer→nation edges (real Turtle
+    parser), then answer the 2-hop basic graph pattern
     ``?order :cust ?c . ?c :nation ?n`` with one predicate-filtered
     hash join — the order→nation rollup a SPARQL user would write.
     The oracle knows the answer by construction (orders ⋈ customer)
@@ -3506,7 +3505,7 @@ def _q_kg_turtle_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-gate the TURTLE grammar itself (not just NT lines): each
     order becomes a Turtle doc exercising @prefix + CURIE expansion,
     the `a` → rdf:type sugar, a `;` predicate list and a `,` object
-    list; the real chunked parser expands it to 4 typed triples per
+    list; the real Turtle parser expands it to 4 typed triples per
     order, and the oracle reconstructs those triples by construction
     with pure string ops — the grammar's fan-out and the Env expansion
     both sit under the exact-equality gate (the rows-only
@@ -3520,7 +3519,7 @@ def _turtle_orders_triples(
     spark: SparkSession, sf_dir: str, with_clerk: bool = False,
 ) -> DataFrame:
     """Parse the synthesized orders-Turtle corpus (one doc per order:
-    @prefix, `a` sugar, `;`/`,` lists) through the real chunked
+    @prefix, `a` sugar, `;`/`,` lists) through the real Turtle
     parser — shared by kg_turtle_expand and kg_star.  With
     ``with_clerk`` every third order additionally carries an
     ``s:clerk`` property (the sometimes-absent arm that
@@ -3528,7 +3527,7 @@ def _turtle_orders_triples(
     unchanged so the kg_turtle_expand oracle keeps enumerating it
     exactly."""
     from serd_spark.operators.parse import (
-        parse_documents_chunked,
+        parse_documents,
         split_quarantine,
     )
 
@@ -3556,8 +3555,7 @@ def _turtle_orders_triples(
         F.lit(None).cast("string").alias("tool"),
         F.lit(None).cast("timestamp").alias("ts"),
     )
-    triples, _ = split_quarantine(parse_documents_chunked(
-        tdf, chunk_turns=8))
+    triples, _ = split_quarantine(parse_documents(tdf))
     return triples
 
 
@@ -3786,7 +3784,7 @@ def _q_kg_triple_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     populations directly from orders."""
     from serd_spark.operators.kg import triple_pr
     from serd_spark.operators.parse import (
-        parse_documents_chunked,
+        parse_documents,
         split_quarantine,
     )
     from pyspark.sql import Window
@@ -3809,7 +3807,7 @@ def _q_kg_triple_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("timestamp").alias("ts"),
     )
     emitted, _ = split_quarantine(
-        parse_documents_chunked(tdf, chunk_turns=8))
+        parse_documents(tdf))
     expected = orders.where(F.col("o_orderkey") % 11 != 0).select(
         F.concat(F.lit("urn:order:"), "o_orderkey").alias("s"),
         F.lit("urn:schema:cust").alias("p"),
@@ -4461,7 +4459,7 @@ def _o_kg_minus(_: str) -> str:
 
 def _kg_triangle_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A triple corpus with a genuine CYCLE shape, parsed through the
-    real chunked NT parser — the fixture for the generic BGP
+    real Turtle parser over NT text — the fixture for the generic BGP
     composer's gate row.  Three edge types: every order points at its
     customer (``:cust``), every customer at its nation (``:nation``),
     and every order also asserts a direct ``:ships_to`` nation — the
@@ -4473,7 +4471,7 @@ def _kg_triangle_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from serd_spark.operators.parse import (
-        parse_documents_chunked,
+        parse_documents,
         split_quarantine,
     )
 
@@ -4512,8 +4510,7 @@ def _kg_triangle_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
         F.lit(None).cast("string").alias("tool"),
         F.lit(None).cast("timestamp").alias("ts"))
-    triples, _ = split_quarantine(parse_documents_chunked(
-        t1.unionByName(t2), chunk_turns=8))
+    triples, _ = split_quarantine(parse_documents(t1.unionByName(t2)))
     return triples
 
 
@@ -4853,15 +4850,15 @@ def _o_kg_turtle_expand(_: str) -> str:
 
 def _q_kg_parse_turtle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full Turtle KG pipeline on the synthetic transcript corpus:
-    chunked skew-split parse → per-conv triple counts (single-pass
+    Turtle parse → per-conv triple counts (single-pass
     metrics: the parse plan is evaluated once)."""
     from serd_spark.operators.canonicalize import conv_metrics_from_parsed
-    from serd_spark.operators.parse import parse_documents_chunked
+    from serd_spark.operators.parse import parse_documents
     from serd_spark.transcripts import transcripts_df
 
     tdf = transcripts_df(spark, 48, mega_every=16, mega_factor=20)
     return conv_metrics_from_parsed(
-        parse_documents_chunked(tdf, chunk_turns=32))
+        parse_documents(tdf))
 
 
 def _q_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:

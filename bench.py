@@ -301,29 +301,14 @@ def ensure_corpus(n_turns: int) -> tuple[str, int]:
 
 
 def kg_parse_job(spark, corpus_path: str) -> tuple[int, float]:
-    """The measured job: read parquet transcripts → shuffle-free
-    co-located chunked Turtle parse → triple count.
-
-    Uses ``parse_documents_colocated`` (each corpus file holds whole
-    conversations — the production layout of an Iceberg table bucketed
-    by conv_id).  The shuffle-based ``parse_documents_chunked`` path
-    for non-bucketed inputs produces row-identical output (test-
-    enforced) at ~5x the wall cost of the extra full-text shuffle +
-    second Python pass."""
-    from serd_spark.operators.parse import (
-        parse_documents_colocated,
-        split_quarantine,
-    )
+    """The measured job: read parquet transcripts → Turtle parse
+    (``parse_documents``: one ``repartition(conv_id)`` in front of the
+    chunked, Env-carrying pass) → triple count."""
+    from serd_spark.operators.parse import parse_documents, split_quarantine
 
     t0 = time.time()
     tdf = spark.read.parquet(corpus_path)
-    # on_split="trust": the generator writes whole conversations per
-    # file (layout asserted by a standalone assert_colocated run and
-    # pytest), so the measured job is the parse pipeline itself — the
-    # default "check" mode would add a conv_id validation job whose
-    # near-fixed cost skews the 2-vs-8-core efficiency ratio.
-    triples, _ = split_quarantine(parse_documents_colocated(
-        tdf, chunk_turns=64, on_split="trust"))
+    triples, _ = split_quarantine(parse_documents(tdf))
     n = triples.count()
     return n, time.time() - t0
 

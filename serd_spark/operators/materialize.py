@@ -128,8 +128,7 @@ def write_bucketed_triples(
     the bucket spec from the catalog and plans SortMergeJoin WITHOUT
     an Exchange on either side.  This is the parquet/warehouse form of
     the Iceberg `bucket(N, s)` partition transform the deploy target
-    uses; `parse_documents_colocated` expects the same discipline on
-    the transcripts side (bucket by conv_id)."""
+    uses."""
     import re
 
     # The name reaches raw SQL and a filesystem path: accept only a

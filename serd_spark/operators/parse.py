@@ -1,26 +1,17 @@
 """Parse stages: transcripts DataFrame → triples DataFrame.
 
-Three passes, all Arrow-batched (no per-row Python UDFs).
+Two passes, both Arrow-batched (no per-row Python UDFs).
 ``parse_documents`` picks one by syntax, as serd's
-``serd_reader_start`` picks a reader (SURVEY.md O-3): Turtle/TriG run
-pass 1, NT/NQ pass 3.  ``KGPipeline`` runs pass 2 for Turtle/TriG.
+``serd_reader_start`` picks a reader (SURVEY.md O-3); ``KGPipeline``
+calls the same two.
 
-1. ``parse_documents_colocated`` — conversations parse whole inside
-   one partition: local sort, then one ``mapInArrow`` that cuts each
-   conversation into bounded chunks at turn boundaries and carries the
-   Env forward from chunk to chunk.  ``parse_documents`` runs it behind
-   a ``repartition(conv_id)``.
+1. ``parse_documents_colocated`` — Turtle/TriG: one
+   ``repartition(conv_id)`` puts each conversation whole in one
+   partition, then one ``mapInArrow`` cuts it into bounded chunks at
+   turn boundaries and carries the parser's Env forward from chunk to
+   chunk.
 
-2. ``parse_documents_chunked`` — the mega-conversation skew pass:
-   conversations are split at turn boundaries (statement boundaries by
-   the F1 invariant) into bounded chunks; each chunk's directive patch
-   list is extracted in the same pass, the tiny patch table is folded
-   per conversation and broadcast back, and chunks parse independently
-   with a seeded Env + offset blank ids (pure function of
-   (conv, chunk, position) — deterministic under retries).  The two
-   Turtle passes are row-identical.
-
-3. ``parse_ntriples_lines`` — NTriples/NQuads: line-based, so the
+2. ``parse_ntriples_lines`` — NTriples/NQuads: line-based, so the
    stage is a shuffle-free explode + mapInPandas; the embarrassingly
    parallel syntax (SURVEY.md O-7).
 
@@ -28,6 +19,9 @@ Output schema is shared: triple rows plus quarantined error rows
 (``err`` non-null), serd's lax semantics (O-17) — bad input never
 fails the job.  Strict mode (``lax=False``) keeps each conversation up
 to and including its first error row (:func:`_cut_at_first_error`).
+
+``_rows_for_doc`` and ``fold_patches`` parse one chunk in isolation on
+the driver; they are the kernels of the pass's reference checks.
 """
 
 from __future__ import annotations
@@ -133,6 +127,26 @@ def _rows_for_doc(
     return rows
 
 
+def fold_patches(patches: list[tuple[int, str]], upto_chunk: int,
+                 base_uri: str) -> Env:
+    """Fold directive patches of chunks < upto_chunk, in order.
+
+    Driver-side: a chunk's Env as the single pass carries it, rebuilt
+    from earlier chunks' ``scan_directives`` lists (JSON-encoded).  The
+    benchmark reference and the parse tests use it with
+    :func:`_rows_for_doc` to parse one chunk in isolation."""
+    env = Env(base_uri)
+    for chunk_idx, patch_json in sorted(patches, key=lambda x: x[0]):
+        if chunk_idx >= upto_chunk or not patch_json:
+            continue
+        for kind, name, raw in json.loads(patch_json):
+            if kind == "base":
+                env.set_base_uri(raw)
+            else:
+                env.set_prefix(name, raw)
+    return env
+
+
 def parse_documents(
     transcripts: DataFrame,
     syntax: str = "turtle",
@@ -168,8 +182,7 @@ def parse_documents(
         return parse_ntriples_lines(
             transcripts, nquads=(syntax == "nquads"), lax=lax)
     return parse_documents_colocated(
-        transcripts, syntax=syntax, lax=lax, base_template=base_template,
-        on_split="repartition")
+        transcripts, syntax=syntax, lax=lax, base_template=base_template)
 
 
 def _cut_at_first_error(parsed: DataFrame) -> DataFrame:
@@ -199,177 +212,7 @@ def _cut_at_first_error(parsed: DataFrame) -> DataFrame:
             .drop("_fe"))
 
 
-# ---- chunked mega-conversation path ----
-
-CHUNK_SCHEMA = ("conv_id string, chunk_idx int, text string, "
-                "patch string, turn_map string")
-
-
-def assemble_chunks(
-    transcripts: DataFrame, chunk_turns: int = 64, syntax: str = "turtle"
-) -> DataFrame:
-    """Group turns into bounded chunks and extract each chunk's
-    directive patch via the fast lexical scanner (7-8x cheaper than a
-    full-grammar scan; equivalence is test-enforced).
-
-    Assembly is a JVM aggregation (sorted ``collect_list`` →
-    ``array_join``), NOT a grouped-map UDF: ``applyInPandas`` pays
-    ~1 ms of pandas/Arrow setup per GROUP, and chunks are tiny —
-    measured 27 s for 27k chunk-groups where this aggregation takes
-    well under a second.  Python runs only for the directive scan, as
-    ONE vectorized scalar UDF, and only on chunks whose text can
-    contain a directive at all (every Turtle/SPARQL directive spells
-    'prefix' or 'base', so the lowercase substring prefilter has no
-    false negatives)."""
-    from pyspark.sql.types import StringType
-
-    from ..scan import fast_scan_directives
-
-    @F.pandas_udf(StringType())
-    def patch_of(texts: pd.Series) -> pd.Series:
-        def one(t):
-            p = fast_scan_directives(t)
-            return json.dumps(p) if p else None
-        return texts.map(one)
-
-    rows = (
-        transcripts.select("conv_id", "turn_idx", "text")
-        .withColumn("chunk_idx",
-                    (F.col("turn_idx") / F.lit(chunk_turns)).cast("int"))
-    )
-    agg = rows.groupBy("conv_id", "chunk_idx").agg(
-        F.sort_array(F.collect_list(F.struct("turn_idx", "text")))
-        .alias("_ts"))
-    text = F.array_join(
-        F.transform(F.col("_ts"), lambda s: s["text"]), "\n")
-    # (turn_idx, len) pairs: error-cursor lineage through the chunk
-    turn_map = F.to_json(F.transform(
-        F.col("_ts"),
-        lambda s: F.array(s["turn_idx"].cast("long"),
-                          F.length(s["text"]).cast("long"))))
-    directive_possible = F.lower(F.col("text")).contains("prefix") | \
-        F.lower(F.col("text")).contains("base")
-    chunks = agg.select("conv_id", "chunk_idx", text.alias("text"),
-                        turn_map.alias("turn_map"))
-    # filter + union, NOT when(cond, udf): Spark extracts a pandas UDF
-    # into its own ArrowEvalPython node and evaluates it on EVERY row
-    # regardless of the when-branch, shipping the full text column to
-    # Python; filtering first runs the scan only on chunks that can
-    # hold a directive (zero rows for pure-NT corpora).
-    with_dir = chunks.where(directive_possible).withColumn(
-        "patch", patch_of(F.col("text")))
-    without = chunks.where(~directive_possible).withColumn(
-        "patch", F.lit(None).cast("string"))
-    return with_dir.unionByName(without).select(
-        "conv_id", "chunk_idx", "text", "patch", "turn_map")
-
-
-def fold_patches(patches: list[tuple[int, str]], upto_chunk: int,
-                 base_uri: str) -> Env:
-    """Fold directive patches of chunks < upto_chunk, in order."""
-    env = Env(base_uri)
-    for chunk_idx, patch_json in sorted(patches, key=lambda x: x[0]):
-        if chunk_idx >= upto_chunk or not patch_json:
-            continue
-        for kind, name, raw in json.loads(patch_json):
-            if kind == "base":
-                env.set_base_uri(raw)
-            else:
-                env.set_prefix(name, raw)
-    return env
-
-
-def parse_documents_chunked(
-    transcripts: DataFrame,
-    chunk_turns: int = 64,
-    syntax: str = "turtle",
-    lax: bool = True,
-    base_template: str = DEFAULT_BASE_TEMPLATE,
-    chunks: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Skew-splitting Turtle/TriG pass.  ``chunks`` may be passed
-    pre-computed (e.g. read back from a stage checkpoint) to avoid
-    recomputing the assemble pass for the patch aggregate and the
-    parse.  NT/NQ input goes through :func:`parse_documents`."""
-    if chunks is None:
-        # chunks feeds two plan branches (patch aggregate + parse);
-        # persist so the assemble groupBy runs once.
-        chunks = assemble_chunks(transcripts, chunk_turns, syntax).persist()
-
-    # Tiny per-conversation patch aggregate → broadcast.
-    patch_tbl = (
-        chunks.where(F.col("patch").isNotNull())
-        .groupBy("conv_id")
-        .agg(F.sort_array(
-            F.collect_list(F.struct("chunk_idx", "patch"))).alias("patches"))
-    )
-
-    joined = chunks.join(F.broadcast(patch_tbl), "conv_id", "left")
-
-    def parse_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for r in pdf.itertuples(index=False):
-                conv_id = r.conv_id
-                chunk_idx = int(r.chunk_idx)
-                base = base_template.format(conv_id=conv_id)
-                patches = (
-                    [(int(p["chunk_idx"]), p["patch"]) for p in r.patches]
-                    if r.patches is not None and len(r.patches) else []
-                )
-                env = fold_patches(patches, chunk_idx, base)
-                turn_lens = (
-                    [(int(t), int(ln)) for t, ln in json.loads(r.turn_map)]
-                    if getattr(r, "turn_map", None) else None
-                )
-                out.extend(
-                    _rows_for_doc(
-                        conv_id, r.text, base, syntax, lax,
-                        init_prefixes=env.prefixes,
-                        init_base=env.base_uri,
-                        # genids: pure function of (conv, chunk, n)
-                        blank_offset=chunk_idx << 32,
-                        stmt_offset=chunk_idx << 40,
-                        turn_lens=turn_lens,
-                    )
-                )
-            yield pd.DataFrame(out, columns=_COLS)
-
-    parsed = joined.mapInPandas(parse_part, schema=PARSED_SCHEMA)
-    return parsed if lax else _cut_at_first_error(parsed)
-
-
-# ---- co-located (bucketed) path ----
-
-
-def assert_colocated(transcripts: DataFrame) -> None:
-    """Validate the colocated-parse precondition: every conversation
-    lives in exactly one partition.  A conversation that spans
-    partitions would lose its Env (prefix/base) carry across the
-    boundary and parse the straddling chunk twice — silently corrupt
-    output, so fail loudly instead.
-
-    Cost: one column-pruned pass over ``conv_id`` plus a shuffle of
-    distinct (partition, conv) pairs — O(#convs), not O(data).  The
-    partition layout seen here matches the parse job's because both
-    plans read the same source with the same split configuration.
-    """
-    bad = (
-        transcripts
-        .select("conv_id", F.spark_partition_id().alias("pid"))
-        .groupBy("conv_id")
-        .agg(F.countDistinct("pid").alias("n_parts"))
-        .where(F.col("n_parts") > 1)
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        raise ValueError(
-            f"parse_documents_colocated: conversation {bad[0].conv_id!r} "
-            f"spans {bad[0].n_parts} partitions; the co-located layout "
-            "precondition does not hold. Use on_split='repartition' (one "
-            "shuffle) or parse_documents_chunked for this input."
-        )
+# ---- Turtle / TriG pass ----
 
 
 def parse_documents_colocated(
@@ -378,33 +221,22 @@ def parse_documents_colocated(
     syntax: str = "turtle",
     lax: bool = True,
     base_template: str = DEFAULT_BASE_TEMPLATE,
-    on_split: str = "check",
 ) -> DataFrame:
-    """Shuffle-free parse for inputs where each partition holds whole
-    conversations — the production layout (Iceberg table bucketed by
-    ``conv_id``), and what our corpus generator emits.
-
-    ``on_split`` guards the colocation precondition:
-
-    - ``"check"`` (default): run :func:`assert_colocated` — a cheap
-      conv_id-only validation job — and raise if any conversation
-      spans partitions.
-    - ``"repartition"``: hash-repartition by ``conv_id`` first (one
-      shuffle), making the precondition true by construction.
-    - ``"trust"``: skip the guard (caller has layout evidence, e.g. a
-      bucketed table or the bench corpus generator).
-
-    One pass: ``sortWithinPartitions`` (local sort, no exchange) →
-    ``mapInArrow`` that streams turns, cuts bounded chunks at turn
-    boundaries, and *carries the Env forward sequentially* between a
+    """The Turtle/TriG pass: ``repartition(conv_id)`` (one Exchange)
+    puts each conversation whole in one partition, then
+    ``sortWithinPartitions`` (local sort) → one ``mapInArrow`` that
+    streams turns, cuts bounded chunks at turn boundaries, and
+    *carries the parser's Env forward sequentially* between a
     conversation's chunks (serd's single-pass semantics — no directive
-    scan, no patch broadcast, because chunks of a conv stay local and
-    ordered).  Blank/stmt id offsets match ``parse_documents_chunked``
-    exactly (pure function of (conv, chunk, position)), so the two
-    paths are interchangeable and compare equal row-for-row.
+    scan, no patch broadcast).  Building the plan starts no Spark job.
 
-    Memory stays bounded by ``chunk_turns`` regardless of
-    conversation length (mega-convs parse as a sequence of chunks).
+    Chunk ``k`` of a conversation holds turns ``[k*chunk_turns,
+    (k+1)*chunk_turns)``; its blank ids are offset by ``k << 32`` and
+    its stmt indices by ``k << 40``, so every id is a pure function of
+    (conv, chunk, position) and retries are safe.  A chunk boundary is
+    a lax resync point.  Memory stays bounded by ``chunk_turns``
+    regardless of conversation length (mega-conversations parse as a
+    sequence of chunks in one task).
 
     Arrow-direct (``mapInArrow`` + RecordBatch.from_arrays): building
     pandas frames from row tuples measured ~10µs/row — 4.4× slower
@@ -413,15 +245,9 @@ def parse_documents_colocated(
     """
     import pyarrow as pa
 
-    if on_split not in ("check", "repartition", "trust"):
-        raise ValueError(f"on_split must be check|repartition|trust, "
-                         f"got {on_split!r}")
-    src = transcripts.select("conv_id", "turn_idx", "text")
-    if on_split == "repartition":
-        src = src.repartition("conv_id")
-    elif on_split == "check":
-        assert_colocated(src)
-    src = src.sortWithinPartitions("conv_id", "turn_idx")
+    src = (transcripts.select("conv_id", "turn_idx", "text")
+           .repartition("conv_id")
+           .sortWithinPartitions("conv_id", "turn_idx"))
 
     pa_schema = pa.schema([
         ("conv_id", pa.string()), ("stmt_idx", pa.int64()),
@@ -451,8 +277,8 @@ def parse_documents_colocated(
         def flush_conv(conv_id: str, turns: list[tuple],
                        out: list[list]) -> None:
             base = base_template.format(conv_id=conv_id)
-            # chunk by absolute turn_idx (identical cut points to
-            # assemble_chunks, so ids match the distributed path)
+            # chunk by absolute turn_idx: cut points, and so ids, do
+            # not depend on how the partition's batches fall
             by_chunk: dict[int, list[tuple[int, str]]] = {}
             for turn_idx, text in turns:
                 by_chunk.setdefault(int(turn_idx) // chunk_turns,

@@ -1,124 +1,14 @@
-"""Fast lexical directive scanner for the chunked mega-conversation
-path.
+"""Directive scan of one Turtle chunk: its in-order
+``('prefix'|'base', name, raw_uri)`` patch list.
 
-``assemble_chunks`` needs each chunk's in-order ``@prefix``/``@base``
-patch list.  Running the full grammar (TurtleParser scan_only) costs
-as much as parsing; this scanner only tracks the lexical contexts
-that could hide directive-looking text — comments, short/long
-strings, IRIs — and pattern-matches directives elsewhere, so it runs
-at near-memchr speed.  Equivalence with the full-grammar scan is
-enforced by tests over the synthetic corpus and the W3C files.
+The engine does not scan: the Turtle pass carries the parser's Env
+from chunk to chunk.  ``fast_scan_directives`` is the grammar scan
+(``turtle.scan_directives``) under the name the benchmark's reference
+and kernel probe import.  It must be the grammar, not a lexical
+pattern match: lax recovery ends an unterminated IRI at the line's
+end, and a lexical ``<``…``>`` skip would hide the directives after it.
 """
 
 from __future__ import annotations
 
-import re
-
-from .escapes import EscapeError, unescape_uchar_only
-
-_DIRECTIVE_RE = re.compile(
-    r"""
-    (?:
-        @(?P<at>prefix|base)                       # @-form (lowercase only)
-      | (?P<sparql>(?i:prefix|base))(?=[\s<#])     # SPARQL form
-    )
-    """,
-    re.X,
-)
-
-_PREFIX_TAIL_RE = re.compile(
-    r"\s*(?P<name>[^\s:<>#]*):\s*<(?P<uri>[^>]*)>")
-_BASE_TAIL_RE = re.compile(r"\s*<(?P<uri>[^>]*)>")
-
-# A directive keyword can only start a statement: beginning of doc or
-# after one of these characters (ws, '.', '}', '{', ';' should not
-# precede a directive but being permissive only risks a harmless
-# extra exact-scan).
-_BOUNDARY = set(" \t\r\n.}{;")
-
-
-def _unesc(uri: str) -> str:
-    try:
-        return unescape_uchar_only(uri)
-    except EscapeError:
-        return uri
-
-
-def fast_scan_directives(text: str) -> list[tuple[str, str, str]]:
-    """Extract ('prefix'|'base', name, raw_uri) patches in order.
-
-    Overapproximation-safe: anything string-, comment- or IRI-quoted
-    is skipped exactly; directives elsewhere are matched structurally
-    (keyword + tail), which is precisely where the grammar allows
-    them."""
-    out: list[tuple[str, str, str]] = []
-    s = text
-    n = len(s)
-    i = 0
-    prev_boundary = True
-    while i < n:
-        c = s[i]
-        if c == "#":
-            j = i + 1
-            while j < n and s[j] not in "\n\r":
-                j += 1
-            i = j
-            prev_boundary = True
-            continue
-        if c == "<":
-            j = s.find(">", i + 1)
-            i = n if j == -1 else j + 1
-            prev_boundary = False
-            continue
-        if c in "\"'":
-            if s.startswith(c * 3, i):
-                j = s.find(c * 3, i + 3)
-                while j != -1:
-                    # an escaped quote can't end the run; check parity
-                    k = j - 1
-                    bs = 0
-                    while k >= 0 and s[k] == "\\":
-                        bs += 1
-                        k -= 1
-                    if bs % 2 == 0:
-                        break
-                    j = s.find(c * 3, j + 1)
-                i = n if j == -1 else j + 3
-                # closing run may be longer (quote belongs to text)
-                while i < n and s[i] == c:
-                    i += 1
-            else:
-                j = i + 1
-                while j < n:
-                    if s[j] == "\\":
-                        j += 2
-                        continue
-                    if s[j] == c or s[j] in "\n\r":
-                        break
-                    j += 1
-                i = min(j + 1, n)
-            prev_boundary = False
-            continue
-        if prev_boundary and (c == "@" or c in "pPbB"):
-            m = _DIRECTIVE_RE.match(s, i)
-            if m:
-                kind = (m.group("at") or m.group("sparql")).lower()
-                tail_at = m.end()
-                if kind == "prefix":
-                    t = _PREFIX_TAIL_RE.match(s, tail_at)
-                    if t:
-                        out.append(("prefix", t.group("name"),
-                                    _unesc(t.group("uri"))))
-                        i = t.end()
-                        prev_boundary = False
-                        continue
-                else:
-                    t = _BASE_TAIL_RE.match(s, tail_at)
-                    if t:
-                        out.append(("base", "", _unesc(t.group("uri"))))
-                        i = t.end()
-                        prev_boundary = False
-                        continue
-        prev_boundary = c in _BOUNDARY
-        i += 1
-    return out
+from .turtle import scan_directives as fast_scan_directives  # noqa: F401

@@ -85,7 +85,7 @@ def stateful_incremental_parse(
     Per-conversation GroupState carries the folded Env (prefixes +
     chained base), the next expected turn index, a *bounded* buffer of
     out-of-order turns, and a chunk counter that keeps blank/stmt ids
-    deterministic (pure offsets, like the batch chunked path).  Each
+    deterministic (pure offsets, like the batch Turtle pass).  Each
     batch parses maximal contiguous runs of turns — the per-turn
     statement-boundary invariant (FIXTURES.md F1) makes any turn
     boundary a safe chunk cut.

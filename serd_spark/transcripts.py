@@ -18,7 +18,7 @@ which is what makes the corpus usable for resumability tests and the
 two-parallelism-level scaling run.
 
 ~1% of conversations are "mega" (100× median turns) to exercise the
-skew-splitting path (SURVEY.md §2.5 skew note).
+bounded-chunk Turtle pass (SURVEY.md §2.5 skew note).
 """
 
 from __future__ import annotations

@@ -98,9 +98,8 @@ class TurtleParser:
         scan_only: bool = False,
         collect_columns: bool = False,
     ):
-        """``init_prefixes``/``base_uri`` seed the Env (used by the
-        chunked mega-conversation path, where earlier chunks' directive
-        patches are folded in before parsing this chunk).
+        """``init_prefixes``/``base_uri`` seed the Env (the Turtle pass
+        seeds chunk k with the Env chunk k-1 ended with).
 
         ``blank_offset`` offsets generated blank ids so chunk k of a
         split document can't collide with chunk j — genids stay a pure
@@ -950,8 +949,9 @@ def scan_directives(
 ) -> list[tuple[str, str, str]]:
     """Extract the in-order directive patch list from a document chunk
     (full-grammar scan, emission suppressed, unknown prefixes
-    tolerated).  Used by the chunked mega-conversation path to fold
-    Env state across chunk boundaries."""
+    tolerated).  Folded over earlier chunks (``parse.fold_patches``),
+    it rebuilds the Env the Turtle pass carries into a chunk; the
+    benchmark reference and the parse tests use it that way."""
     p = TurtleParser(text, trig=trig, lax=True, scan_only=True)
     p.parse()
     return p.directives

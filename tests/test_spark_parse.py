@@ -1,7 +1,8 @@
-"""Spark-stage tests: parse paths, chunked-vs-whole equivalence, the
-W3C turtle suite executed *through* the Spark pipeline, and the
-resumable end-to-end pipeline."""
+"""Spark-stage tests: parse paths, the Turtle pass against a
+driver-side chunk reference, the W3C turtle suite executed *through*
+the Spark pipeline, and the resumable end-to-end pipeline."""
 
+import json
 import os
 
 import pytest
@@ -9,13 +10,17 @@ import pytest
 from serd_spark.compare import match_counts
 from serd_spark.nodes import Triple
 from serd_spark.operators.parse import (
+    DEFAULT_BASE_TEMPLATE,
+    _rows_for_doc,
+    fold_patches,
     parse_documents,
-    parse_documents_chunked,
     parse_documents_colocated,
     parse_ntriples_lines,
     split_quarantine,
 )
+from serd_spark.suites import REFERENCE_TEST_DIR
 from serd_spark.transcripts import gen_local, transcripts_df
+from serd_spark.turtle import scan_directives
 
 pytestmark = pytest.mark.spark
 
@@ -36,9 +41,41 @@ def small_corpus(spark):
     return df
 
 
+def chunk_reference(rows, chunk_turns: int) -> list[tuple]:
+    """Driver-side rows of the Turtle pass: each ``chunk_turns``-turn
+    chunk parsed alone (``_rows_for_doc``) from the Env folded out of
+    the earlier chunks' grammar scans — the kernels the benchmark
+    reference uses."""
+    convs: dict[str, list[tuple[int, str]]] = {}
+    for conv_id, turn_idx, _role, text, _tool, _ts in rows:
+        convs.setdefault(conv_id, []).append((turn_idx, text))
+    out: list[tuple] = []
+    for conv_id, turns in convs.items():
+        base = DEFAULT_BASE_TEMPLATE.format(conv_id=conv_id)
+        chunks: dict[int, list[tuple[int, str]]] = {}
+        for turn_idx, text in sorted(turns):
+            chunks.setdefault(turn_idx // chunk_turns, []).append(
+                (turn_idx, text))
+        texts = {ci: "\n".join(t for _, t in ch)
+                 for ci, ch in chunks.items()}
+        patches = [(ci, json.dumps(scan_directives(t)))
+                   for ci, t in texts.items()]
+        for ci in sorted(chunks):
+            env = fold_patches(patches, ci, base)
+            out += _rows_for_doc(
+                conv_id, texts[ci], base, "turtle", True,
+                init_prefixes=env.prefixes, init_base=env.base_uri,
+                blank_offset=ci << 32, stmt_offset=ci << 40,
+                turn_lens=[(ti, len(t)) for ti, t in chunks[ci]])
+    return out
+
+
+def by_stmt(rows) -> list[tuple]:
+    return sorted(map(tuple, rows), key=lambda r: (r[0], r[1]))
+
+
 def test_parse_matches_driver_side(spark, small_corpus):
     """Spark parse == driver-side parse of the same docs."""
-    from serd_spark.operators.parse import DEFAULT_BASE_TEMPLATE
     from serd_spark.turtle import parse_turtle
 
     got = collect_triples(
@@ -60,24 +97,23 @@ def test_parse_matches_driver_side(spark, small_corpus):
         assert m == a == b, (conv_id, m, a, b)
 
 
-def test_chunked_equals_whole(spark, small_corpus):
-    """parse_documents == parse_documents_chunked: triples up to blank
-    bijection, error rows exactly.  The error corpus parses at the
-    default 64-turn chunks on both sides: a chunk boundary is a lax
-    resync point, so error rows depend on where chunks are cut."""
-    err_corpus = transcripts_df(spark, 60, mega_every=7, mega_factor=12,
-                                with_errors=True)
-    for tdf, chunk_turns in ((small_corpus, 8), (err_corpus, 64)):
-        wt, we = split_quarantine(parse_documents(tdf))
-        ct, ce = split_quarantine(
-            parse_documents_chunked(tdf, chunk_turns=chunk_turns))
-        whole, chunked = collect_triples(wt), collect_triples(ct)
-        assert set(whole) == set(chunked)
-        for conv in whole:
-            m, a, b = match_counts(whole[conv], chunked[conv])
-            assert m == a == b, (conv, m, a, b)
-        assert sorted(map(tuple, we.collect())) == \
-            sorted(map(tuple, ce.collect()))
+def test_chunked_equals_whole(spark):
+    """The Turtle pass == the driver-side chunk reference, every row
+    exactly (ids, error rows and cursors included), on a clean corpus,
+    one with injected errors (a chunk boundary is a lax resync point,
+    so error rows depend on where chunks are cut) and a mega-
+    conversation corpus."""
+    for kw, chunk_turns in (
+        (dict(n_convs=20, mega_every=7, mega_factor=12), 8),
+        (dict(n_convs=60, mega_every=7, mega_factor=12,
+              with_errors=True), 64),
+        (dict(n_convs=120, mega_every=16, mega_factor=20), 32),
+    ):
+        got = by_stmt(parse_documents_colocated(
+            transcripts_df(spark, **kw), chunk_turns=chunk_turns).collect())
+        want = by_stmt(chunk_reference(gen_local(**kw), chunk_turns))
+        assert len(got) == len(want), (kw, len(got), len(want))
+        assert got == want, kw
 
 
 def test_ntriples_line_path(spark):
@@ -99,6 +135,8 @@ def test_ntriples_line_path(spark):
     assert "Exchange" not in plan  # shuffle-free path
 
 
+@pytest.mark.skipif(not os.path.isdir(REFERENCE_TEST_DIR),
+                    reason="reference test corpus not available")
 def test_w3c_turtle_through_spark(spark):
     """All W3C Turtle eval tests as transcript rows through the Spark
     parse stage; P/R == 1.0 (the BASELINE gate, held exactly)."""
@@ -161,23 +199,6 @@ def test_lax_quarantine_through_pipeline(spark, tmpdir_path):
     assert s["n_triples"] > 0      # job still succeeds (lax, O-17)
 
 
-def test_colocated_equals_chunked(spark):
-    """The shuffle-free co-located path (bucketed-input layout) is
-    row-identical to the distributed chunked path — same triples, same
-    deterministic blank/stmt ids."""
-    from serd_spark.operators.parse import (
-        parse_documents_chunked,
-        parse_documents_colocated,
-    )
-    from serd_spark.transcripts import transcripts_df
-
-    tdf = transcripts_df(spark, 120, mega_every=16, mega_factor=20)
-    a = parse_documents_chunked(tdf, chunk_turns=32)
-    b = parse_documents_colocated(tdf, chunk_turns=32)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_locate_cursor_units():
     """(turn, line, col) mapping over a '\\n'-joined document
     (reference cursor: src/byte_source.h:14-18)."""
@@ -216,6 +237,7 @@ def test_error_cursor_reports_turn(spark):
 
 
 def test_error_cursor_colocated_and_chunked(spark):
+    """The error cursor names the turn inside an 8-turn chunk."""
     rows = [
         ("c1", 0, "user", "<http://a/s> <http://a/p> <http://a/o> .",
          None, None),
@@ -224,33 +246,59 @@ def test_error_cursor_colocated_and_chunked(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp")
-    from serd_spark.operators.parse import (
-        parse_documents_chunked,
-        parse_documents_colocated,
-    )
-    for parsed in (parse_documents_chunked(df, chunk_turns=8),
-                   parse_documents_colocated(df, chunk_turns=8,
-                                             on_split="repartition")):
-        _, err = split_quarantine(parsed)
-        msgs = [r.err for r in err.collect()]
-        assert any(m.startswith("turn 1, line 1,") for m in msgs), msgs
+    _, err = split_quarantine(parse_documents_colocated(df, chunk_turns=8))
+    msgs = [r.err for r in err.collect()]
+    assert any(m.startswith("turn 1, line 1,") for m in msgs), msgs
+
+
+# A PREFIX after an unterminated IRI: the lax parser skips to the end
+# of the bad line and applies the PREFIX, so the next turn's ex: is
+# http://new/.  A lexical scanner that reads '<' up to the next '>'
+# across newlines misses it.
+PREFIX_AFTER_BAD_IRI = ('@prefix ex: <http://old/> .\n'
+                        'ex:s ex:p <unterminated\n'
+                        'ex:s2 ex:p "x" .\n'
+                        'PREFIX ex: <http://new/>')
+
+
+def test_pipeline_carries_prefix_after_unterminated_iri(spark,
+                                                        tmpdir_path):
+    """KGPipeline, parse_documents and a whole-document TurtleParser
+    agree on the Env a chunk starts with, even after lax recovery."""
+    from serd_spark.operators.materialize import read_checkpoint
+    from serd_spark.pipeline import KGPipeline
+    from serd_spark.turtle import TurtleParser
+
+    tdf = spark.createDataFrame(
+        [("c1", 0, "user", PREFIX_AFTER_BAD_IRI, None, None),
+         ("c1", 1, "user", "ex:s3 ex:p ex:o .", None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string")
+    KGPipeline(spark, tmpdir_path, chunk_turns=1).run(tdf)
+    piped = {r.s for r in read_checkpoint(
+        spark, os.path.join(tmpdir_path, "triples")).collect()}
+    parsed = {r.s for r in split_quarantine(
+        parse_documents(tdf))[0].collect()}
+    whole, _ = TurtleParser(
+        PREFIX_AFTER_BAD_IRI + "\nex:s3 ex:p ex:o .",
+        base_uri=DEFAULT_BASE_TEMPLATE.format(conv_id="c1"),
+        lax=True).parse()
+    assert "http://new/s3" in piped
+    assert "http://old/s3" not in piped
+    assert piped == parsed == {t.s for t in whole}
 
 
 def test_colocated_guard_rejects_split_conversation(spark):
-    """ADVICE r1: a conversation spanning partitions must fail loudly,
-    not silently emit corrupt triples."""
-    from serd_spark.operators.parse import parse_documents_colocated
-
+    """A conversation split across partitions still parses whole: the
+    pass's own repartition(conv_id) regroups it (a split conversation
+    would otherwise lose its Env carry and parse turns twice)."""
     rows = [("c1", i, "user",
              f"<http://a/s{i}> <http://a/p> <http://a/o> .", None, None)
             for i in range(16)]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp").repartition(4)  # round-robin split
-    with pytest.raises(ValueError, match="spans"):
-        parse_documents_colocated(df).count()
-    # repartition mode makes the precondition true by construction
-    out = parse_documents_colocated(df, on_split="repartition")
+    out = parse_documents_colocated(df)
     assert out.where("err is null").count() == 16
 
 
@@ -313,14 +361,8 @@ def test_conv_metrics_single_pass_equivalence(spark):
         conv_metrics,
         conv_metrics_from_parsed,
     )
-    from serd_spark.operators.parse import (
-        parse_documents_chunked,
-        split_quarantine,
-    )
-    from serd_spark.transcripts import transcripts_df
-
     tdf = transcripts_df(spark, 24, mega_every=8, mega_factor=10)
-    parsed = parse_documents_chunked(tdf, chunk_turns=16)
+    parsed = parse_documents_colocated(tdf, chunk_turns=16)
     a = {tuple(r) for r in
          conv_metrics(*split_quarantine(parsed)).collect()}
     b = {tuple(r) for r in conv_metrics_from_parsed(parsed).collect()}
@@ -395,12 +437,9 @@ def _strict_pipeline(spark, tdf, tmpdir):
     lambda spark, tdf, _: split_quarantine(
         parse_documents(tdf, lax=False)),
     lambda spark, tdf, _: split_quarantine(
-        parse_documents_chunked(tdf, chunk_turns=2, lax=False)),
-    lambda spark, tdf, _: split_quarantine(
-        parse_documents_colocated(tdf, chunk_turns=2, lax=False,
-                                  on_split="repartition")),
+        parse_documents_colocated(tdf, chunk_turns=2, lax=False)),
     _strict_pipeline,
-], ids=["parse_documents", "chunked", "colocated", "KGPipeline"])
+], ids=["parse_documents", "colocated", "KGPipeline"])
 def test_turtle_strict_stops_at_first_error(spark, tmpdir_path, run):
     """Strict Turtle stops each conversation at its FIRST error even
     when later chunks parse cleanly on their own: c1 breaks in turn 0

@@ -2,10 +2,12 @@
 'perfect' suite analogue): write(T) re-parses isomorphic to T, for
 every W3C turtle/trig eval test and targeted abbreviation cases."""
 
+import os
+
 import pytest
 
 from serd_spark.compare import isomorphic
-from serd_spark.suites import discover, parse_golden
+from serd_spark.suites import REFERENCE_TEST_DIR, discover, parse_golden
 from serd_spark.turtle import parse_turtle
 from serd_spark.writer_turtle import write_turtle
 
@@ -19,6 +21,8 @@ def roundtrip(triples, prefixes=None, trig=False):
     return text
 
 
+@pytest.mark.skipif(not os.path.isdir(REFERENCE_TEST_DIR),
+                    reason="reference test corpus not available")
 @pytest.mark.parametrize("suite", ["turtle", "trig"])
 def test_roundtrip_w3c_evals(suite):
     n = 0
