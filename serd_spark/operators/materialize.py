@@ -30,7 +30,6 @@ def to_nquads_lines(triples: DataFrame) -> DataFrame:
 
 def write_sorted_nquads(
     triples: DataFrame, path: str, fmt: str = "parquet",
-    partitions: int | None = None,
 ) -> None:
     """Global sort on the quad key → one sorted dataset.
 
@@ -41,9 +40,6 @@ def write_sorted_nquads(
     out = to_nquads_lines(
         triples.orderBy(*[F.col(c).asc_nulls_first() for c in SORT_KEY]))
     writer = out.select("line").write.mode("overwrite")
-    if partitions:
-        out = out.coalesce(partitions)
-        writer = out.select("line").write.mode("overwrite")
     if fmt == "text":
         writer.text(path)
     else:
@@ -63,7 +59,7 @@ def checkpoint_exists(path: str) -> bool:
 
 def write_checkpoint(
     df: DataFrame, path: str, stage: str, fmt: str = "parquet",
-    partition_by: list[str] | None = None, metrics: dict | None = None,
+    metrics: dict | None = None,
     validate_readback: bool = False,
 ) -> dict:
     """Write a stage checkpoint + _DONE marker with row/partition
@@ -79,8 +75,6 @@ def write_checkpoint(
     obs = Observation(f"ckpt_{stage}")
     w = df.observe(obs, F.count(F.lit(1)).alias("rows")) \
         .write.mode("overwrite").format(fmt)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
     t0 = time.time()
     w.save(path)
     n = obs.get["rows"]

@@ -6,10 +6,14 @@ Two passes, both Arrow-batched (no per-row Python UDFs).
 calls the same two.
 
 1. ``parse_documents_colocated`` — Turtle/TriG: one
-   ``repartition(conv_id)`` puts each conversation whole in one
-   partition, then one ``mapInArrow`` cuts it into bounded chunks at
-   turn boundaries and carries the parser's Env forward from chunk to
-   chunk.
+   ``repartition(defaultParallelism, conv_id)`` puts each conversation
+   whole in one partition, then one ``mapInArrow`` cuts it into
+   bounded chunks at turn boundaries and carries the parser's Env
+   forward from chunk to chunk.  The width is pinned to one partition
+   per core because the parse is the job's only Python stage and its
+   shuffle is small: a plain ``repartition(conv_id)`` is coalesced by
+   AQE, under the session's 1 MB ``minPartitionSize`` floor, into one
+   task, which leaves every other core idle.
 
 2. ``parse_ntriples_lines`` — NTriples/NQuads: line-based, so the
    stage is a shuffle-free explode + mapInPandas; the embarrassingly
@@ -159,9 +163,10 @@ def parse_documents(
 
     Turtle/TriG keep Env state across a conversation's turns, so they
     run :func:`parse_documents_colocated` behind one
-    ``repartition(conv_id)``: one Exchange, no Spark job while the
-    plan is built, nothing persisted.  ``ntriples``/``nquads`` are
-    LINE grammars with no cross-line state, so they route to
+    ``repartition(defaultParallelism, conv_id)``: one Exchange, no
+    Spark job while the plan is built, nothing persisted.
+    ``ntriples``/``nquads`` are LINE grammars with no cross-line
+    state, so they route to
     :func:`parse_ntriples_lines` — the shuffle-free vectorized path —
     which also handles NQ graph labels the Turtle grammar has no
     production for.  (NT statement indices are the deterministic
@@ -222,8 +227,9 @@ def parse_documents_colocated(
     lax: bool = True,
     base_template: str = DEFAULT_BASE_TEMPLATE,
 ) -> DataFrame:
-    """The Turtle/TriG pass: ``repartition(conv_id)`` (one Exchange)
-    puts each conversation whole in one partition, then
+    """The Turtle/TriG pass: ``repartition(defaultParallelism,
+    conv_id)`` (one Exchange) puts each conversation whole in one
+    partition, then
     ``sortWithinPartitions`` (local sort) → one ``mapInArrow`` that
     streams turns, cuts bounded chunks at turn boundaries, and
     *carries the parser's Env forward sequentially* between a
@@ -238,6 +244,17 @@ def parse_documents_colocated(
     regardless of conversation length (mega-conversations parse as a
     sequence of chunks in one task).
 
+    The Exchange's width is the session's ``defaultParallelism`` (its
+    core count), as ``util.spread`` sizes its round-robin.  A
+    partition count set by the plan is a ``REPARTITION_BY_NUM``, which
+    AQE does not coalesce; a plain ``repartition(conv_id)`` is
+    coalesced to one task on a sub-megabyte corpus, so the job's only
+    Python stage would run on one core.  One partition per core, not
+    ``spark.sql.shuffle.partitions``: each Python task has a fixed
+    start cost, and on a 4-core box 16 partitions parsed slower than
+    4.  Cut points do not depend on the width (chunks are cut by
+    absolute ``turn_idx``), so neither do the rows.
+
     Arrow-direct (``mapInArrow`` + RecordBatch.from_arrays): building
     pandas frames from row tuples measured ~10µs/row — 4.4× slower
     than pyarrow column construction, and the frame is immediately
@@ -245,8 +262,9 @@ def parse_documents_colocated(
     """
     import pyarrow as pa
 
+    width = transcripts.sparkSession.sparkContext.defaultParallelism
     src = (transcripts.select("conv_id", "turn_idx", "text")
-           .repartition("conv_id")
+           .repartition(width, "conv_id")
            .sortWithinPartitions("conv_id", "turn_idx"))
 
     pa_schema = pa.schema([

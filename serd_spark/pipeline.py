@@ -10,14 +10,21 @@ Run via spark-submit:
         --input /path/transcripts --output /path/kg --syntax turtle
 
 Scale design (10^12 turns): Turtle/TriG run the one Turtle pass
-(``parse_documents_colocated``): a ``repartition(conv_id)`` puts each
-conversation in one task, which cuts it into ``chunk_turns``-turn
-chunks and carries the parser's Env from chunk to chunk, so memory
-stays bounded on mega-conversations.  NT/NQ go through
+(``parse_documents_colocated``): a ``repartition(defaultParallelism,
+conv_id)`` puts each conversation in one task, which cuts it into
+``chunk_turns``-turn chunks and carries the parser's Env from chunk to
+chunk, so memory stays bounded on mega-conversations.  On a cluster
+``defaultParallelism`` is the cluster's core count, so the parse runs
+as one wave of streaming ``mapInArrow`` tasks: a task's memory is
+bounded by ``chunk_turns`` and by the local sort, which spills, not
+by its share of the corpus.  The cost is coarser retries: a failed
+task re-parses one core's share.  NT/NQ go through
 ``parse_documents`` to the shuffle-free line pass.  Blank ids and stmt
 indices are pure functions of input coordinates so retries/speculative
 tasks are safe; the only wide operations are the parse repartition,
-the dedup, and the final range-partition sort.
+the dedup, and the final range-partition sort.  The summary's counts
+come from the stage checkpoints' own row counts, so the run ends
+without a counting job.
 """
 
 from __future__ import annotations
@@ -36,6 +43,7 @@ from .operators.canonicalize import (
 )
 from .operators.materialize import (
     checkpoint_exists,
+    checkpoint_info,
     read_checkpoint,
     write_checkpoint,
     write_sorted_nquads,
@@ -78,16 +86,16 @@ class KGPipeline:
     def _path(self, stage: str) -> str:
         return os.path.join(self.workdir, stage)
 
-    def _stage(self, name: str, build, partition_by=None) -> DataFrame:
-        """Run or resume one checkpointed stage."""
+    def _stage(self, name: str, build) -> DataFrame:
+        """Run or resume one checkpointed stage.  Its info carries the
+        stage's ``rows``: counted by the write itself, or on resume
+        read from the checkpoint's marker."""
         path = self._path(name)
         if checkpoint_exists(path):
-            info = {"stage": name, "resumed": True}
-            self.stage_infos.append(info)
-            return read_checkpoint(self.spark, path, self.fmt)
-        df = build()
-        info = write_checkpoint(df, path, name, fmt=self.fmt,
-                                partition_by=partition_by)
+            info = {"stage": name, "resumed": True,
+                    "rows": checkpoint_info(path)["rows"]}
+        else:
+            info = write_checkpoint(build(), path, name, fmt=self.fmt)
         self.stage_infos.append(info)
         return read_checkpoint(self.spark, path, self.fmt)
 
@@ -114,20 +122,18 @@ class KGPipeline:
         else:
             triples = self._stage("triples", lambda: triples)
 
-        metrics_df = self._stage(
-            "metrics", lambda: conv_metrics(triples, errors))
+        self._stage("metrics", lambda: conv_metrics(triples, errors))
         pmetrics = partition_metrics(triples).collect()
 
         out_path = self._path("nquads")
         write_sorted_nquads(triples, out_path, fmt=self.fmt)
 
-        n_triples = triples.count()
-        n_errors = errors.count()
+        rows = {st["stage"]: st["rows"] for st in self.stage_infos}
         summary = {
             "elapsed_sec": round(time.time() - t0, 3),
-            "n_triples": n_triples,
-            "n_errors": n_errors,
-            "n_convs": metrics_df.count(),
+            "n_triples": rows["triples"],
+            "n_errors": rows["errors"],
+            "n_convs": rows["metrics"],
             "partitions": sorted(
                 (r.partition_id, r.n_rows) for r in pmetrics),
             "stages": self.stage_infos,

@@ -35,7 +35,10 @@ def get_spark(
         # task-count overhead; the one query whose compute hid
         # behind a tiny shuffle (prefix_filter_pairs) is fixed
         # structurally with a broadcast candidate join instead.
-        # Env-overridable for cluster tuning.
+        # Env-overridable for cluster tuning.  The Turtle parse does
+        # not rely on this floor: its shuffle is small but feeds the
+        # job's only Python stage, so it pins one partition per core
+        # (operators/parse.py), which AQE leaves uncoalesced.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

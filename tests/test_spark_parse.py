@@ -181,12 +181,18 @@ def test_pipeline_end_to_end_and_resume(spark, tmpdir_path):
     lines = [r.line for r in out]
     assert len(lines) == s1["n_triples"]
 
-    # resume: second run must skip all stages (checkpoint markers)
+    assert s1["n_convs"] == 12
+
+    # resume: second run must skip all stages (checkpoint markers) and
+    # report the same counts, read from the checkpoints' markers
     pipe2 = KGPipeline(spark, tmpdir_path, chunk_turns=8)
     s2 = pipe2.run(tdf)
-    assert s2["n_triples"] == s1["n_triples"]
     resumed = [st for st in s2["stages"] if st.get("resumed")]
     assert len(resumed) >= 4
+    assert [st["rows"] for st in resumed] == [
+        st["rows"] for st in s1["stages"]]
+    for k in ("n_triples", "n_errors", "n_convs"):
+        assert s2[k] == s1[k], k
 
 
 def test_lax_quarantine_through_pipeline(spark, tmpdir_path):
@@ -197,6 +203,14 @@ def test_lax_quarantine_through_pipeline(spark, tmpdir_path):
     s = pipe.run(tdf)
     assert s["n_errors"] > 0       # injected errors quarantined
     assert s["n_triples"] > 0      # job still succeeds (lax, O-17)
+    # the summary's counts are the written datasets' sizes
+    tri = spark.read.parquet(os.path.join(tmpdir_path, "triples"))
+    err = spark.read.parquet(os.path.join(tmpdir_path, "errors"))
+    assert (s["n_triples"], s["n_errors"]) == (tri.count(), err.count())
+    assert s["n_convs"] == 15
+    s2 = KGPipeline(spark, tmpdir_path, chunk_turns=8).run(tdf)
+    for k in ("n_triples", "n_errors", "n_convs"):
+        assert s2[k] == s[k], k
 
 
 def test_locate_cursor_units():
@@ -463,9 +477,12 @@ def test_turtle_strict_stops_at_first_error(spark, tmpdir_path, run):
 
 
 def test_turtle_parse_documents_plan(spark, small_corpus):
-    """Turtle parse_documents is one repartition(conv_id) in front of
-    one mapInArrow pass: no grouped-map UDF, and no Spark job started
-    while the plan is built."""
+    """Turtle parse_documents is one repartition(defaultParallelism,
+    conv_id) in front of one mapInArrow pass: no grouped-map UDF, no
+    Spark job started while the plan is built, and AQE does not
+    coalesce the small parse shuffle into fewer tasks than cores."""
+    import re
+
     tracker = spark.sparkContext.statusTracker()
 
     def last_job():
@@ -473,13 +490,22 @@ def test_turtle_parse_documents_plan(spark, small_corpus):
 
     before = last_job()
     parsed = parse_documents(small_corpus)
-    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    qe = parsed._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
     assert last_job() == before
     assert "MapInArrow" in plan
     assert "FlatMapGroupsInPandas" not in plan
     exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
     assert len(exchanges) == 1, plan
-    assert "hashpartitioning(conv_id" in exchanges[0], plan
+    width = re.search(r"hashpartitioning\(conv_id#\d+, (\d+)\)",
+                      exchanges[0])
+    assert width, plan
+    assert int(width.group(1)) == spark.sparkContext.defaultParallelism
+
+    assert parsed.collect()
+    final = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in final, final
+    assert "AQEShuffleRead" not in final, final
 
 
 def test_line_syntax_rejects_base_template(spark):
