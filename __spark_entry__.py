@@ -3453,7 +3453,7 @@ def _q_kg_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash join — the order→nation rollup a SPARQL user would write.
     The oracle knows the answer by construction (orders ⋈ customer)
     WITHOUT parsing, so the row hash-gates parse + join end to end."""
-    from serd_spark.operators.kg import bgp_2hop
+    from serd_spark.operators.kg import bgp
 
     # bgp_* operators assume a MATERIALIZED triple table (each arm
     # re-reads it); feeding the live parse plan directly would make
@@ -3463,9 +3463,9 @@ def _q_kg_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stand-in for the materialized table (kg_2hop_bucketed exercises
     # the real bucketed-table form).
     triples = _order_cust_nation_cached(spark, sf_dir)
-    return bgp_2hop(triples,
-                    "urn:schema:cust", "urn:schema:nation",
-                    out_cols=("order_iri", "nation_iri"))
+    return bgp(triples, [("?order_iri", "urn:schema:cust", "?c"),
+                         ("?c", "urn:schema:nation", "?nation_iri")],
+               select=["order_iri", "nation_iri"])
 
 
 def _q_kg_2hop_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3483,14 +3483,14 @@ def _q_kg_2hop_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench's second pass in particular — measure the catalog READ
     path the row exists to gate; the first call in any fresh session
     still runs the full write under the same hash gate."""
-    from serd_spark.operators.kg import bgp_2hop
+    from serd_spark.operators.kg import bgp
 
     bucketed = _bucketed_table_cached(
         spark, sf_dir, "serd_triples_2hop", 8,
         lambda: _order_cust_nation_cached(spark, sf_dir))
-    return bgp_2hop(bucketed,
-                    "urn:schema:cust", "urn:schema:nation",
-                    out_cols=("order_iri", "nation_iri"))
+    return bgp(bucketed, [("?order_iri", "urn:schema:cust", "?c"),
+                          ("?c", "urn:schema:nation", "?nation_iri")],
+               select=["order_iri", "nation_iri"])
 
 
 def _o_kg_2hop(_: str) -> str:
@@ -3564,13 +3564,12 @@ def _q_kg_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     (status, cust) property profile via a subject-keyed 2-arm join —
     the `,` object list fans each order into 2 rows (combinational
     BGP semantics), which the oracle reproduces by construction."""
-    from serd_spark.operators.kg import bgp_star
+    from serd_spark.operators.kg import bgp
 
     # localCheckpoint = the materialized-table stand-in (see kg_2hop)
     triples = _turtle_orders_cached(spark, sf_dir)
-    return bgp_star(triples,
-                    ["urn:schema:status", "urn:schema:cust"],
-                    ["status", "cust_iri"])
+    return bgp(triples, [("?s", "urn:schema:status", "?status"),
+                         ("?s", "urn:schema:cust", "?cust_iri")])
 
 
 def _o_kg_star(_: str) -> str:
@@ -3596,16 +3595,14 @@ def _q_kg_star_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily.  Orders without the property keep their 2 fan-out rows
     with clerk NULL (an inner arm would drop them); the oracle
     reproduces the profile by construction with a CASE-null clerk."""
-    from serd_spark.operators.kg import bgp_star
+    from serd_spark.operators.kg import bgp
 
     # localCheckpoint = the materialized-table stand-in (see kg_2hop)
     triples = _turtle_orders_cached(
         spark, sf_dir, with_clerk=True)
-    return bgp_star(triples,
-                    ["urn:schema:status", "urn:schema:cust"],
-                    ["status", "cust_iri"],
-                    optional_preds=["urn:schema:clerk"],
-                    optional_cols=["clerk"])
+    return bgp(triples, [("?s", "urn:schema:status", "?status"),
+                         ("?s", "urn:schema:cust", "?cust_iri")],
+               optional=[[("?s", "urn:schema:clerk", "?clerk")]])
 
 
 def _o_kg_star_optional(_: str) -> str:
@@ -3630,12 +3627,12 @@ def _q_kg_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS as a left-anti join on the same subject key every other
     BGP join uses.  The oracle knows the absent set by construction
     (o_orderkey % 3 <> 0)."""
-    from serd_spark.operators.kg import bgp_not_exists
+    from serd_spark.operators.kg import bgp
 
     triples = _turtle_orders_cached(
         spark, sf_dir, with_clerk=True)
-    return bgp_not_exists(triples, "urn:schema:cust",
-                          "urn:schema:clerk", out_col="cust_iri")
+    return bgp(triples, [("?s", "urn:schema:cust", "?cust_iri")],
+               not_exists=[[("?s", "urn:schema:clerk", "?_x")]])
 
 
 def _o_kg_not_exists(_: str) -> str:
@@ -4380,7 +4377,7 @@ def _q_kg_graph_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, so the decoy graph (prio but no cust) binds nothing and
     cross-graph pairings never appear.  The oracle enumerates the
     surviving (g, s, cust, prio) rows from orders directly."""
-    from serd_spark.operators.kg import bgp_star
+    from serd_spark.operators.kg import bgp
     from serd_spark.operators.parse import (
         parse_documents,
         split_quarantine,
@@ -4411,13 +4408,13 @@ def _q_kg_graph_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _q_kg_named_graphs (guide §2.5)
     t, _ = split_quarantine(parse_documents(spread(tdf),
                                             syntax="nquads"))
-    # bgp_star reads the quad table once per arm — materialize the
+    # bgp reads the quad table once per pattern — materialize the
     # parse (the standard localCheckpoint stand-in, see kg_2hop) so
     # the star scans the triple table rather than re-running the
-    # line parser per arm
-    return bgp_star(t.localCheckpoint(),
-                    ["urn:schema:cust", "urn:schema:prio"],
-                    ["cust_iri", "prio"], carry_graph=True)
+    # line parser per pattern
+    return bgp(t.localCheckpoint(),
+               [("?s", "urn:schema:cust", "?cust_iri"),
+                ("?s", "urn:schema:prio", "?prio")], carry_graph=True)
 
 
 def _o_kg_graph_scoped(_: str) -> str:
@@ -4438,11 +4435,11 @@ def _q_kg_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     kg_not_exists' correlated-absence form of the same question.
     The oracle enumerates the surviving two status rows of every
     non-clerk (orderkey % 3 ≠ 0) order."""
-    from serd_spark.operators.kg import bgp_minus, bgp_star
+    from serd_spark.operators.kg import bgp, bgp_minus
 
     t = _turtle_orders_cached(spark, sf_dir, with_clerk=True)
-    left = bgp_star(t, ["urn:schema:status"], ["status"])
-    pattern = bgp_star(t, ["urn:schema:clerk"], ["clerk"])
+    left = bgp(t, [("?s", "urn:schema:status", "?status")])
+    pattern = bgp(t, [("?s", "urn:schema:clerk", "?clerk")])
     return bgp_minus(left, pattern)  # shared variable set = {s}
 
 
@@ -4515,16 +4512,16 @@ def _kg_triangle_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_kg_bgp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The GENERIC BGP composer under the exact gate, on a pattern no
-    single fixed verb evaluates — a star⋈chain with a CLOSING edge
-    (triangle): ``?o :cust ?c . ?c :nation ?n . ?o :ships_to ?n``.
+    """The GENERIC BGP composer under the exact gate, on a pattern
+    that is neither a star nor a chain — a star⋈chain with a CLOSING
+    edge (triangle): ``?o :cust ?c . ?c :nation ?n . ?o :ships_to ?n``.
     Arms 1+3 share subject ``?o`` (a star), arm 2 chains ``?c``, and
     ``?n`` closes the cycle between the chain's end and the star's
-    second arm — bgp_star cannot express the two subjects, bgp_2hop
-    cannot express the cycle.  The corpus's decoy ships_to edges
-    (odd orders point at a nonexistent nation IRI) close no triangle,
-    so the oracle enumerates exactly the even orders' rows by
-    construction."""
+    second arm (kg_star and kg_2hop run the plain star and chain
+    shapes through the same ``bgp``).  The corpus's decoy ships_to
+    edges (odd orders point at a nonexistent nation IRI) close no
+    triangle, so the oracle enumerates exactly the even orders' rows
+    by construction."""
     from serd_spark.operators.kg import bgp
 
     t = _cached_triples(spark, sf_dir, "triangle",

@@ -20,7 +20,7 @@ Layout:
   writer       canonical NQuads/NTriples line formatter + Turtle
                abbreviation writer
   operators/   Spark DataFrame stages (parse, expand, canonicalize,
-               materialize, dedup, similarity, text, multimodal)
+               materialize, dedup, similarity, text)
   pipeline     end-to-end KG job with checkpoints/lineage/metrics
   transcripts  deterministic synthetic transcript corpus generator
   streaming/   Structured Streaming incremental ingest

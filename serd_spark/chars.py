@@ -59,10 +59,6 @@ def is_hex(ch: str) -> bool:
     return ("0" <= ch <= "9") or ("A" <= ch <= "F") or ("a" <= ch <= "f")
 
 
-def is_ws(ch: str) -> bool:
-    return ch in " \t\r\n"
-
-
 # Characters that may not appear raw inside an IRIREF (<...>):
 # control chars and the explicit exclusion set from IRIREF production.
 IRI_FORBIDDEN = set('<>"{}|^`\\ ')

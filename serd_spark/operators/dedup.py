@@ -33,18 +33,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def shingles_col(text_col, k: int = 3):
-    """k-word shingles as an array column (portable construction:
-    split on whitespace, join adjacent k words).
-
-    NOTE: pass a *column reference to a pre-projected token array*
-    where possible (``shingle_arrays``) — inlining ``split`` here
-    makes Catalyst re-evaluate it per lambda element (k× per shingle),
-    which measured ~50× slower on long documents."""
-    toks = F.split(F.trim(text_col), r"\s+")
-    return _shingles_from_tokens(toks, k)
-
-
 def _shingles_from_tokens(toks, k: int):
     """slice+zip_with construction: each shifted slice is evaluated
     once per ROW; the zip lambda only touches element variables.

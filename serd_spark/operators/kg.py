@@ -380,157 +380,6 @@ def _graph_scope(
     return triples
 
 
-def bgp_2hop(
-    triples: DataFrame, p1: str, p2: str,
-    out_cols: tuple = ("a", "c"),
-    graph: str | None = None, carry_graph: bool = False,
-) -> DataFrame:
-    """Two-hop basic-graph-pattern query over a materialized triple
-    table: ``?a p1 ?b . ?b p2 ?c`` → distinct (a, c) — the smallest
-    real SPARQL-style path query, and the read-side payoff of
-    materializing the KG as (s, p, o) rows (downstream consumers ask
-    exactly this shape: order→customer→nation, doc→entity→class).
-
-    Scale shape: the predicate filters cut each side to ONE
-    predicate's edges before anything moves (predicate selectivity is
-    the classic triple-store win — pushed to the parquet scan as a
-    ``p = …`` PushedFilter), then one shuffle hash join keyed by the
-    shared node ``?b``.  Over a triple table bucketed by subject
-    (``materialize.write_bucketed_triples``) the join side reading
-    ``s`` is exchange-free; nothing here is a cartesian and neither
-    side is assumed broadcastable.
-
-    ``graph``/``carry_graph`` add the SPARQL GRAPH clause (see
-    :func:`_graph_scope`): with ``carry_graph`` both hops must match
-    in the SAME named graph — the join keys on ``(g, ?b)`` and the
-    output grows a leading ``g`` column."""
-    oa, oc = out_cols
-    t = _graph_scope(triples, graph, carry_graph)
-    gcols = ["g"] if carry_graph else []
-    e1 = t.where(F.col("p") == p1).select(
-        *gcols, F.col("s").alias(oa), F.col("o").alias("_b"))
-    e2 = t.where(F.col("p") == p2).select(
-        *gcols, F.col("s").alias("_b"), F.col("o").alias(oc))
-    return e1.join(e2, gcols + ["_b"]) \
-        .select(*gcols, oa, oc).distinct()
-
-
-def bgp_star(
-    triples: DataFrame, preds: list, out_cols: list | None = None,
-    optional_preds: list | None = None,
-    optional_cols: list | None = None,
-    max_per_pred: int | None = None,
-    graph: str | None = None, carry_graph: bool = False,
-) -> DataFrame:
-    """Star-shaped basic graph pattern: ``?s p1 ?o1 . ?s p2 ?o2 …``
-    — the entity-profile query (all requested properties of each
-    subject), the other workhorse SPARQL shape next to the path join
-    of :func:`bgp_2hop`.  A subject with multiple values for one
-    predicate fans out combinationally (standard BGP semantics).
-
-    ``optional_preds`` arms are SPARQL ``OPTIONAL { ?s p ?o }``
-    clauses: a LEFT join on the same ``s`` key — subjects missing the
-    property keep their required-arm rows with NULL in that column
-    (the property-sometimes-absent profile every SPARQL user writes
-    daily; an inner arm would silently drop those subjects).
-
-    ``max_per_pred`` caps the per-subject fan-out: a pathological hub
-    subject with thousands of values on two-plus arms goes QUADRATIC
-    (cartesian per subject), the star-join analogue of the hot LSH
-    bucket.  Subjects exceeding the cap on an arm are quarantined
-    from that arm entirely (dropped rows on a required arm drop the
-    subject; on an optional arm it reverts to NULL) — the same
-    drop-the-hot-bucket semantics as ``max_bucket`` in the
-    LSH/SimHash family, deterministic and order-independent where a
-    keep-first-N would depend on row order.  Default None = uncapped
-    (entity profiles are near-1:1 per predicate; set it when feeding
-    untrusted/wild triples).
-
-    Output: (s, out_cols…, optional_cols…), distinct.
-
-    Scale shape: each arm is ONE predicate's edges (filter pushed to
-    the scan over a materialized table), and every join — required
-    and optional alike — keys on the SAME column ``s``, so over a
-    subject-bucketed triple table
-    (``materialize.write_bucketed_triples``) the whole star is
-    exchange-free (test-pinned: the executed plan has zero Exchange
-    nodes), and on any layout the n-way join reuses one hash
-    partitioning of ``s`` across all arms instead of re-shuffling
-    per join.  The cap is a per-arm count window — same partitioning
-    again, no extra exchange.
-
-    ``graph``/``carry_graph`` add the SPARQL GRAPH clause (see
-    :func:`_graph_scope`): with ``carry_graph`` every arm — required,
-    optional, and the cap window alike — keys on ``(g, s)``, so the
-    star stays a one-partitioning join tree per named graph and the
-    output grows a leading ``g`` column."""
-    if not preds:
-        raise ValueError("preds must be non-empty")
-    out_cols = out_cols or [f"o{i}" for i in range(1, len(preds) + 1)]
-    if len(out_cols) != len(preds):
-        raise ValueError(
-            f"out_cols has {len(out_cols)} names for {len(preds)} preds")
-    optional_preds = optional_preds or []
-    optional_cols = optional_cols or [
-        f"opt{i}" for i in range(1, len(optional_preds) + 1)]
-    if len(optional_cols) != len(optional_preds):
-        raise ValueError(
-            f"optional_cols has {len(optional_cols)} names for "
-            f"{len(optional_preds)} optional_preds")
-
-    t = _graph_scope(triples, graph, carry_graph)
-    key = (["g", "s"] if carry_graph else ["s"])
-
-    def _arm(p: str, oc: str) -> DataFrame:
-        arm = t.where(F.col("p") == p).select(
-            *key, F.col("o").alias(oc))
-        if max_per_pred is not None:
-            w = Window.partitionBy(*key)
-            arm = arm.withColumn("_n", F.count("*").over(w)) \
-                .where(F.col("_n") <= max_per_pred).drop("_n")
-        return arm
-
-    df = None
-    for p, oc in zip(preds, out_cols):
-        arm = _arm(p, oc)
-        df = arm if df is None else df.join(arm, key)
-    for p, oc in zip(optional_preds, optional_cols):
-        df = df.join(_arm(p, oc), key, "left")
-    return df.distinct()
-
-
-def bgp_not_exists(
-    triples: DataFrame, pred: str, absent_pred: str,
-    out_col: str = "o",
-    graph: str | None = None, carry_graph: bool = False,
-) -> DataFrame:
-    """Negation-by-absence BGP: ``?s pred ?o . FILTER NOT EXISTS
-    { ?s absent_pred ?any }`` — the third workhorse SPARQL shape
-    after the path join (:func:`bgp_2hop`) and the star/OPTIONAL
-    profile (:func:`bgp_star`): "entities that LACK a property"
-    (orders without a clerk, docs without a license triple, nodes
-    missing a type).  Output: (s, out_col), distinct.
-
-    Scale shape: both arms are ONE predicate's edges (filters pushed
-    to the scan) and the NOT EXISTS is a LEFT ANTI join on ``s`` —
-    same key as every other BGP join, so over a subject-bucketed
-    triple table (``materialize.write_bucketed_triples``) it is
-    exchange-free, and the anti join never materializes the negated
-    side's values (Spark builds/probes only ``s``).
-
-    ``graph``/``carry_graph`` add the SPARQL GRAPH clause (see
-    :func:`_graph_scope`): with ``carry_graph`` the absence test is
-    PER NAMED GRAPH — ``?s`` lacking the property in graph g1 matches
-    even if some other graph asserts it (the anti join keys on
-    ``(g, s)``) — and the output grows a leading ``g`` column."""
-    t = _graph_scope(triples, graph, carry_graph)
-    key = (["g", "s"] if carry_graph else ["s"])
-    have = t.where(F.col("p") == pred).select(
-        *key, F.col("o").alias(out_col))
-    absent = t.where(F.col("p") == absent_pred).select(*key)
-    return have.join(absent, key, "left_anti").distinct()
-
-
 def _is_bgp_var(term) -> bool:
     return isinstance(term, str) and term.startswith("?")
 
@@ -773,10 +622,11 @@ def bgp(
     workhorse shape of every SPARQL engine built over the statement
     stream (the reference's downstream consumers index exactly the
     (s, p, o) tuple this composes on, include/serd/serd.h:576-584).
-    Subsumes the fixed verbs: a star is all-arms-share-``?s``, a
-    chain is :func:`bgp_2hop`; this also evaluates the shapes NO
-    single verb covers (triangles/cycles, star⋈chain mixes,
-    variable-predicate arms).
+    The one pattern evaluator of the read side: a star is
+    all-arms-share-``?s`` (``?s p1 ?o1 . ?s p2 ?o2``), a 2-hop chain
+    is ``?a p1 ?b . ?b p2 ?c`` with ``select=["a", "c"]``, and the
+    same call evaluates triangles/cycles, star⋈chain mixes and
+    variable-predicate arms.
 
     Each pattern is a ``(s, p, o)`` term triple: a term starting
     with ``?`` is a variable (same name = same binding across arms,
@@ -800,9 +650,9 @@ def bgp(
     explicit ``crossJoin``.  Exception: arms naming the SAME
     CONSTANT SUBJECT count as connected (``<s> p1 ?a . <s> p2 ?b``
     joins on the shared constant — the per-subject product SPARQL
-    specifies, bounded by one subject's fan-out, exactly what
-    ``bgp_star`` computes for one subject); DISTINCT constant
-    subjects still raise.  A fully-ground pattern (no variables)
+    specifies, bounded by one subject's fan-out, exactly the star
+    ``?s p1 ?a . ?s p2 ?b`` restricted to one subject); DISTINCT
+    constant subjects still raise.  A fully-ground pattern (no variables)
     is the ASK-style guard: it filters the whole result to empty
     when absent, joined as a broadcast one-row existence flag, never
     a data-sized product.
@@ -832,10 +682,10 @@ def bgp(
     explicit joins instead).  Because every join key is
     required-bound — never NULL — the plain left join IS the
     spec-exact left-outer-join semantics here, with no unbound-
-    compatibility caveat.  Subsumes ``bgp_star(optional_preds=…)``:
-    a one-pattern group ``[("?s", p, "?o")]`` is exactly an OPTIONAL
-    star arm, and a multi-pattern group is the OPTIONAL sub-CHAIN no
-    fixed verb expresses (``OPTIONAL { ?o :cust ?c . ?c :nation ?n }``).
+    compatibility caveat.  A one-pattern group ``[("?s", p, "?o")]``
+    is an OPTIONAL star arm (a left join on ``s``, exchange-free over
+    a subject-bucketed table), and a multi-pattern group is an
+    OPTIONAL sub-CHAIN (``OPTIONAL { ?o :cust ?c . ?c :nation ?n }``).
 
     A pattern whose PREDICATE position is a dict is a property-path
     arm (see :func:`_bgp_path_arm`): ``{"path": [h1, h2]}`` for the
@@ -865,10 +715,12 @@ def bgp(
     rejected — even alongside required anchors, since joining on
     the required subset alone would silently drop the optional
     correlation — route NULL-aware subtraction through
-    :func:`bgp_minus` ``compat='partial'``).  Subsumes
-    :func:`bgp_not_exists`.  Groups sharing no variable at all are
-    rejected too (an existence test detached from the bindings is
-    an ASK — run it as a ground-pattern guard or its own bgp).
+    :func:`bgp_minus` ``compat='partial'``).  "Subjects lacking a
+    property" is ``not_exists=[[("?s", absent_pred, "?_x")]]``: a
+    left anti join on ``s`` that reads only the negated arm's keys.
+    Groups sharing no variable at all are rejected too (an
+    existence test detached from the bindings is an ASK — run it as
+    a ground-pattern guard or its own bgp).
 
     ``bind`` maps NEW variable names to SQL expressions over the
     bound columns — SPARQL ``BIND(expr AS ?v)``
@@ -1208,8 +1060,9 @@ def bgp_path(
     graph: str | None = None, carry_graph: bool = False,
 ) -> DataFrame:
     """Sequence property path: ``?a p1/p2/…/pk ?z`` — the SPARQL 1.1
-    path expression generalizing :func:`bgp_2hop` to any fixed hop
-    count (order→customer→nation→region, doc→entity→class→ontology).
+    path expression generalizing the 2-hop :func:`bgp` chain
+    (``?a p1 ?b . ?b p2 ?z``) to any fixed hop count
+    (order→customer→nation→region, doc→entity→class→ontology).
     Output: distinct (a, z).  For the UNBOUNDED form (``p+``) use
     :func:`serd_spark.operators.graph.bfs_levels`; this is the
     fixed-length chain, which needs no fixpoint.
@@ -1447,12 +1300,12 @@ def bgp_minus(
     """SPARQL ``MINUS``: remove solutions from ``bindings`` that are
     compatible with some solution of ``pattern`` on their SHARED
     variables — the set-subtraction negation verb next to
-    :func:`bgp_not_exists` (the correlated-existence form).  The two
-    differ exactly where SPARQL says they do: when the operands share
-    NO variables, MINUS removes NOTHING (disjoint domains are never
-    compatible), which this operator honors by returning ``bindings``
-    unchanged — where a NOT EXISTS would drop everything whenever the
-    pattern is non-empty.
+    :func:`bgp`'s ``not_exists`` groups (the correlated-existence
+    form).  The two differ exactly where SPARQL says they do: when
+    the operands share NO variables, MINUS removes NOTHING (disjoint
+    domains are never compatible), which this operator honors by
+    returning ``bindings`` unchanged — where a NOT EXISTS would drop
+    everything whenever the pattern is non-empty.
 
     ``on`` names the shared variables explicitly; default = the
     column-name intersection.
@@ -1464,8 +1317,8 @@ def bgp_minus(
       sides — a row with a NULL shared column is never matched, hence
       never removed (plain Spark equality-join semantics).  This is
       the fast path and exact for fully-bound BGP bindings; when the
-      LEFT side came from OPTIONAL arms (:func:`bgp_star`
-      ``optional_preds`` — NULLable columns) and such a column is in
+      LEFT side came from OPTIONAL groups (:func:`bgp`
+      ``optional`` — NULLable columns) and such a column is in
       the shared set, it DIVERGES from the SPARQL spec, which ignores
       unbound variables and can still subtract on the rest.  Either
       pass ``on=`` restricted to the always-bound columns, or use:
@@ -1742,7 +1595,7 @@ def bgp_construct(
     bindings: DataFrame, template: list,
 ) -> DataFrame:
     """SPARQL ``CONSTRUCT``: rewrite a bindings table (the output of
-    :func:`bgp_star` / :func:`bgp_path` / any select) into new
+    :func:`bgp` / :func:`bgp_path` / any select) into new
     triples via a template — the graph-to-graph transformation verb
     (invert an edge, reify a join result, re-predicate a legacy
     vocabulary).  ``template`` is a list of (s, p, o) specs; each
@@ -1791,17 +1644,15 @@ def bgp_ask(triples: DataFrame, pred: str,
     subject/object are given; the predicate is required.
 
     Scale shape: the constant filters push to the scan and the
-    existence check is a LIMIT-1 count — Spark stops scanning at
-    the first matching row per the limit, no full aggregation."""
+    existence check is a lazy count over a LIMIT 1 — Spark stops
+    scanning at the first matching row, no full aggregation, and
+    building the plan runs no job."""
     df = triples.where(F.col("p") == pred)
     if s is not None:
         df = df.where(F.col("s") == s)
     if o is not None:
         df = df.where(F.col("o") == o)
-    n = df.limit(1).count()
-    spark = triples.sparkSession
-    return spark.createDataFrame(
-        [(int(n > 0),)], "ask bigint")
+    return df.limit(1).agg(F.count(F.lit(1)).alias("ask"))
 
 
 NS_RDFS = "http://www.w3.org/2000/01/rdf-schema#"

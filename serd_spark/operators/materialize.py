@@ -59,7 +59,6 @@ def checkpoint_exists(path: str) -> bool:
 
 def write_checkpoint(
     df: DataFrame, path: str, stage: str, fmt: str = "parquet",
-    metrics: dict | None = None,
     validate_readback: bool = False,
 ) -> dict:
     """Write a stage checkpoint + _DONE marker with row/partition
@@ -92,8 +91,6 @@ def write_checkpoint(
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "format": fmt,
     }
-    if metrics:
-        info.update(metrics)
     with open(_done_marker(path), "w") as f:
         json.dump(info, f)
     return info

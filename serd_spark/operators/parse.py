@@ -42,7 +42,6 @@ from ..env import Env
 from ..ntriples import NTParseError, parse_nt_line
 from ..escapes import EscapeError
 from ..turtle import TurtleParser
-from ..uri import uri_is_absolute, uri_resolve
 
 # Unified output of every parse stage: triples + quarantined errors.
 PARSED_SCHEMA = (
@@ -495,8 +494,3 @@ def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     errors = parsed.where(F.col("err").isNotNull()).select(
         "conv_id", F.col("stmt_idx").alias("err_idx"), "err")
     return triples, errors
-
-
-def resolve_iri_series(s: pd.Series, base: str) -> pd.Series:
-    """Vectorized relative-IRI resolution for standalone use (O-20)."""
-    return s.map(lambda v: v if uri_is_absolute(v) else uri_resolve(v, base))

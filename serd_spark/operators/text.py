@@ -558,20 +558,6 @@ def source_quality_stats(
     )
 
 
-def low_quality_source_docs(
-    docs: DataFrame, threshold: float, text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
-    """Docs belonging to sources whose average quality score falls
-    below ``threshold`` — the wholesale-drop list.  The per-source
-    stats table is tiny (one row per source) and rides a broadcast
-    semi join; the corpus never shuffles."""
-    bad = source_quality_stats(docs, text_col, source_col) \
-        .where(F.col("avg_quality") < threshold).select("source")
-    return docs.join(F.broadcast(bad),
-                     docs[source_col] == bad.source, "leftsemi")
-
-
 def quality_buckets(
     docs: DataFrame, text_col: str = "text",
     percentiles: tuple = (0.25, 0.5, 0.75),

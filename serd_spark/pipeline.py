@@ -71,7 +71,6 @@ class KGPipeline:
         syntax: str = "turtle",
         lax: bool = True,
         chunk_turns: int = 64,
-        dedup: bool = True,
         fmt: str = "parquet",
     ):
         self.spark = spark
@@ -79,7 +78,6 @@ class KGPipeline:
         self.syntax = syntax
         self.lax = lax
         self.chunk_turns = chunk_turns
-        self.dedup = dedup
         self.fmt = fmt
         self.stage_infos: list[dict] = []
 
@@ -117,10 +115,7 @@ class KGPipeline:
         triples, errors = split_quarantine(parsed)
         errors = self._stage("errors", lambda: errors)
 
-        if self.dedup:
-            triples = self._stage("triples", lambda: dedup_triples(triples))
-        else:
-            triples = self._stage("triples", lambda: triples)
+        triples = self._stage("triples", lambda: dedup_triples(triples))
 
         self._stage("metrics", lambda: conv_metrics(triples, errors))
         pmetrics = partition_metrics(triples).collect()

@@ -53,9 +53,3 @@ def format_statement(t: Triple, ascii_: bool = False) -> str:
         parts.append(f"<{esc_iri(t.g)}>" if not t.g.startswith("_:")
                      else t.g)
     return " ".join(parts) + " ."
-
-
-def statement_sort_key(t: Triple) -> tuple:
-    """Total order for deterministic output (g,s,p,o,...)."""
-    return (t.g or "", t.s, t.p, t.o, t.o_type,
-            t.o_datatype or "", t.o_lang or "")

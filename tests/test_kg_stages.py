@@ -240,78 +240,39 @@ def _triples_df(spark, rows):
     return spark.createDataFrame(rows, "s string, p string, o string")
 
 
-def test_bgp_star_optional_left_join(spark):
+# the 2-hop chain ?a p1 ?b . ?b p2 ?c (tests select (a, c))
+_CHAIN = [("?a", "p1", "?b"), ("?b", "p2", "?c")]
+
+
+def test_bgp_optional_arm_left_join(spark):
     """OPTIONAL arms keep subjects that lack the property (NULL in
     the optional column) and fill it where present — SPARQL OPTIONAL
     semantics, where an inner arm would drop the subject."""
-    from serd_spark.operators.kg import bgp_star
+    from serd_spark.operators.kg import bgp
 
     t = _triples_df(spark, [
         ("s1", "p1", "a"), ("s1", "p2", "b"), ("s1", "px", "X"),
         ("s2", "p1", "c"), ("s2", "p2", "d"),       # no px
         ("s3", "p1", "e"),                          # missing required p2
     ])
-    got = {(r.s, r.o1, r.o2, r.x)
-           for r in bgp_star(t, ["p1", "p2"],
-                             optional_preds=["px"],
-                             optional_cols=["x"]).collect()}
+    got = {tuple(r) for r in bgp(
+        t, [("?s", "p1", "?o1"), ("?s", "p2", "?o2")],
+        optional=[[("?s", "px", "?x")]]).collect()}
     assert got == {("s1", "a", "b", "X"), ("s2", "c", "d", None)}
 
 
-def test_bgp_star_optional_fanout(spark):
+def test_bgp_optional_arm_fanout(spark):
     """Multiple values on an OPTIONAL arm fan out combinationally,
     same as required arms."""
-    from serd_spark.operators.kg import bgp_star
+    from serd_spark.operators.kg import bgp
 
     t = _triples_df(spark, [
         ("s1", "p1", "a"), ("s1", "px", "X"), ("s1", "px", "Y"),
     ])
-    got = {(r.s, r.o1, r.opt1)
-           for r in bgp_star(t, ["p1"], optional_preds=["px"]).collect()}
+    got = {tuple(r) for r in bgp(
+        t, [("?s", "p1", "?o1")],
+        optional=[[("?s", "px", "?opt1")]]).collect()}
     assert got == {("s1", "a", "X"), ("s1", "a", "Y")}
-
-
-def test_bgp_star_validates_args(spark):
-    import pytest as _pytest
-
-    from serd_spark.operators.kg import bgp_star
-
-    t = _triples_df(spark, [("s1", "p1", "a")])
-    with _pytest.raises(ValueError, match="non-empty"):
-        bgp_star(t, [])
-    with _pytest.raises(ValueError, match="out_cols"):
-        bgp_star(t, ["p1", "p2"], ["only_one"])
-    with _pytest.raises(ValueError, match="optional_cols"):
-        bgp_star(t, ["p1"], optional_preds=["px"],
-                 optional_cols=["a", "b"])
-
-
-def test_bgp_star_max_per_pred_caps_hub(spark):
-    """A hub subject with many values on two arms would go quadratic
-    (cartesian per subject); max_per_pred quarantines it from the arm
-    — dropping the subject on a required arm, reverting to NULL on an
-    optional arm — while normal subjects are untouched."""
-    from serd_spark.operators.kg import bgp_star
-
-    rows = [("hub", "p1", f"a{i}") for i in range(10)]
-    rows += [("hub", "p2", f"b{i}") for i in range(10)]
-    rows += [("ok", "p1", "x"), ("ok", "p2", "y"), ("ok", "px", "z")]
-    rows += [("hubopt", "p1", "q"), ("hubopt", "p2", "r")]
-    rows += [("hubopt", "px", f"o{i}") for i in range(10)]
-    t = _triples_df(spark, rows)
-
-    # uncapped: hub contributes 10*10 rows
-    assert bgp_star(t, ["p1", "p2"]).count() == 100 + 1 + 1
-    # capped: hub quarantined from both required arms -> dropped
-    got = {(r.s, r.o1, r.o2)
-           for r in bgp_star(t, ["p1", "p2"], max_per_pred=5).collect()}
-    assert got == {("ok", "x", "y"), ("hubopt", "q", "r")}
-    # capped OPTIONAL arm reverts to NULL instead of dropping
-    got = {(r.s, r.o1, r.o2, r.x)
-           for r in bgp_star(t, ["p1", "p2"], optional_preds=["px"],
-                             optional_cols=["x"],
-                             max_per_pred=5).collect()}
-    assert got == {("ok", "x", "y", "z"), ("hubopt", "q", "r", None)}
 
 
 def test_bgp_over_bucketed_triples_exchange_free(spark):
@@ -323,12 +284,7 @@ def test_bgp_over_bucketed_triples_exchange_free(spark):
     and the 2-hop path join needs strictly fewer exchanges than the
     same query over a plain parquet copy (its s-keyed side rides the
     buckets; only the o-keyed side and the distinct shuffle)."""
-    from serd_spark.operators.kg import (
-        bgp_2hop,
-        bgp_not_exists,
-        bgp_star,
-        characteristic_sets,
-    )
+    from serd_spark.operators.kg import bgp, characteristic_sets
     from serd_spark.operators.materialize import write_bucketed_triples
 
     rows = [(f"s{i}", "p1", f"s{(i + 1) % 200}") for i in range(200)]
@@ -344,20 +300,23 @@ def test_bgp_over_bucketed_triples_exchange_free(spark):
         def plan(df):
             return df._jdf.queryExecution().executedPlan().toString()
 
-        star = plan(bgp_star(bt, ["p1", "p2"],
-                             optional_preds=["p3"]))
+        star = plan(bgp(bt, [("?s", "p1", "?o1"), ("?s", "p2", "?o2")],
+                        optional=[[("?s", "p3", "?o3")]]))
         assert "Bucketed: true" in star, star
         assert star.count("Exchange") == 0, star
         assert "PushedFilters: [IsNotNull(p), EqualTo(p,p1)" in star
+        # the OPTIONAL arm's predicate reaches its scan too
+        assert "EqualTo(p,p3)" in star, star
 
-        hop_bucketed = plan(bgp_2hop(bt, "p1", "p2"))
+        hop_bucketed = plan(bgp(bt, _CHAIN, select=["a", "c"]))
         assert "Bucketed: true" in hop_bucketed
-        hop_plain = plan(bgp_2hop(t, "p1", "p2"))
+        hop_plain = plan(bgp(t, _CHAIN, select=["a", "c"]))
         assert hop_bucketed.count("Exchange") \
             < hop_plain.count("Exchange"), (hop_bucketed, hop_plain)
 
         # NOT EXISTS rides the same bucket partitioning: zero Exchange
-        ne = plan(bgp_not_exists(bt, "p2", "p3"))
+        ne = plan(bgp(bt, [("?s", "p2", "?o")],
+                      not_exists=[[("?s", "p3", "?_x")]]))
         assert ne.count("Exchange") == 0, ne
         # characteristic sets: the subject-keyed agg is exchange-free;
         # only the tiny shape census shuffles
@@ -365,19 +324,21 @@ def test_bgp_over_bucketed_triples_exchange_free(spark):
         assert cs.count("Exchange") == 1, cs
 
         # same rows either way (the layout is a plan property only)
-        got_b = {tuple(r) for r in bgp_2hop(bt, "p1", "p2").collect()}
-        got_p = {tuple(r) for r in bgp_2hop(t, "p1", "p2").collect()}
+        got_b = {tuple(r)
+                 for r in bgp(bt, _CHAIN, select=["a", "c"]).collect()}
+        got_p = {tuple(r)
+                 for r in bgp(t, _CHAIN, select=["a", "c"]).collect()}
         assert got_b == got_p and got_b
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS t_bgp_plan_test")
 
 
-def test_bgp_not_exists_semantics(spark):
+def test_bgp_filter_not_exists_semantics(spark):
     """NOT EXISTS keeps subjects lacking the negated predicate —
     including subjects with MULTIPLE values on the kept arm — and
     drops any subject carrying it, however many times."""
-    from serd_spark.operators.kg import bgp_not_exists
+    from serd_spark.operators.kg import bgp
 
     t = _triples_df(spark, [
         ("s1", "p1", "a"), ("s1", "p1", "b"),          # no px: kept
@@ -385,8 +346,9 @@ def test_bgp_not_exists_semantics(spark):
         ("s3", "p1", "d"), ("s3", "px", "X"), ("s3", "px", "Y"),
         ("s4", "p2", "e"),                              # no p1 arm
     ])
-    got = {(r.s, r.o)
-           for r in bgp_not_exists(t, "p1", "px").collect()}
+    got = {tuple(r) for r in bgp(
+        t, [("?s", "p1", "?o")],
+        not_exists=[[("?s", "px", "?_x")]]).collect()}
     assert got == {("s1", "a"), ("s1", "b")}
 
 
@@ -894,10 +856,21 @@ def test_bgp_construct_template_rewrite(spark):
 
 def test_bgp_ask_existence(spark):
     """ASK returns 1 iff a statement matches the pattern; subject
-    and object constants narrow it."""
+    and object constants narrow it.  Building the ASK plan starts no
+    Spark job: the existence check runs only when the row is read."""
     from serd_spark.operators.kg import bgp_ask
 
     t = _triples_df(spark, [("a", "p", "b"), ("c", "q", "d")])
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = last_job()
+    ask = bgp_ask(t, "p", s="a")
+    assert last_job() == before
+    assert ask.dtypes == [("ask", "bigint")]
+    assert [tuple(r) for r in ask.collect()] == [(1,)]
     assert bgp_ask(t, "p").collect()[0].ask == 1
     assert bgp_ask(t, "z").collect()[0].ask == 0
     assert bgp_ask(t, "p", s="a", o="b").collect()[0].ask == 1
@@ -1110,36 +1083,36 @@ def _quads_df(spark, rows):
 
 def test_bgp_graph_scoped_arms(spark):
     """GRAPH <iri> (constant filter) and GRAPH ?g (carry_graph) on
-    the three BGP verbs: arms must co-match within one named graph,
-    and a triple-only table is rejected."""
-    from serd_spark.operators.kg import (
-        bgp_2hop,
-        bgp_not_exists,
-        bgp_star,
-    )
+    the chain, star, OPTIONAL and NOT EXISTS shapes: arms must
+    co-match within one named graph, and a triple-only table is
+    rejected."""
+    from serd_spark.operators.kg import bgp
 
     q2 = _quads_df(spark, [
         ("g1", "a", "p1", "b"), ("g1", "b", "p2", "c"),
         ("g2", "a", "p1", "b"), ("g2", "b", "p2", "w"),
     ])
-    un = {(r.a, r.c) for r in bgp_2hop(q2, "p1", "p2").collect()}
+    un = {(r.a, r.c)
+          for r in bgp(q2, _CHAIN, select=["a", "c"]).collect()}
     assert un == {("a", "c"), ("a", "w")}  # cross-graph when unscoped
-    g2 = {(r.a, r.c)
-          for r in bgp_2hop(q2, "p1", "p2", graph="g2").collect()}
+    g2 = {(r.a, r.c) for r in
+          bgp(q2, _CHAIN, select=["a", "c"], graph="g2").collect()}
     assert g2 == {("a", "w")}
     carried = {(r.g, r.a, r.c) for r in
-               bgp_2hop(q2, "p1", "p2", carry_graph=True).collect()}
+               bgp(q2, _CHAIN, select=["a", "c"],
+                   carry_graph=True).collect()}
     assert carried == {("g1", "a", "c"), ("g2", "a", "w")}
 
     qs = _quads_df(spark, [
         ("g1", "s1", "p1", "v1"), ("g1", "s1", "p2", "u1"),
         ("g2", "s1", "p1", "v2"),  # no p2 in g2
     ])
-    star = {(r.g, r.s, r.o1, r.o2) for r in
-            bgp_star(qs, ["p1", "p2"], carry_graph=True).collect()}
+    star = {tuple(r) for r in
+            bgp(qs, [("?s", "p1", "?o1"), ("?s", "p2", "?o2")],
+                carry_graph=True).collect()}
     assert star == {("g1", "s1", "v1", "u1")}
-    star_opt = {(r.g, r.s, r.o1, r.opt1) for r in bgp_star(
-        qs, ["p1"], optional_preds=["p2"],
+    star_opt = {tuple(r) for r in bgp(
+        qs, [("?s", "p1", "?o1")], optional=[[("?s", "p2", "?opt1")]],
         carry_graph=True).collect()}
     assert star_opt == {("g1", "s1", "v1", "u1"),
                         ("g2", "s1", "v2", None)}
@@ -1148,25 +1121,27 @@ def test_bgp_graph_scoped_arms(spark):
         ("g1", "s2", "p1", "o1"),
         ("g2", "s2", "p1", "o2"), ("g2", "s2", "p3", "x"),
     ])
+    absent_p3 = dict(patterns=[("?s", "p1", "?o")],
+                     not_exists=[[("?s", "p3", "?_x")]])
     # unscoped: s2 has p3 SOMEWHERE -> dropped everywhere
-    assert bgp_not_exists(qn, "p1", "p3").count() == 0
-    ne = {(r.g, r.s, r.o) for r in bgp_not_exists(
-        qn, "p1", "p3", carry_graph=True).collect()}
+    assert bgp(qn, **absent_p3).count() == 0
+    ne = {tuple(r)
+          for r in bgp(qn, **absent_p3, carry_graph=True).collect()}
     assert ne == {("g1", "s2", "o1")}  # absence is per named graph
 
     t = spark.createDataFrame([("a", "p1", "b")],
                               "s string, p string, o string")
     with pytest.raises(ValueError, match="'g' column"):
-        bgp_2hop(t, "p1", "p2", carry_graph=True)
+        bgp(t, _CHAIN, carry_graph=True)
     with pytest.raises(ValueError, match="'g' column"):
-        bgp_star(t, ["p1"], graph="g1")
+        bgp(t, [("?s", "p1", "?o1")], graph="g1")
 
 
 def test_bgp_graph_const_exchange_free_over_buckets(spark):
     """A constant GRAPH filter keeps the star's join key at s, so
     over a subject-bucketed quad table the scoped star still plans
     with ZERO Exchange nodes and the g filter pushes to the scan."""
-    from serd_spark.operators.kg import bgp_star
+    from serd_spark.operators.kg import bgp
     from serd_spark.operators.materialize import write_bucketed_triples
 
     rows = [(f"g{i % 2}", f"s{i}", p, f"{p}v{i % 3}")
@@ -1177,7 +1152,8 @@ def test_bgp_graph_const_exchange_free_over_buckets(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = bgp_star(bt, ["p1", "p2"], graph="g1")
+        df = bgp(bt, [("?s", "p1", "?o1"), ("?s", "p2", "?o2")],
+                 graph="g1")
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 0, plan
         assert "EqualTo(g,g1)" in plan, plan
@@ -1197,11 +1173,7 @@ def test_bgp_minus_vs_not_exists_relation(spark):
     they split (MINUS keeps everything, NOT EXISTS would not)."""
     import random
 
-    from serd_spark.operators.kg import (
-        bgp_minus,
-        bgp_not_exists,
-        bgp_star,
-    )
+    from serd_spark.operators.kg import bgp, bgp_minus
 
     for seed in (3, 42):
         rng = random.Random(seed)
@@ -1209,9 +1181,10 @@ def test_bgp_minus_vs_not_exists_relation(spark):
                  f"v{rng.randint(0, 4)}") for _ in range(40)]
         t = _triples_df(spark, sorted(set(rows)))
         ne = {tuple(r) for r in
-              bgp_not_exists(t, "p1", "p2", out_col="v").collect()}
-        left = bgp_star(t, ["p1"], ["v"])
-        pat = bgp_star(t, ["p2"], ["w"])
+              bgp(t, [("?s", "p1", "?v")],
+                  not_exists=[[("?s", "p2", "?_x")]]).collect()}
+        left = bgp(t, [("?s", "p1", "?v")])
+        pat = bgp(t, [("?s", "p2", "?w")])
         mi = {tuple(r) for r in bgp_minus(left, pat).collect()}
         assert mi == ne, f"seed {seed}"
 
@@ -1243,11 +1216,12 @@ def test_bgp_path_quant_composes_with_bgp_path(spark):
 
 def test_bgp_graph_carry_matches_per_graph_union(spark):
     """GRAPH ?g semantics pinned by construction: carry_graph over a
-    random quad table equals running the UNSCOPED verb separately on
-    each graph's triples and unioning with the graph label."""
+    random quad table equals running the UNSCOPED 2-hop chain
+    separately on each graph's triples and unioning with the graph
+    label."""
     import random
 
-    from serd_spark.operators.kg import bgp_2hop
+    from serd_spark.operators.kg import bgp
 
     for seed in (7, 99):
         rng = random.Random(seed)
@@ -1256,11 +1230,12 @@ def test_bgp_graph_carry_matches_per_graph_union(spark):
                 for _ in range(60)}
         q = _quads_df(spark, sorted(rows))
         got = {tuple(r) for r in
-               bgp_2hop(q, "p1", "p2", carry_graph=True).collect()}
+               bgp(q, _CHAIN, select=["a", "c"],
+                   carry_graph=True).collect()}
         want = set()
         for g in ("g0", "g1", "g2"):
             sub = q.where(F.col("g") == g)
-            for r in bgp_2hop(sub, "p1", "p2").collect():
+            for r in bgp(sub, _CHAIN, select=["a", "c"]).collect():
                 want.add((g, r.a, r.c))
         assert got == want, f"seed {seed}"
 
@@ -1534,7 +1509,7 @@ def test_graph_minus_vs_not_exists_divergence(spark):
     still filters), pinned over a random NQ-style quad corpus."""
     import random
 
-    from serd_spark.operators.kg import bgp_minus, bgp_not_exists, bgp_star
+    from serd_spark.operators.kg import bgp, bgp_minus
 
     for seed in (23, 97):
         rng = random.Random(seed)
@@ -1543,15 +1518,15 @@ def test_graph_minus_vs_not_exists_divergence(spark):
                 for _ in range(30)}
         q = _quads_df(spark, sorted(rows))
 
-        left = bgp_star(q, ["p1"], ["v"], carry_graph=True)
-        pat = bgp_star(q, ["p2"], ["w"], carry_graph=True)
+        left = bgp(q, [("?s", "p1", "?v")], carry_graph=True)
+        pat = bgp(q, [("?s", "p2", "?w")], carry_graph=True)
         # shared set {g, s}: MINUS == NOT EXISTS (both fully bound)
         got_minus = {(r.g, r.s, r.v) for r in
                      bgp_minus(left, pat, on=["g", "s"]).collect()}
         got_ne = {tuple(r) for r in
-                  bgp_not_exists(q, "p1", "p2",
-                                 out_col="v", carry_graph=True)
-                  .collect()}
+                  bgp(q, [("?s", "p1", "?v")],
+                      not_exists=[[("?s", "p2", "?_x")]],
+                      carry_graph=True).collect()}
         assert got_minus == got_ne, f"seed {seed}"
 
         # brute force the same-graph subtraction
@@ -1567,43 +1542,6 @@ def test_graph_minus_vs_not_exists_divergence(spark):
             F.col("g").alias("gg"), F.col("s").alias("t"),
             F.col("w"))
         assert bgp_minus(left, pat_disjoint).count() == left.count()
-
-
-def test_bgp_generic_subsumes_fixed_verbs(spark):
-    """Parity pin: on the shapes the fixed verbs cover, the generic
-    composer returns exactly their rows — star (all-subject-shared),
-    2-hop chain, and the carry_graph star — so a user can migrate
-    verb calls to patterns without behavior change."""
-    import random
-
-    from serd_spark.operators.kg import bgp, bgp_2hop, bgp_star
-
-    rng = random.Random(314)
-    rows = {(f"s{rng.randint(0, 9)}", rng.choice(["p1", "p2", "p3"]),
-             f"v{rng.randint(0, 4)}") for _ in range(60)}
-    t = _triples_df(spark, sorted(rows))
-
-    star_v = {(r.s, r.o1, r.o2) for r in
-              bgp_star(t, ["p1", "p2"]).collect()}
-    star_c = {(r.s, r.o1, r.o2) for r in
-              bgp(t, [("?s", "p1", "?o1"), ("?s", "p2", "?o2")])
-              .collect()}
-    assert star_c == star_v and star_v
-
-    hop_v = {(r.a, r.c) for r in bgp_2hop(t, "p1", "p2").collect()}
-    hop_c = {(r.a, r.c) for r in
-             bgp(t, [("?a", "p1", "?b"), ("?b", "p2", "?c")],
-                 select=["a", "c"]).collect()}
-    assert hop_c == hop_v
-
-    qrows = {(f"g{rng.randint(0, 1)}",) + r for r in rows}
-    q = _quads_df(spark, sorted(qrows))
-    gs_v = {(r.g, r.s, r.o1, r.o2) for r in
-            bgp_star(q, ["p1", "p2"], carry_graph=True).collect()}
-    gs_c = {(r.g, r.s, r.o1, r.o2) for r in
-            bgp(q, [("?s", "p1", "?o1"), ("?s", "p2", "?o2")],
-                carry_graph=True).collect()}
-    assert gs_c == gs_v
 
 
 def test_bgp_generic_graph_carry_matches_per_graph_union(spark):
@@ -1671,7 +1609,7 @@ def test_bgp_optional_matches_bruteforce_random(spark):
     from serd_spark.operators.kg import bgp
 
     cases = [
-        # one-arm group (the bgp_star optional_preds shape)
+        # one-arm group (an OPTIONAL star arm)
         ([("?s", "p1", "?x")], [[("?s", "p2", "?y")]]),
         # optional CHAIN hanging off a required chain end
         ([("?s", "p1", "?x")],
@@ -1917,7 +1855,7 @@ def test_bgp_exists_validation(spark):
         bgp(t, [("?x", "p", "?y")], exists=[[("b", "q", "c")]])
     with pytest.raises(ValueError, match="non-empty"):
         bgp(t, [("?x", "p", "?y")], not_exists=[[]])
-    # subsumes bgp_not_exists: per-graph absence with carry_graph
+    # per-graph absence with carry_graph
     q = _quads_df(spark, [("g1", "a", "p", "b"),
                           ("g1", "a", "del", "1"),
                           ("g2", "a", "p", "b")])

@@ -1,4 +1,4 @@
-"""Tests for canonicalize / expand / multimodal / streaming stages."""
+"""Tests for canonicalize / expand / streaming stages."""
 
 import os
 
@@ -96,29 +96,6 @@ def test_expand_and_qualify(spark):
     assert q["http://two/x"] == "ex:x"
     assert q["http://kg/y"] == "kg:y"
     assert q["http://other/z"] is None
-
-
-def test_multimodal_plumbing(spark):
-    from serd_spark.operators.multimodal import (
-        extract_features,
-        frame_sample_plan,
-        synth_media_df,
-    )
-
-    media = synth_media_df(spark, 24)
-    feats = extract_features(media).collect()
-    assert len(feats) == 24
-    assert all(r.ok for r in feats)
-    assert all(len(r.feat) == 8 for r in feats)
-    # deterministic: same payload → same features
-    again = {r.media_id: r.feat for r in
-             extract_features(media).collect()}
-    for r in feats:
-        assert again[r.media_id] == r.feat
-
-    frames = frame_sample_plan(media, every_ms=5000)
-    assert frames.count() > 0
-    assert frames.where(F.col("frame_ts_ms") % 5000 != 0).count() == 0
 
 
 def test_streaming_incremental_parse(spark, tmpdir_path):
@@ -687,12 +664,12 @@ def test_bucketed_triples_join_has_no_exchange(spark, tmpdir_path):
         spark.sql("DROP TABLE IF EXISTS t_bucketed")
 
 
-def test_bgp_star_bucketed_has_no_exchange(spark, tmpdir_path):
-    """The bgp_star scale claim, verified in the plan: over a
+def test_bgp_bucketed_star_has_no_exchange(spark, tmpdir_path):
+    """The star-pattern scale claim, verified in the plan: over a
     subject-bucketed triple table, the n-way star join runs with NO
     Exchange on any arm (each arm filters one predicate off the same
     bucketed scan and joins on the bucket column s)."""
-    from serd_spark.operators.kg import bgp_star
+    from serd_spark.operators.kg import bgp
     from serd_spark.operators.materialize import write_bucketed_triples
     from serd_spark.operators.parse import (
         parse_ntriples_lines,
@@ -711,7 +688,8 @@ def test_bgp_star_bucketed_has_no_exchange(spark, tmpdir_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         t = spark.table("t_star_bucketed")
-        j = bgp_star(t, ["http://a/p", "http://a/q"], ["op", "oq"])
+        j = bgp(t, [("?s", "http://a/p", "?op"),
+                    ("?s", "http://a/q", "?oq")])
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in plan, plan
         assert "Bucketed: true" in plan, plan
@@ -752,83 +730,6 @@ def test_dup_clusters_matches_union_find(spark):
         dup_clusters(pairs)
 
 
-def test_image_header_probe(spark):
-    """Dependency-free image metadata: PNG/GIF/JPEG dimensions parsed
-    from real header bytes; junk payloads degrade to fmt=NULL."""
-    import struct
-
-    from serd_spark.operators.multimodal import (
-        image_metadata,
-        probe_image_dims,
-    )
-
-    def png(w, h):
-        return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
-                + struct.pack(">II", w, h) + b"\x08\x06\x00\x00\x00")
-
-    def gif(w, h):
-        return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00"
-
-    def jpeg(w, h):
-        app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        sof0 = (b"\xff\xc0" + struct.pack(">H", 11) + b"\x08"
-                + struct.pack(">HH", h, w) + b"\x01\x11\x00")
-        return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-    assert probe_image_dims(png(640, 480)) == ("png", 640, 480)
-    assert probe_image_dims(gif(320, 200)) == ("gif", 320, 200)
-    assert probe_image_dims(jpeg(1024, 768)) == ("jpeg", 1024, 768)
-    assert probe_image_dims(b"not an image at all") is None
-    assert probe_image_dims(b"\xff\xd8\xff\xd9") is None  # SOI+EOI only
-
-    rows = [
-        (1, "image", bytearray(png(640, 480)), "image/png", 640, 480, 0),
-        (2, "image", bytearray(jpeg(99, 44)), "image/jpeg", 100, 44, 0),
-        (3, "image", bytearray(b"garbage"), "image/png", 10, 10, 0),
-    ]
-    from serd_spark.operators.multimodal import MEDIA_SCHEMA
-
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r.media_id: r for r in image_metadata(media).collect()}
-    assert (got[1].fmt, got[1].probe_width, got[1].matches_declared) == \
-        ("png", 640, True)
-    assert (got[2].fmt, got[2].probe_width, got[2].matches_declared) == \
-        ("jpeg", 99, False)  # catalog drift detected
-    assert got[3].fmt is None and got[3].matches_declared is False
-
-
-def test_wav_header_probe(spark):
-    """WAV metadata from real RIFF/WAVE header bytes."""
-    import struct
-
-    from serd_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_metadata,
-        probe_wav_meta,
-    )
-
-    def wav(rate, channels, bits, n_samples):
-        data = b"\x00" * (n_samples * channels * (bits // 8))
-        fmt = (b"fmt " + struct.pack("<I", 16)
-               + struct.pack("<HHIIHH", 1, channels, rate,
-                             rate * channels * bits // 8,
-                             channels * bits // 8, bits))
-        body = b"WAVE" + fmt + b"data" + struct.pack("<I", len(data)) + data
-        return b"RIFF" + struct.pack("<I", len(body)) + body
-
-    p = wav(16000, 1, 16, 16000)  # exactly 1 second
-    assert probe_wav_meta(p) == (16000, 1, 16, 1000)
-    assert probe_wav_meta(b"RIFFxxxx not wave") is None
-    assert probe_wav_meta(b"\x00\x01") is None
-
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(p), "audio/wav", 0, 0, 1000),
-         (2, "audio", bytearray(b"junk"), "audio/wav", 0, 0, 5)],
-        MEDIA_SCHEMA)
-    got = {r.media_id: r for r in audio_metadata(media).collect()}
-    assert (got[1].sample_rate, got[1].probe_duration_ms,
-            got[1].matches_declared) == (16000, 1000, True)
-    assert got[2].sample_rate is None and got[2].matches_declared is False
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -1740,11 +1641,11 @@ def test_ffd_pack_properties(spark):
     assert key(again) == key(out)
 
 
-def test_bgp_2hop_path_join(spark):
+def test_bgp_two_hop_path_join(spark):
     """?a p1 ?b . ?b p2 ?c over a tiny triple table: only chains
     through the shared node qualify, duplicates collapse, and
     dangling edges (no second hop) drop out."""
-    from serd_spark.operators.kg import bgp_2hop
+    from serd_spark.operators.kg import bgp
 
     triples = spark.createDataFrame(
         [("o1", "cust", "c1"), ("o2", "cust", "c1"),
@@ -1752,16 +1653,17 @@ def test_bgp_2hop_path_join(spark):
          ("c1", "nation", "n1"), ("c3", "nation", "n2"),
          ("o1", "cust", "c1")],
         "s string, p string, o string")
-    got = {(r.a, r.c)
-           for r in bgp_2hop(triples, "cust", "nation").collect()}
+    got = {tuple(r) for r in bgp(
+        triples, [("?a", "cust", "?b"), ("?b", "nation", "?c")],
+        select=["a", "c"]).collect()}
     assert got == {("o1", "n1"), ("o2", "n1")}
 
 
-def test_bgp_star_profile_fanout(spark):
+def test_bgp_profile_star_fanout(spark):
     """Star BGP joins all arms on the subject: a subject missing one
     predicate drops out, and multi-valued predicates fan out
     combinationally."""
-    from serd_spark.operators.kg import bgp_star
+    from serd_spark.operators.kg import bgp
 
     triples = spark.createDataFrame(
         [("o1", "status", "F"), ("o1", "status", "p1"),
@@ -1769,9 +1671,9 @@ def test_bgp_star_profile_fanout(spark):
          ("o2", "status", "O"),           # no cust -> dropped
          ("o3", "cust", "c3")],           # no status -> dropped
         "s string, p string, o string")
-    got = {(r.s, r.status, r.cust)
-           for r in bgp_star(triples, ["status", "cust"],
-                             ["status", "cust"]).collect()}
+    got = {tuple(r) for r in bgp(
+        triples, [("?s", "status", "?status"),
+                  ("?s", "cust", "?cust")]).collect()}
     assert got == {("o1", "F", "c1"), ("o1", "p1", "c1")}
 
 
