@@ -23,7 +23,8 @@ Layout:
                materialize, dedup, similarity, text)
   pipeline     end-to-end KG job with checkpoints/lineage/metrics
   transcripts  deterministic synthetic transcript corpus generator
-  streaming/   Structured Streaming incremental ingest
+  streaming/   foreachBatch incremental parse (whole conversations
+               per micro-batch)
 """
 
 __version__ = "0.1.0"

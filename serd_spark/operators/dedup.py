@@ -291,23 +291,9 @@ def tfidf_cosine_pairs(
     )
 
 
-def eval_shingle_set(
-    eval_docs: DataFrame, text_col: str = "text", shingle_k: int = 3,
-) -> DataFrame:
-    """The distinct shingle set of an eval/benchmark corpus — the
-    broadcast side of decontamination, factored out so a streaming
-    caller can materialize it ONCE and reuse it across micro-batches
-    (see ``streaming.ingest.start_streaming_contamination``)."""
-    return (
-        shingle_arrays(eval_docs, text_col, shingle_k)
-        .select(F.explode("sh").alias("shingle")).distinct()
-    )
-
-
 def contamination_flags(
-    train: DataFrame, eval_docs: DataFrame | None = None,
+    train: DataFrame, eval_docs: DataFrame,
     text_col: str = "text", shingle_k: int = 3,
-    eval_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing ≥1
     k-word shingle with ANY document in the (small) eval/benchmark
@@ -321,15 +307,9 @@ def contamination_flags(
     joined — no shuffle of the corpus, map-side only, then one
     aggregation keyed by doc_id.  Output: (doc_id, n_hits) for
     CONTAMINATED train docs only (n_hits = distinct overlapping
-    shingles); anti-join the result to drop them.
-
-    Pass ``eval_shingles`` (from :func:`eval_shingle_set`, typically
-    cached) instead of ``eval_docs`` to skip recomputing the eval side
-    — the streaming / repeated-batch form."""
-    if eval_shingles is not None:
-        ev = eval_shingles
-    else:
-        ev = eval_shingle_set(eval_docs, text_col, shingle_k)
+    shingles); anti-join the result to drop them."""
+    ev = (shingle_arrays(eval_docs, text_col, shingle_k)
+          .select(F.explode("sh").alias("shingle")).distinct())
     tr = shingle_arrays(train, text_col, shingle_k).select(
         "doc_id", F.explode(F.array_distinct("sh")).alias("shingle"))
     return (

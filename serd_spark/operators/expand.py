@@ -1,30 +1,18 @@
-"""Cross-corpus CURIE expansion / qualification as broadcast joins.
+"""Cross-corpus CURIE expansion as broadcast joins.
 
 The per-document Env fold (env.py) handles document-order semantics
-inside the parse UDF; these operators are the *corpus-scale* variants
-(SURVEY.md O-18/O-19/O-21): a prefixes dimension table is broadcast to
-every executor — no shuffle of the (huge) triples side.
+inside the parse, including prefix upsert (O-19, ``Env.set_prefix``)
+and qualification (O-21, ``Env.qualify``); these operators are the
+*corpus-scale* variant of expansion (SURVEY.md O-18): a prefixes
+dimension table is broadcast to every executor — no shuffle of the
+(huge) triples side.
 
-prefixes table schema: (name string, uri string, priority long) —
-priority = definition order; last-write-wins is a row_number window
-(O-19), qualification takes the first match in priority order (O-21,
-matching serd_env_qualify's first-match semantics).
+prefixes table schema: (name string, uri string) — one row per name.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
-
-
-def latest_prefixes(prefix_log: DataFrame) -> DataFrame:
-    """Fold a (name, uri, stmt_idx) definition log into the effective
-    prefix map: last write wins (env.c upsert semantics)."""
-    w = Window.partitionBy("name").orderBy(F.col("stmt_idx").desc())
-    return (
-        prefix_log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= 1)
-        .select("name", "uri", F.col("stmt_idx").alias("priority"))
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def expand_curies(
@@ -65,22 +53,3 @@ def undefined_prefixes(
             "_name", "left_anti")
         .drop("_name")
     )
-
-
-def qualify_uris(
-    uris: DataFrame, prefixes: DataFrame, uri_col: str = "iri"
-) -> DataFrame:
-    """Reverse expansion: first prefix (priority order) whose namespace
-    is a string prefix of the IRI → CURIE; else null (serd_env_qualify).
-    Broadcast theta-join on startswith + min_by(priority)."""
-    p = F.broadcast(prefixes.select(
-        F.col("name").alias("_pname"), F.col("uri").alias("_ns"),
-        F.col("priority").alias("_prio")))
-    j = uris.join(p, F.col(uri_col).startswith(F.col("_ns")), "left")
-    agg_cols = [F.min_by(
-        F.when(F.col("_pname").isNotNull(),
-               F.concat(F.col("_pname"), F.lit(":"),
-                        F.expr(f"substring({uri_col}, length(_ns) + 1)"))),
-        F.col("_prio")).alias("curie")]
-    group_cols = [c for c in uris.columns]
-    return j.groupBy(*group_cols).agg(*agg_cols)

@@ -219,6 +219,17 @@ def _cut_at_first_error(parsed: DataFrame) -> DataFrame:
 # ---- Turtle / TriG pass ----
 
 
+def colocate(transcripts: DataFrame) -> DataFrame:
+    """Each conversation whole in one of ``defaultParallelism``
+    partitions, in turn order: the Turtle pass's one Exchange and its
+    local sort.  A plan that colocates its input the same way before
+    :func:`parse_documents_colocated` shares them: Spark plans the
+    Exchange and the sort once."""
+    width = transcripts.sparkSession.sparkContext.defaultParallelism
+    return (transcripts.repartition(width, "conv_id")
+            .sortWithinPartitions("conv_id", "turn_idx"))
+
+
 def parse_documents_colocated(
     transcripts: DataFrame,
     chunk_turns: int = 64,
@@ -261,10 +272,7 @@ def parse_documents_colocated(
     """
     import pyarrow as pa
 
-    width = transcripts.sparkSession.sparkContext.defaultParallelism
-    src = (transcripts.select("conv_id", "turn_idx", "text")
-           .repartition(width, "conv_id")
-           .sortWithinPartitions("conv_id", "turn_idx"))
+    src = colocate(transcripts.select("conv_id", "turn_idx", "text"))
 
     pa_schema = pa.schema([
         ("conv_id", pa.string()), ("stmt_idx", pa.int64()),

@@ -63,21 +63,26 @@ def test_intern_nodes_roundtrip(spark):
 
 
 def test_expand_and_qualify(spark):
+    """Corpus-scale expansion joins a prefixes frame; upsert and
+    qualification are the per-document Env's (O-19, O-21)."""
+    from serd_spark.env import Env
     from serd_spark.operators.expand import (
         expand_curies,
-        latest_prefixes,
-        qualify_uris,
         undefined_prefixes,
     )
 
-    log = spark.createDataFrame(
-        [("ex", "http://one/", 0), ("ex", "http://two/", 5),
-         ("kg", "http://kg/", 1)],
-        "name string, uri string, stmt_idx long")
-    prefixes = latest_prefixes(log)
-    got = {(r.name, r.uri) for r in prefixes.collect()}
-    assert got == {("ex", "http://two/"), ("kg", "http://kg/")}
+    env = Env()
+    for name, uri in (("ex", "http://one/"), ("kg", "http://kg/"),
+                      ("ex", "http://two/")):
+        env.set_prefix(name, uri)
+    assert env.prefixes == {"ex": "http://two/", "kg": "http://kg/"}
+    assert env.qualify("http://two/x") == "ex:x"
+    assert env.qualify("http://kg/y") == "kg:y"
+    assert env.qualify("http://other/z") is None
 
+    prefixes = spark.createDataFrame(
+        [("ex", "http://two/"), ("kg", "http://kg/")],
+        "name string, uri string")
     curies = spark.createDataFrame(
         [("ex:a",), ("kg:b",), ("nope:c",)], "curie string")
     exp = {r.curie: r.iri for r in expand_curies(curies, prefixes).collect()}
@@ -89,152 +94,129 @@ def test_expand_and_qualify(spark):
              undefined_prefixes(curies, prefixes).collect()]
     assert undef == ["nope:c"]
 
-    uris = spark.createDataFrame(
-        [("http://two/x",), ("http://kg/y",), ("http://other/z",)],
-        "iri string")
-    q = {r.iri: r.curie for r in qualify_uris(uris, prefixes).collect()}
-    assert q["http://two/x"] == "ex:x"
-    assert q["http://kg/y"] == "kg:y"
-    assert q["http://other/z"] is None
+
+def _land(spark, path, rows):
+    """Append ``rows`` to ``path`` as one parquet file."""
+    from serd_spark.transcripts import TRANSCRIPT_SCHEMA
+
+    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1) \
+        .write.mode("append").parquet(path)
+
+
+def _assert_same_rows(got, want):
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_streaming_incremental_parse(spark, tmpdir_path):
+    """Whole conversations in 9 files, then 2 more after a restart:
+    the sink equals the batch parse of every landed turn, row for
+    row, though maxFilesPerTrigger=8 splits the first run into two
+    micro-batches."""
+    from serd_spark.operators.parse import parse_documents, split_quarantine
     from serd_spark.streaming.ingest import start_incremental_parse
-    from serd_spark.transcripts import transcripts_df
+    from serd_spark.transcripts import conv_turns
 
     inp = os.path.join(tmpdir_path, "in")
     out = os.path.join(tmpdir_path, "out")
     ckpt = os.path.join(tmpdir_path, "ckpt")
 
-    transcripts_df(spark, 6, mega_every=0).write.parquet(inp)
+    def land_convs(first, n):
+        for c in range(first, first + n):
+            _land(spark, inp, list(conv_turns(c, mega_every=0,
+                                              with_errors=True)))
+
+    land_convs(0, 9)
     q = start_incremental_parse(spark, inp, out, ckpt)
     q.awaitTermination(120)
-    n1 = spark.read.parquet(f"{out}/triples").count()
-    assert n1 > 0
+    assert sum(1 for p in q.recentProgress if p.numInputRows) >= 2
 
-    # late-arriving batch: append more conversations, stream again
-    from serd_spark.transcripts import TRANSCRIPT_SCHEMA, conv_turns
-
-    extra = []
-    for c in range(100, 103):
-        extra.extend(conv_turns(c, mega_every=0))
-    spark.createDataFrame(extra, TRANSCRIPT_SCHEMA) \
-        .write.mode("append").parquet(inp)
+    # late-arriving files: the restarted query resumes from ckpt
+    land_convs(100, 2)
     q2 = start_incremental_parse(spark, inp, out, ckpt)
     q2.awaitTermination(120)
-    n2 = spark.read.parquet(f"{out}/triples").count()
-    assert n2 > n1
+
+    want, want_err = split_quarantine(parse_documents(
+        spark.read.parquet(inp), lax=True))
+    assert want_err.count() > 0
+    _assert_same_rows(spark.read.parquet(f"{out}/triples"), want)
+    _assert_same_rows(spark.read.parquet(f"{out}/errors"), want_err)
 
 
-def test_windowed_turn_counts_batch(spark):
-    from serd_spark.streaming.ingest import windowed_turn_counts
-    from serd_spark.transcripts import transcripts_df
-
-    tdf = transcripts_df(spark, 5, mega_every=0)
-    out = windowed_turn_counts(tdf)
-    assert out.count() > 0
-    total = out.agg(F.sum("n_turns")).first()[0]
-    assert total == tdf.count()
-
-
-def test_stateful_incremental_parse(spark, tmpdir_path):
-    """Conversations spanning micro-batches keep Env state between
-    batches (keyed GroupState), including out-of-order turn delivery;
-    final triples are blank-bijective with the batch parse."""
-    from serd_spark.compare import isomorphic
-    from serd_spark.nodes import Triple
+def test_streaming_parse_quarantines_spanning_conversation(
+        spark, tmpdir_path):
+    """Turns 0-1 of a conversation land in one micro-batch and turns
+    2-3 in the next.  The first batch parses turns 0-1 as the batch
+    pass does; the second parses nothing of it and quarantines one
+    row naming turns 2..3, so no blank or statement id is reused and
+    nothing resolves against a lost @prefix / @base.  A conversation
+    with a gap (turns 0 and 2) is quarantined the same way."""
     from serd_spark.operators.parse import parse_documents, split_quarantine
-    from serd_spark.streaming.ingest import (
-        stateful_incremental_parse,
-        stream_transcripts,
-    )
-    from serd_spark.transcripts import TRANSCRIPT_SCHEMA, gen_local
-
-    rows = gen_local(4, mega_every=0)
-    # Split turns across two batches; conv 0's EARLY turns arrive in
-    # batch 2 (out-of-order) to exercise the pending buffer.
-    b1, b2 = [], []
-    for r in rows:
-        conv_tail = int(r[0].rsplit("-", 1)[1])
-        early = r[1] < 3
-        if conv_tail == 0:
-            (b2 if early else b1).append(r)
-        else:
-            (b1 if early else b2).append(r)
-
-    inp = os.path.join(tmpdir_path, "sin")
-    out = os.path.join(tmpdir_path, "sout")
-    ckpt = os.path.join(tmpdir_path, "sckpt")
-
-    def run_batch(batch_rows):
-        spark.createDataFrame(batch_rows, TRANSCRIPT_SCHEMA) \
-            .write.mode("append").parquet(inp)
-        q = (
-            stateful_incremental_parse(stream_transcripts(spark, inp))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run_batch(b1)
-    run_batch(b2)
-
-    got = spark.read.parquet(out).where(F.col("err").isNull()).collect()
-    want_df, _ = split_quarantine(parse_documents(
-        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), lax=True))
-    want = want_df.collect()
-
-    def by_conv(recs):
-        d = {}
-        for r in recs:
-            d.setdefault(r.conv_id, []).append(Triple(
-                r.g, r.s, r.s_type, r.p, r.o, r.o_type,
-                r.o_datatype, r.o_lang))
-        return d
-
-    g, w = by_conv(got), by_conv(want)
-    assert set(g) == set(w)
-    for conv in w:
-        assert isomorphic(g[conv], w[conv]), conv
-
-
-def test_stateful_parse_gap_skip_bounds_buffer(spark, tmpdir_path):
-    """ADVICE r1: a permanently missing turn must not stall the
-    conversation or grow keyed state without bound — past max_pending
-    buffered turns the gap is quarantined and parsing resumes."""
-    from serd_spark.streaming.ingest import (
-        stateful_incremental_parse,
-        stream_transcripts,
-    )
+    from serd_spark.streaming.ingest import start_incremental_parse
     from serd_spark.transcripts import TRANSCRIPT_SCHEMA
 
-    rows = [("gap-0", i, "user",
-             f"<http://a/s{i}> <http://a/p> <http://a/o> .", None, None)
-            for i in range(16) if i != 3]  # turn 3 never arrives
-    inp = os.path.join(tmpdir_path, "gin")
-    out = os.path.join(tmpdir_path, "gout")
-    ckpt = os.path.join(tmpdir_path, "gckpt")
-    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).write.parquet(inp)
+    turns = [
+        ("c1", 0, "user",
+         "@prefix ex: <http://ex/> . @base <http://b/> .", None, None),
+        ("c1", 1, "user", "ex:a ex:p [ ex:q 1 ] . <rel> ex:p _:x .",
+         None, None),
+        ("c1", 2, "user", "<rel2> <http://ex/p> [ <http://ex/q> 2 ] .",
+         None, None),
+        ("c1", 3, "user", "ex:c ex:p ex:d .", None, None),
+    ]
+    gap = [("c2", t, "user", f"<http://a/s{t}> <http://a/p> <http://a/o> .",
+            None, None) for t in (0, 2)]
+    inp = os.path.join(tmpdir_path, "in")
+    out = os.path.join(tmpdir_path, "out")
+    ckpt = os.path.join(tmpdir_path, "ckpt")
+    for batch in (turns[:2] + gap, turns[2:]):
+        _land(spark, inp, batch)
+        start_incremental_parse(spark, inp, out, ckpt).awaitTermination(120)
 
-    q = (
-        stateful_incremental_parse(stream_transcripts(spark, inp),
-                                   max_pending=4)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    got = spark.read.parquet(f"{out}/triples")
+    want, _ = split_quarantine(parse_documents(
+        spark.createDataFrame(turns[:2], TRANSCRIPT_SCHEMA), lax=True))
+    _assert_same_rows(got, want)
+    assert got.groupBy("conv_id", "stmt_idx").count() \
+        .where(F.col("count") > 1).count() == 0
+    rows = spark.read.parquet(f"{out}/errors").collect()
+    assert sorted(r.conv_id for r in rows) == ["c1", "c2"]
+    errs = {r.conv_id: r for r in rows}
+    assert all(r.err_idx == -1 for r in errs.values())
+    assert "turns 2..3 (2 rows)" in errs["c1"].err
+    assert "turns 0..2 (2 rows)" in errs["c2"].err
 
-    res = spark.read.parquet(out)
-    gaps = [r.err for r in res.where(F.col("err").isNotNull()).collect()]
-    assert any("turn gap: expected turn 3" in m for m in gaps), gaps
-    # turns 0-2 and 4-15 all parsed (15 triples)
-    assert res.where(F.col("err").isNull()).count() == 15
+
+def test_streaming_parse_runs_once_per_micro_batch(spark, tmpdir_path):
+    """The triples and errors writes share one parse: each micro-batch
+    runs exactly one SQL execution with a MapInArrow, and the
+    materialized batch is released when the batch ends."""
+    from serd_spark.streaming.ingest import start_incremental_parse
+    from serd_spark.transcripts import transcripts_df
+
+    inp = os.path.join(tmpdir_path, "in")
+    transcripts_df(spark, 20, mega_every=0, with_errors=True) \
+        .coalesce(1).write.parquet(inp)
+    sc = spark.sparkContext
+    n_persisted = sc._jsc.getPersistentRDDs().size()
+    q = start_incremental_parse(spark, inp,
+                                os.path.join(tmpdir_path, "out"),
+                                os.path.join(tmpdir_path, "ckpt"))
+    q.awaitTermination(120)
+
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    per_batch: dict[str, int] = {}
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        desc = e.description() or ""
+        if f"runId = {q.runId}" not in desc:
+            continue
+        batch = desc.rsplit("batch = ", 1)[1]
+        per_batch[batch] = per_batch.get(batch, 0) + (
+            "MapInArrow" in e.physicalPlanDescription())
+    assert per_batch == {"0": 1}
+    assert sc._jsc.getPersistentRDDs().size() == n_persisted
 
 
 def test_lsh_drop_metrics(spark):
@@ -380,120 +362,6 @@ def test_stratified_sample_deterministic(spark):
     assert 0.0 <= u[0] and u[1] < 1.0
 
 
-def test_streaming_exact_dedup(spark, tmpdir_path):
-    """dropDuplicatesWithinWatermark keeps one row per distinct text
-    within the watermark (state bounded, unlike plain dropDuplicates
-    on a stream)."""
-    from datetime import datetime as DT
-
-    from serd_spark.streaming.ingest import (
-        stream_transcripts,
-        streaming_exact_dedup,
-    )
-    from serd_spark.transcripts import TRANSCRIPT_SCHEMA
-
-    base = DT(2024, 1, 1, 10, 0)
-    rows = []
-    for i in range(30):
-        # 10 distinct texts, each repeated 3x, close timestamps
-        rows.append((f"c{i}", 0, "user",
-                     f"<http://a/s{i % 10}> <http://a/p> <http://a/o> .",
-                     None, base))
-    inp = os.path.join(tmpdir_path, "sdin")
-    out = os.path.join(tmpdir_path, "sdout")
-    ckpt = os.path.join(tmpdir_path, "sdckpt")
-    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).write.parquet(inp)
-
-    q = (
-        streaming_exact_dedup(stream_transcripts(spark, inp))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.read.parquet(out)
-    assert got.count() == 10
-    assert got.select("content_hash").distinct().count() == 10
-
-
-def test_streaming_contamination_matches_batch(spark, tmpdir_path):
-    """foreachBatch decontamination over a replayed multi-file stream
-    equals the batch operator on the full corpus — per-doc flags
-    depend only on (doc text, static eval set), so micro-batching is
-    invisible in the union of batch outputs."""
-    from serd_spark.operators.dedup import contamination_flags
-    from serd_spark.streaming.ingest import start_streaming_contamination
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text")
-    eval_docs = docs.where(F.col("doc_id") % 11 == 0)
-    train = docs.where(F.col("doc_id") % 11 != 0)
-
-    inp = os.path.join(tmpdir_path, "scin")
-    ckpt = os.path.join(tmpdir_path, "scckpt")
-    # several files -> several micro-batches under maxFilesPerTrigger
-    train.repartition(6).write.parquet(inp)
-
-    stream = (
-        spark.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inp)
-    )
-    got: dict[int, int] = {}
-
-    def sink(flags, batch_id):
-        for r in flags.collect():
-            assert r.doc_id not in got  # each doc flagged at most once
-            got[r.doc_id] = r.n_hits
-
-    q = start_streaming_contamination(stream, eval_docs, sink,
-                                      checkpoint_path=ckpt)
-    q.awaitTermination(180)
-
-    want = {r.doc_id: r.n_hits
-            for r in contamination_flags(train, eval_docs).collect()}
-    assert got == want and got
-
-
-def test_streaming_quality_gate_equals_batch(spark, tmpdir_path):
-    """foreachBatch quality gate over a replayed multi-file stream
-    equals clean_corpus on the full corpus — every predicate is
-    per-row, so micro-batching is invisible in the union of batch
-    outputs."""
-    from serd_spark.operators.text import clean_corpus
-    from serd_spark.streaming.ingest import start_streaming_quality_gate
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text")
-
-    inp = os.path.join(tmpdir_path, "qgin")
-    ckpt = os.path.join(tmpdir_path, "qgckpt")
-    docs.repartition(6).write.parquet(inp)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inp)
-    )
-    got: dict[int, tuple] = {}
-
-    def sink(clean, batch_id):
-        for r in clean.collect():
-            assert r.doc_id not in got  # each doc gated at most once
-            got[r.doc_id] = (r.lang_pred, r.quality_score,
-                             r.dup_2gram_frac, r.n_email)
-
-    q = start_streaming_quality_gate(stream, sink, checkpoint_path=ckpt)
-    q.awaitTermination(180)
-
-    want = {r.doc_id: (r.lang_pred, r.quality_score,
-                       r.dup_2gram_frac, r.n_email)
-            for r in clean_corpus(docs).collect()}
-    assert got == want and got
-
-
 def test_interval_join_bucketed_equals_plain(spark):
     """The time-bucketed interval join (scale path for huge per-key
     interval sets) returns exactly the plain equi+range join's rows,
@@ -527,104 +395,6 @@ def test_interval_join_bucketed_equals_plain(spark):
     for b in (60, 600, 3600, 7200):
         assert rows(interval_join(ev, intervals, bucket_sec=b)) \
             == plain, b
-
-
-def test_streaming_sessionize_equals_batch(spark, tmpdir_path):
-    """Streaming session_window over a replayed multi-file stream
-    emits exactly the batch sessionize sessions once the watermark
-    closes them.  Real events replay first; per-key sentinel events
-    far past the watermark horizon flush the trailing sessions
-    (append mode only emits closed sessions); sentinel sessions are
-    filtered out of the comparison."""
-    import time as _time
-    from datetime import timedelta
-
-    from serd_spark.operators.sessions import sessionize
-    from serd_spark.streaming.ingest import streaming_sessionize
-
-    ev = spark.read.parquet(
-        "/root/testdata/sf0.001/events.parquet").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"))
-    want = {(r.key, r.start_ep, r.end_ep, r.n_events)
-            for r in sessionize(ev, gap_sec=1800).collect()}
-
-    inp = os.path.join(tmpdir_path, "ssin")
-    ev.repartition(5).write.parquet(inp)
-    _time.sleep(1.1)  # sentinels must sort AFTER the real files
-    mx = ev.agg(F.max("ts")).collect()[0][0]
-    sent_ts = mx + timedelta(days=365 * 5)
-    ev.select("user_id").distinct() \
-        .withColumn("ts", F.lit(sent_ts).cast("timestamp")) \
-        .coalesce(1).write.mode("append").parquet(inp)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 2).parquet(inp)
-    )
-    # watermark 4y: never drops replayed real events (span << 4y),
-    # but the +5y sentinels push it past every real session's close
-    q = (
-        streaming_sessionize(stream, gap_sec=1800,
-                             watermark="35040 hours")
-        .writeStream.format("memory").queryName("ss_out")
-        .outputMode("append")
-        .option("checkpointLocation",
-                os.path.join(tmpdir_path, "ssckpt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    horizon = sent_ts.timestamp() - 1
-    got = {(r.key, r.start_ep, r.end_ep, r.n_events)
-           for r in spark.table("ss_out")
-           .where(F.col("start_ep") < horizon).collect()}
-    assert got == want and got
-
-
-def test_windowed_turn_counts_stream_equals_batch(spark, tmpdir_path):
-    """Tumbling-window turn counts over a replayed multi-file stream
-    equal the batch run of the same operator (it is written to work
-    on both): sentinel turns past the watermark horizon flush the
-    trailing windows, and sentinel windows are filtered out of the
-    comparison."""
-    import time as _time
-    from datetime import timedelta
-
-    from serd_spark.streaming.ingest import windowed_turn_counts
-    from serd_spark.transcripts import transcripts_df
-
-    tdf = transcripts_df(spark, 48).select("conv_id", "ts") \
-        .where(F.col("ts").isNotNull())
-    want = {(r.conv_id, r.window_start, r.n_turns)
-            for r in windowed_turn_counts(
-                tdf, watermark="35040 hours").collect()}
-
-    inp = os.path.join(tmpdir_path, "wtin")
-    tdf.repartition(4).write.parquet(inp)
-    _time.sleep(1.1)
-    mx = tdf.agg(F.max("ts")).collect()[0][0]
-    sent_ts = mx + timedelta(days=365 * 5)
-    tdf.select("conv_id").distinct() \
-        .withColumn("ts", F.lit(sent_ts).cast("timestamp")) \
-        .coalesce(1).write.mode("append").parquet(inp)
-
-    stream = (
-        spark.readStream.schema("conv_id string, ts timestamp")
-        .option("maxFilesPerTrigger", 2).parquet(inp)
-    )
-    q = (
-        windowed_turn_counts(stream, watermark="35040 hours")
-        .writeStream.format("memory").queryName("wt_out")
-        .outputMode("append")
-        .option("checkpointLocation",
-                os.path.join(tmpdir_path, "wtckpt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    got = {(r.conv_id, r.window_start, r.n_turns)
-           for r in spark.table("wt_out")
-           .where(F.col("window_start")
-                  < F.lit(sent_ts - timedelta(days=1))).collect()}
-    assert got == want and got
 
 
 def test_bucketed_triples_join_has_no_exchange(spark, tmpdir_path):
@@ -2034,51 +1804,6 @@ def test_compression_ratio_separates_boilerplate(spark):
     assert got == again
 
 
-def test_streaming_interval_enrich_equals_batch(spark, tmpdir_path):
-    """foreachBatch interval enrichment over a replayed multi-file
-    stream equals interval_join on the full event set — the interval
-    side is static (cached once) and the join is per-event, so
-    micro-batching is invisible in the union of batch outputs."""
-    from serd_spark.operators.sessions import interval_join
-    from serd_spark.streaming.ingest import start_streaming_interval_enrich
-
-    ev = spark.read.parquet(
-        "/root/testdata/sf0.001/events.parquet") \
-        .select("event_id", "user_id", "ts")
-    base = ev.groupBy("user_id").agg(
-        F.min(F.col("ts").cast("timestamp").cast("double")).alias("m"))
-    intervals = base.select(
-        "user_id", F.col("m").alias("start_ep"),
-        (F.col("m") + 3600).alias("end_ep"),
-        F.lit("w1").alias("tag"),
-    ).unionByName(base.select(
-        "user_id", (F.col("m") + 1800).alias("start_ep"),
-        (F.col("m") + 7200).alias("end_ep"),
-        F.lit("w2").alias("tag")))
-
-    inp = os.path.join(tmpdir_path, "ivin")
-    ckpt = os.path.join(tmpdir_path, "ivckpt")
-    ev.repartition(6).write.parquet(inp)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inp)
-    )
-    got: set[tuple] = set()
-
-    def sink(enr, batch_id):
-        for r in enr.collect():
-            assert (r.event_id, r.tag) not in got
-            got.add((r.event_id, r.tag))
-
-    q = start_streaming_interval_enrich(stream, intervals, sink,
-                                        checkpoint_path=ckpt)
-    q.awaitTermination(180)
-
-    want = {(r.event_id, r.tag)
-            for r in interval_join(ev, intervals).collect()}
-    assert got == want and got
-
-
 def test_simhash_dropped_buckets_audit(spark):
     """simhash_dropped_buckets surfaces exactly the hot buckets the
     cap silently drops: a templated block of identical docs exceeds
@@ -2111,118 +1836,6 @@ def test_simhash_dropped_buckets_audit(spark):
         <= got
 
 
-def test_streaming_graph_delta_equals_batch(spark, tmpdir_path):
-    """Streaming assert-only graph delta over a replayed multi-file
-    stream: the union of per-batch 'add' rows equals the batch
-    graph_delta 'add' arm against the final graph, no triple is
-    emitted twice (set semantics across batches), and re-asserted
-    snapshot triples emit nothing."""
-    from serd_spark.operators.kg import graph_delta
-    from serd_spark.streaming.ingest import start_streaming_graph_delta
-
-    orders = spark.read.parquet(
-        "/root/testdata/sf0.001/orders.parquet")
-
-    def tri(df):
-        return df.select(
-            F.concat(F.lit("urn:order:"), "o_orderkey").alias("s"),
-            F.lit("urn:schema:cust").alias("p"),
-            F.concat(F.lit("urn:cust:"), "o_custkey").alias("o"))
-
-    snapshot = tri(orders.where(F.col("o_orderkey") % 3 == 0))
-    # the stream re-asserts HALF the snapshot (must emit nothing)
-    # and asserts every non-snapshot triple, some twice (dup files).
-    arriving = tri(orders).unionByName(
-        tri(orders.where(F.col("o_orderkey") % 6 == 0)))
-
-    inp = os.path.join(tmpdir_path, "gdin")
-    ckpt = os.path.join(tmpdir_path, "gdckpt")
-    arriving.repartition(5).write.parquet(inp)
-    stream = (
-        spark.readStream.schema(arriving.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inp)
-    )
-    got: list[tuple] = []
-
-    def sink(adds, batch_id):
-        for r in adds.collect():
-            assert r.change == "add"
-            got.append((r.s, r.p, r.o))
-
-    q = start_streaming_graph_delta(
-        stream, snapshot, sink, checkpoint_path=ckpt,
-        state_path=os.path.join(tmpdir_path, "gdstate"))
-    q.awaitTermination(180)
-
-    assert len(got) == len(set(got)), "a triple was emitted twice"
-    want = {(r.s, r.p, r.o) for r in graph_delta(
-        snapshot, tri(orders)).where(F.col("change") == "add")
-        .collect()}
-    assert set(got) == want and want
-
-
-def test_streaming_graph_delta_restart_no_reemit(spark, tmpdir_path):
-    """Driver-restart semantics (ADVICE r6): a SECOND query resumed
-    from the same checkpoint + state re-asserts run-1 triples and
-    must emit NONE of them again — only state_path makes that hold,
-    and checkpoint_path without it is rejected outright."""
-    import pytest
-
-    from serd_spark.operators.kg import graph_delta
-    from serd_spark.streaming.ingest import start_streaming_graph_delta
-
-    orders = spark.read.parquet(
-        "/root/testdata/sf0.001/orders.parquet")
-
-    def tri(df):
-        return df.select(
-            F.concat(F.lit("urn:order:"), "o_orderkey").alias("s"),
-            F.lit("urn:schema:cust").alias("p"),
-            F.concat(F.lit("urn:cust:"), "o_custkey").alias("o"))
-
-    snapshot = tri(orders.where(F.col("o_orderkey") % 3 == 0))
-    part1 = tri(orders.where(F.col("o_orderkey") % 3 == 1))
-    # run 2 RE-asserts all of part1 plus the genuinely new remainder
-    part2 = tri(orders)
-
-    inp = os.path.join(tmpdir_path, "grin")
-    ckpt = os.path.join(tmpdir_path, "grckpt")
-    state = os.path.join(tmpdir_path, "grstate")
-    os.makedirs(inp)
-
-    with pytest.raises(ValueError, match="state_path"):
-        start_streaming_graph_delta(
-            spark.readStream.schema(part1.schema).parquet(inp),
-            snapshot, lambda df, bid: None, checkpoint_path=ckpt)
-
-    def run(df_to_append, emitted):
-        df_to_append.write.mode("append").parquet(inp)
-
-        def sink(adds, batch_id):
-            emitted.extend((r.s, r.p, r.o) for r in adds.collect())
-
-        stream = (spark.readStream.schema(part1.schema)
-                  .option("maxFilesPerTrigger", 2).parquet(inp))
-        q = start_streaming_graph_delta(
-            stream, snapshot, sink, checkpoint_path=ckpt,
-            state_path=state)
-        q.awaitTermination(180)
-
-    got1: list[tuple] = []
-    run(part1, got1)
-    got2: list[tuple] = []
-    run(part2, got2)  # fresh query object == restarted driver
-
-    assert got1 and got2
-    assert not set(got1) & set(got2), "restart re-emitted a triple"
-    want = {(r.s, r.p, r.o) for r in graph_delta(
-        snapshot, tri(orders)).where(F.col("change") == "add")
-        .collect()}
-    assert set(got1) | set(got2) == want
-    assert len(got1) == len(set(got1))
-    assert len(got2) == len(set(got2))
-
-
 def test_tool_call_stats_profile(spark):
     """Per-tool stats: NULL-tool turns are ignored, the error flag
     is a text prefix, the gap is call→NEXT TURN (tool or not), and
@@ -2252,127 +1865,3 @@ def test_tool_call_stats_profile(spark):
     # browse: gap to the NEXT turn in c2 (also a tool turn): 60.
     assert got["browse"] == (1, 1, 0, 1, 60)
 
-
-def test_streaming_graph_delta_corrupt_state_raises(spark, tmpdir_path):
-    """A corrupt persisted seen-set must FAIL the start, not silently
-    reset to the base snapshot (which would re-emit every
-    already-streamed triple); only a missing path means first start."""
-    import pytest
-
-    from serd_spark.streaming.ingest import start_streaming_graph_delta
-
-    state = os.path.join(tmpdir_path, "cstate")
-    os.makedirs(state)
-    with open(os.path.join(state, "part-0000.parquet"), "w") as f:
-        f.write("this is not parquet")
-    inp = os.path.join(tmpdir_path, "cin")
-    os.makedirs(inp)
-    snapshot = spark.createDataFrame([("a", "b", "c")],
-                                     "s string, p string, o string")
-    stream = spark.readStream.schema(snapshot.schema).parquet(inp)
-    with pytest.raises(Exception, match="(?i)parquet|schema"):
-        start_streaming_graph_delta(
-            stream, snapshot, lambda df, bid: None,
-            checkpoint_path=os.path.join(tmpdir_path, "cckpt"),
-            state_path=state)
-
-
-def test_streaming_graph_delta_state_compaction(spark, tmpdir_path):
-    """State compaction (ADVICE r7): with compact_every=1 the
-    persisted seen-set is rewritten to ONE distinct snapshot per
-    batch, so the state directory's data-file count stays bounded by
-    a single write's fan-out instead of growing per batch — while
-    the emitted rows and the restart no-reemit contract are
-    IDENTICAL to the append-only form.  Both interruptible states of
-    the two-phase swap recover on the next start: staging alongside
-    a live dir is discarded; staging with the live dir missing is
-    renamed into place and dedups exactly like the original."""
-    import shutil
-
-    from serd_spark.operators.kg import graph_delta
-    from serd_spark.streaming.ingest import start_streaming_graph_delta
-
-    orders = spark.read.parquet(
-        "/root/testdata/sf0.001/orders.parquet")
-
-    def tri(df):
-        return df.select(
-            F.concat(F.lit("urn:order:"), "o_orderkey").alias("s"),
-            F.lit("urn:schema:cust").alias("p"),
-            F.concat(F.lit("urn:cust:"), "o_custkey").alias("o"))
-
-    snapshot = tri(orders.where(F.col("o_orderkey") % 3 == 0))
-    arriving = tri(orders)
-
-    def parquet_files(d):
-        return [f for f in os.listdir(d) if f.endswith(".parquet")]
-
-    sup = spark.read.parquet(
-        "/root/testdata/sf0.001/supplier.parquet")
-
-    def sup_tri(lo, hi):
-        return sup.where(F.col("s_suppkey").between(lo, hi)).select(
-            F.concat(F.lit("urn:sup:"), "s_suppkey").alias("s"),
-            F.lit("urn:schema:nation").alias("p"),
-            F.concat(F.lit("urn:nation:"), "s_nationkey").alias("o"))
-
-    def run(tag, compact_every, df_to_append, emitted, parts=6):
-        inp = os.path.join(tmpdir_path, f"{tag}in")
-        df_to_append.repartition(parts).write.mode("append") \
-            .parquet(inp)
-
-        def sink(adds, batch_id):
-            emitted.extend((r.s, r.p, r.o) for r in adds.collect())
-
-        stream = (spark.readStream.schema(arriving.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(inp))
-        q = start_streaming_graph_delta(
-            stream, snapshot, sink,
-            checkpoint_path=os.path.join(tmpdir_path, f"{tag}ck"),
-            state_path=os.path.join(tmpdir_path, f"{tag}st"),
-            compact_every=compact_every)
-        q.awaitTermination(180)
-
-    want = {(r.s, r.p, r.o) for r in graph_delta(
-        snapshot, arriving).where(F.col("change") == "add")
-        .collect()}
-
-    got_c: list[tuple] = []
-    run("c", 1, arriving, got_c)
-    got_n: list[tuple] = []
-    run("n", None, arriving, got_n)
-    assert set(got_c) == want and len(got_c) == len(set(got_c))
-    assert set(got_n) == want and len(got_n) == len(set(got_n))
-
-    state_c = os.path.join(tmpdir_path, "cst")
-    state_n = os.path.join(tmpdir_path, "nst")
-    assert len(parquet_files(state_c)) < len(parquet_files(state_n))
-    # the compacted state holds exactly the emitted set, once
-    assert {(r.s, r.p, r.o)
-            for r in spark.read.parquet(state_c).collect()} == want
-    assert spark.read.parquet(state_c).count() == len(want)
-    assert not os.path.exists(state_c + ".compacting")
-
-    # crash state A: staging left NEXT TO a live dir (crash before
-    # the swap's delete) — live is authoritative, staging discarded.
-    # The restart re-asserts everything and adds 5 genuinely new
-    # triples: exactly those 5 emit (proves batches ran AND the
-    # reloaded state suppressed every re-assert).
-    shutil.copytree(state_c, state_c + ".compacting")
-    new1 = {(r.s, r.p, r.o) for r in sup_tri(1, 5).collect()}
-    got_a: list[tuple] = []
-    run("c", 1, arriving.unionByName(sup_tri(1, 5)), got_a)
-    assert set(got_a) == new1 and len(got_a) == len(new1)
-    assert not os.path.exists(state_c + ".compacting")
-
-    # crash state B: live dir deleted, staging complete (crash
-    # between delete and rename) — recovered by finishing the
-    # rename; again only the genuinely new rows emit
-    shutil.move(state_c, state_c + ".compacting")
-    assert not os.path.exists(state_c)
-    new2 = {(r.s, r.p, r.o) for r in sup_tri(6, 9).collect()}
-    got_b: list[tuple] = []
-    run("c", 1, arriving.unionByName(sup_tri(6, 9)), got_b)
-    assert set(got_b) == new2 and len(got_b) == len(new2)
-    assert os.path.exists(state_c)
-    assert not os.path.exists(state_c + ".compacting")
