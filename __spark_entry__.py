@@ -3216,7 +3216,7 @@ def _o_kg_substring_mentions(_: str) -> str:
 
 def _q_kg_parse_nt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG pipeline plumbing with an EXACT oracle: the same Turtle
-    parse → quarantine → conv_metrics path as
+    parse → quarantine → conv_metrics_from_parsed path as
     kg_parse_turtle, but over an NT-line corpus derived from orders —
     NT is line-splittable, so DuckDB can reconstruct the expected
     per-conversation triple/error counts with pure string ops (the

@@ -1,7 +1,9 @@
 """Canonicalization stage (O-13 salt / O-24 prep / node interning).
 
-- ``dedup_triples``: exact duplicate elimination on the full quad key
-  (map-side partial aggregation; AQE handles skewed subjects).
+- ``dedup_triples``: exact duplicate elimination on the full quad key,
+  a ``row_number`` window whose keys lead with ``SORT_KEY``, so a
+  range partitioning on ``SORT_KEY`` serves it and its local sort is
+  also the canonical output order (``materialize.sorted_nquads``).
 - ``nquads_line_col``: canonical NQuads spelling as a JVM-side column
   expression — whole-stage-codegen string ops, no Python in the hot
   path.  Parser-emitted IRIs are escape-free by construction (forbidden
@@ -10,20 +12,23 @@
 - ``intern_nodes``: dictionary-encode terms into a nodes table +
   id-based triples (serd's stack interning re-expressed as a join
   table; shrinks shuffle width for downstream stages).
-- ``conv_metrics`` / ``partition_metrics``: per-conversation and
-  per-partition triple counts (north rule's lineage/metrics).
+- ``conv_metrics_from_parsed``: per-conversation lineage metrics, the
+  triples each conversation emitted and its quarantined errors.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-QUAD_COLS = ["g", "s", "s_type", "p", "o", "o_type", "o_datatype", "o_lang"]
+# The canonical output order; the quad key is it plus s_type.
+SORT_KEY = ["g", "s", "p", "o", "o_type", "o_datatype", "o_lang"]
+QUAD_COLS = SORT_KEY + ["s_type"]
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
-    """Distinct on the quad key, keeping the smallest stmt_idx for
-    stable lineage (deterministic across retries/partitionings)."""
+    """Distinct on the quad key, keeping the smallest
+    ``(conv_id, stmt_idx)`` for stable lineage (deterministic across
+    retries/partitionings)."""
     w = Window.partitionBy(*QUAD_COLS).orderBy("conv_id", "stmt_idx")
     return (
         triples.withColumn("_rn", F.row_number().over(w))
@@ -119,42 +124,17 @@ def intern_nodes(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
     return nodes, tid
 
 
-def conv_metrics(triples: DataFrame, errors: DataFrame) -> DataFrame:
-    """Per-conversation lineage metrics: triple + error counts.
-
-    NB: when ``triples`` and ``errors`` both derive from ONE parsed
-    DataFrame (the ``split_quarantine`` output), use
-    :func:`conv_metrics_from_parsed` instead — this two-input form
-    evaluates the shared parse plan twice (mapInArrow output is not
-    exchange-reusable), doubling the Python parse cost."""
-    t = triples.groupBy("conv_id").agg(F.count("*").alias("n_triples"))
-    e = errors.groupBy("conv_id").agg(F.count("*").alias("n_errors"))
-    return (
-        t.join(e, "conv_id", "full")
-        .select(
-            "conv_id",
-            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-            F.coalesce("n_errors", F.lit(0)).alias("n_errors"),
-        )
-    )
-
-
 def conv_metrics_from_parsed(parsed: DataFrame) -> DataFrame:
     """Per-conversation lineage metrics in ONE pass over the parsed
     (pre-quarantine-split) DataFrame: a single map-side-combined
-    aggregation, no second parse evaluation, no join.  Output is
-    identical to ``conv_metrics(*split_quarantine(parsed))``."""
+    aggregation, no join.  ``n_triples`` counts the triples the
+    conversation emitted, before the global dedup (which credits a
+    quad shared by several conversations to the first
+    ``(conv_id, stmt_idx)`` only); ``n_errors`` counts its quarantined
+    errors."""
     return parsed.groupBy("conv_id").agg(
         F.count(F.when(F.col("err").isNull(), F.lit(1)))
         .alias("n_triples"),
         F.count("err").alias("n_errors"),
     )
 
-
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """Rows per physical partition (skew visibility at a glance)."""
-    return (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(F.count("*").alias("n_rows"))
-    )

@@ -1,13 +1,12 @@
-"""Materialization: sorted NQuads-equivalent output + stage
-checkpoints (resumable runs).
+"""Materialization: sorted NQuads output + stage checkpoints
+(resumable runs).
 
-The canonical output (O-24) is a globally-sorted text/parquet dataset:
-``orderBy`` is a range-partition shuffle, each output file is sorted,
-and files are totally ordered by index — the distributed equivalent of
+The canonical output (O-24) is a globally-sorted parquet dataset of
+NQuads lines: one range-partition shuffle, each part file sorted, and
+part files totally ordered by index — the distributed equivalent of
 serd's single sorted stream.  Iceberg is the design target
-(BASELINE.json); this sandbox has no Iceberg jars, so the table format
-is pluggable and defaults to parquet with the same directory/snapshot
-semantics (checkpoint dir + _DONE marker standing in for a snapshot).
+(BASELINE.json); this sandbox has no Iceberg jars, so a checkpoint is
+a parquet directory whose _DONE marker stands in for a snapshot.
 """
 
 from __future__ import annotations
@@ -18,32 +17,33 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .canonicalize import nquads_line_col
-
-SORT_KEY = ["g", "s", "p", "o", "o_type", "o_datatype", "o_lang"]
+from .canonicalize import SORT_KEY, dedup_triples, nquads_line_col
 
 
-def to_nquads_lines(triples: DataFrame) -> DataFrame:
-    return triples.select(
-        "conv_id", "stmt_idx", nquads_line_col(triples).alias("line"))
+def sorted_nquads(triples: DataFrame) -> DataFrame:
+    """Deduplicated ``triples`` as one ``line`` column, globally sorted
+    on ``SORT_KEY`` (nulls first).  Builds the plan only.
+
+    One Exchange: ``repartitionByRange(SORT_KEY)`` feeds the
+    ``dedup_triples`` window, whose clustering on the quad key it
+    satisfies (``SORT_KEY`` is a prefix of it), and the window's local
+    sort already orders each partition on ``SORT_KEY``, so the
+    ``sortWithinPartitions`` below is planned away.  Reading the part
+    files in name order gives the canonical stream."""
+    ranged = triples.repartitionByRange(
+        *[F.col(c).asc_nulls_first() for c in SORT_KEY])
+    deduped = dedup_triples(ranged).sortWithinPartitions(*SORT_KEY)
+    return deduped.select(nquads_line_col(deduped).alias("line"))
 
 
-def write_sorted_nquads(
-    triples: DataFrame, path: str, fmt: str = "parquet",
-) -> None:
-    """Global sort on the quad key → one sorted dataset.
+def part_rows(path: str) -> list[int]:
+    """Rows of each part file of a parquet dataset, in part-file order,
+    read from the footers on the driver (no Spark job)."""
+    import pyarrow.parquet as pq
 
-    Range-partition shuffle; AQE coalesces small post-sort partitions.
-    For text output each part file is sorted and part files are
-    ordered, so `cat part-*` is the canonical stream.
-    """
-    out = to_nquads_lines(
-        triples.orderBy(*[F.col(c).asc_nulls_first() for c in SORT_KEY]))
-    writer = out.select("line").write.mode("overwrite")
-    if fmt == "text":
-        writer.text(path)
-    else:
-        writer.format(fmt).save(path)
+    return [pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
+            for name in sorted(os.listdir(path))
+            if name.startswith("part-")]
 
 
 # ---- stage checkpoints (resume + lineage metrics) ----
@@ -58,12 +58,12 @@ def checkpoint_exists(path: str) -> bool:
 
 
 def write_checkpoint(
-    df: DataFrame, path: str, stage: str, fmt: str = "parquet",
+    df: DataFrame, path: str, stage: str,
     validate_readback: bool = False,
 ) -> dict:
-    """Write a stage checkpoint + _DONE marker with row/partition
-    metrics.  A later run resumes by reading the checkpoint instead of
-    recomputing the stage (read_checkpoint).
+    """Write a stage checkpoint + _DONE marker with its row count.  A
+    later run resumes by reading the checkpoint instead of recomputing
+    the stage (read_checkpoint).
 
     The row count rides the write itself via ``Observation`` — no
     re-read of the stage just to count (at scale that was one extra
@@ -73,13 +73,13 @@ def write_checkpoint(
 
     obs = Observation(f"ckpt_{stage}")
     w = df.observe(obs, F.count(F.lit(1)).alias("rows")) \
-        .write.mode("overwrite").format(fmt)
+        .write.mode("overwrite")
     t0 = time.time()
-    w.save(path)
+    w.parquet(path)
     n = obs.get["rows"]
     if validate_readback:
         spark = df.sparkSession
-        n_back = spark.read.format(fmt).load(path).count()
+        n_back = spark.read.parquet(path).count()
         if n_back != n:
             raise IOError(
                 f"checkpoint {stage}: wrote {n} rows but read back "
@@ -89,16 +89,14 @@ def write_checkpoint(
         "rows": n,
         "elapsed_sec": round(time.time() - t0, 3),
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "format": fmt,
     }
     with open(_done_marker(path), "w") as f:
         json.dump(info, f)
     return info
 
 
-def read_checkpoint(spark: SparkSession, path: str,
-                    fmt: str = "parquet") -> DataFrame:
-    return spark.read.format(fmt).load(path)
+def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
 
 
 def checkpoint_info(path: str) -> dict | None:

@@ -1,9 +1,12 @@
 """End-to-end KG-construction pipeline (the serdi analogue, O-5).
 
-transcripts → parse → quarantine split →
-dedup/canonicalize → sorted NQuads materialization, with per-stage
-checkpoints, per-conversation lineage metrics, and per-partition
-counts — resumable: a re-run skips stages whose _DONE marker exists.
+transcripts → ``parsed`` (parse, one checkpoint of triples and
+quarantined errors) → ``errors`` (the quarantine ledger) →
+``metrics`` (per-conversation triple and error counts) → ``nquads``
+(dedup + globally sorted NQuads, one plan).  Each stage writes a
+parquet checkpoint with a _DONE marker, and a re-run skips every stage
+whose marker exists; only ``parsed`` is read back, as the input of the
+other three.
 
 Run via spark-submit:
     spark-submit --py-files serd_spark.zip -m serd_spark.pipeline \
@@ -22,9 +25,12 @@ task re-parses one core's share.  NT/NQ go through
 ``parse_documents`` to the shuffle-free line pass.  Blank ids and stmt
 indices are pure functions of input coordinates so retries/speculative
 tasks are safe; the only wide operations are the parse repartition,
-the dedup, and the final range-partition sort.  The summary's counts
-come from the stage checkpoints' own row counts, so the run ends
-without a counting job.
+the one range Exchange that feeds both the dedup and the sorted
+NQuads write (``sorted_nquads``), and the ``metrics`` aggregation.
+The summary's counts come from the stage writes' own row counts and
+its per-part-file ``partitions`` from the NQuads parquet footers, so
+the run ends without a counting job, and a re-run of a finished job
+starts none at all.
 """
 
 from __future__ import annotations
@@ -34,33 +40,33 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from .operators.canonicalize import (
-    conv_metrics,
-    dedup_triples,
-    partition_metrics,
-)
+from .operators.canonicalize import conv_metrics_from_parsed
 from .operators.materialize import (
     checkpoint_exists,
     checkpoint_info,
-    read_checkpoint,
+    part_rows,
+    sorted_nquads,
     write_checkpoint,
-    write_sorted_nquads,
 )
 # parse_ntriples_lines is unused here but stays importable: the
 # benchmark's tracer (perfbench/workloads.py) wraps each parse builder
 # by name on this module.
 from .operators.parse import (  # noqa: F401
+    PARSED_SCHEMA,
     parse_documents,
     parse_documents_colocated,
     parse_ntriples_lines,
     split_quarantine,
 )
 
-# Deleted builders still named by perfbench/workloads.py's
-# _PIPELINE_WRAPS; None keeps its getattr-and-wrap working.
+# Builders no longer called here but still named by
+# perfbench/workloads.py's _PIPELINE_WRAPS; None keeps its
+# getattr-and-wrap working.
 assemble_chunks = parse_documents_chunked = None
+dedup_triples = conv_metrics = partition_metrics = None
+write_sorted_nquads = None
 
 
 class KGPipeline:
@@ -71,66 +77,61 @@ class KGPipeline:
         syntax: str = "turtle",
         lax: bool = True,
         chunk_turns: int = 64,
-        fmt: str = "parquet",
     ):
         self.spark = spark
         self.workdir = workdir
         self.syntax = syntax
         self.lax = lax
         self.chunk_turns = chunk_turns
-        self.fmt = fmt
         self.stage_infos: list[dict] = []
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.workdir, stage)
 
-    def _stage(self, name: str, build) -> DataFrame:
-        """Run or resume one checkpointed stage.  Its info carries the
-        stage's ``rows``: counted by the write itself, or on resume
+    def _stage(self, name: str, build) -> int:
+        """Run one checkpointed stage unless an earlier run finished it,
+        and return its rows: counted by the write itself, or on resume
         read from the checkpoint's marker."""
         path = self._path(name)
         if checkpoint_exists(path):
             info = {"stage": name, "resumed": True,
                     "rows": checkpoint_info(path)["rows"]}
         else:
-            info = write_checkpoint(build(), path, name, fmt=self.fmt)
+            info = write_checkpoint(build(), path, name)
         self.stage_infos.append(info)
-        return read_checkpoint(self.spark, path, self.fmt)
+        return info["rows"]
 
     def run(self, transcripts: DataFrame) -> dict:
         t0 = time.time()
 
         if self.syntax in ("ntriples", "nquads"):
-            parsed = self._stage(
+            self._stage(
                 "parsed",
                 lambda: parse_documents(transcripts, self.syntax, self.lax),
             )
         else:
-            parsed = self._stage(
+            self._stage(
                 "parsed",
                 lambda: parse_documents_colocated(
                     transcripts, self.chunk_turns, self.syntax, self.lax),
             )
-
+        # every parse pass emits PARSED_SCHEMA: no schema-inference job
+        parsed = self.spark.read.schema(PARSED_SCHEMA).parquet(
+            self._path("parsed"))
         triples, errors = split_quarantine(parsed)
-        errors = self._stage("errors", lambda: errors)
 
-        triples = self._stage("triples", lambda: dedup_triples(triples))
-
-        self._stage("metrics", lambda: conv_metrics(triples, errors))
-        pmetrics = partition_metrics(triples).collect()
+        n_errors = self._stage("errors", lambda: errors)
+        n_convs = self._stage(
+            "metrics", lambda: conv_metrics_from_parsed(parsed))
+        n_triples = self._stage("nquads", lambda: sorted_nquads(triples))
 
         out_path = self._path("nquads")
-        write_sorted_nquads(triples, out_path, fmt=self.fmt)
-
-        rows = {st["stage"]: st["rows"] for st in self.stage_infos}
         summary = {
             "elapsed_sec": round(time.time() - t0, 3),
-            "n_triples": rows["triples"],
-            "n_errors": rows["errors"],
-            "n_convs": rows["metrics"],
-            "partitions": sorted(
-                (r.partition_id, r.n_rows) for r in pmetrics),
+            "n_triples": n_triples,
+            "n_errors": n_errors,
+            "n_convs": n_convs,
+            "partitions": part_rows(out_path),
             "stages": self.stage_infos,
             "output": out_path,
         }

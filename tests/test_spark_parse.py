@@ -34,6 +34,33 @@ def collect_triples(df):
     return out
 
 
+TRIPLE_SCHEMA = ("g string, s string, s_type int, p string, o string, "
+                 "o_type int, o_datatype string, o_lang string")
+
+
+def written_lines(workdir) -> list[str]:
+    """The ``line`` column of a pipeline's NQuads output, part files
+    in name order (the canonical stream)."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(workdir, "nquads")
+    return [ln for name in sorted(os.listdir(path))
+            if name.startswith("part-")
+            for ln in pq.read_table(os.path.join(path, name),
+                                    columns=["line"]).column(0)
+            .to_pylist()]
+
+
+def written_triples(spark, workdir):
+    """A pipeline's NQuads output read back through the N-Triples line
+    parser, whose code is separate from the Turtle grammar."""
+    from serd_spark.ntriples import parse_nt_line
+
+    return spark.createDataFrame(
+        [tuple(parse_nt_line(ln)) for ln in written_lines(workdir)],
+        TRIPLE_SCHEMA)
+
+
 @pytest.fixture(scope="module")
 def small_corpus(spark):
     df = transcripts_df(spark, 20, mega_every=7, mega_factor=12)
@@ -204,13 +231,126 @@ def test_lax_quarantine_through_pipeline(spark, tmpdir_path):
     assert s["n_errors"] > 0       # injected errors quarantined
     assert s["n_triples"] > 0      # job still succeeds (lax, O-17)
     # the summary's counts are the written datasets' sizes
-    tri = spark.read.parquet(os.path.join(tmpdir_path, "triples"))
+    tri = written_triples(spark, tmpdir_path)
     err = spark.read.parquet(os.path.join(tmpdir_path, "errors"))
     assert (s["n_triples"], s["n_errors"]) == (tri.count(), err.count())
     assert s["n_convs"] == 15
     s2 = KGPipeline(spark, tmpdir_path, chunk_turns=8).run(tdf)
     for k in ("n_triples", "n_errors", "n_convs"):
         assert s2[k] == s[k], k
+
+
+@pytest.fixture(scope="module")
+def finished_run(spark):
+    """One lax KGPipeline run over a corpus with injected errors and
+    mega-conversations: its workdir, summary, corpus and the plan-node
+    names of every SQL execution it ran, in order."""
+    import shutil
+    import tempfile
+
+    from serd_spark.pipeline import KGPipeline
+
+    tdf = transcripts_df(spark, 40, mega_every=7, mega_factor=10,
+                         with_errors=True)
+    tdf.cache().count()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    seen = {e.executionId() for e in _executions(store)}
+    workdir = tempfile.mkdtemp(prefix="serd_spark_test_")
+    summary = KGPipeline(spark, workdir, chunk_turns=8).run(tdf)
+    bus.waitUntilEmpty()
+    execs = [(e.physicalPlanDescription(),
+              _node_names(store.planGraph(e.executionId())))
+             for e in _executions(store) if e.executionId() not in seen]
+    yield workdir, summary, tdf, execs
+    tdf.unpersist()
+    shutil.rmtree(workdir, ignore_errors=True)
+
+
+def _executions(store) -> list:
+    ex = store.executionsList()
+    return sorted((ex.apply(i) for i in range(ex.size())),
+                  key=lambda e: e.executionId())
+
+
+def _node_names(graph) -> list[str]:
+    it = graph.allNodes().iterator()
+    names = []
+    while it.hasNext():
+        names.append(it.next().name())
+    return names
+
+
+def test_pipeline_nquads_sorted_and_duplicate_free(finished_run):
+    """The NQuads output, read part file by part file, is one stream
+    sorted on SORT_KEY (nulls first) with no line twice, and the
+    summary's per-part-file ``partitions`` add up to ``n_triples``."""
+    from serd_spark.ntriples import parse_nt_line
+    from serd_spark.operators.materialize import SORT_KEY
+
+    workdir, summary, _, _ = finished_run
+    lines = written_lines(workdir)
+    assert len(lines) == len(set(lines)) == summary["n_triples"] > 0
+    keys = [tuple((v is not None, v or "") for v in
+                  (getattr(t, c) for c in SORT_KEY))
+            for t in map(parse_nt_line, lines)]
+    assert keys == sorted(keys)
+    assert sum(summary["partitions"]) == summary["n_triples"]
+
+
+def test_pipeline_tail_is_one_range_exchange(finished_run):
+    """After the parse the run plans two Exchanges: the range Exchange
+    the dedup and the sorted NQuads write share, and the ``metrics``
+    aggregation's.  The NQuads write sorts once."""
+    _, _, _, execs = finished_run
+    writes = {stage: names for desc, names in execs
+              for stage in ("parsed", "errors", "metrics", "nquads")
+              if "InsertIntoHadoopFsRelationCommand" in desc
+              and f"/{stage}," in desc}
+    assert set(writes) == {"parsed", "errors", "metrics", "nquads"}
+    tail = [names for desc, names in execs
+            if "MapInArrow" not in desc]
+    assert sum(names.count("Exchange") for names in tail) == 2
+    assert writes["nquads"].count("Exchange") == 1
+    assert writes["nquads"].count("Sort") == 1
+
+
+def test_pipeline_full_resume_starts_no_job(spark, finished_run):
+    """A re-run of a finished job skips every stage and starts no
+    Spark job, and reports the same summary."""
+    from serd_spark.pipeline import KGPipeline
+
+    workdir, summary, tdf, _ = finished_run
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = last_job()
+    again = KGPipeline(spark, workdir, chunk_turns=8).run(tdf)
+    assert last_job() == before
+    assert all(st.get("resumed") for st in again["stages"])
+    for k in ("n_triples", "n_errors", "n_convs", "partitions"):
+        assert again[k] == summary[k], k
+
+
+def test_pipeline_metrics_checkpoint_from_parsed(spark, finished_run):
+    """The ``metrics`` checkpoint is conv_metrics_from_parsed of the
+    ``parsed`` checkpoint: the triples each conversation emitted, not
+    those left after the global dedup."""
+    from serd_spark.operators.canonicalize import conv_metrics_from_parsed
+
+    workdir, summary, _, _ = finished_run
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    got = rows(spark.read.parquet(os.path.join(workdir, "metrics")))
+    want = rows(conv_metrics_from_parsed(
+        spark.read.parquet(os.path.join(workdir, "parsed"))))
+    assert got == want
+    assert len(got) == summary["n_convs"]
 
 
 def test_locate_cursor_units():
@@ -279,7 +419,6 @@ def test_pipeline_carries_prefix_after_unterminated_iri(spark,
                                                         tmpdir_path):
     """KGPipeline, parse_documents and a whole-document TurtleParser
     agree on the Env a chunk starts with, even after lax recovery."""
-    from serd_spark.operators.materialize import read_checkpoint
     from serd_spark.pipeline import KGPipeline
     from serd_spark.turtle import TurtleParser
 
@@ -289,8 +428,7 @@ def test_pipeline_carries_prefix_after_unterminated_iri(spark,
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts string")
     KGPipeline(spark, tmpdir_path, chunk_turns=1).run(tdf)
-    piped = {r.s for r in read_checkpoint(
-        spark, os.path.join(tmpdir_path, "triples")).collect()}
+    piped = {r.s for r in written_triples(spark, tmpdir_path).collect()}
     parsed = {r.s for r in split_quarantine(
         parse_documents(tdf))[0].collect()}
     whole, _ = TurtleParser(
@@ -368,19 +506,22 @@ def test_nt_fast_path_equals_slow(spark):
 
 
 def test_conv_metrics_single_pass_equivalence(spark):
-    """conv_metrics_from_parsed(parsed) must equal
-    conv_metrics(*split_quarantine(parsed)) — the single-aggregation
-    form exists so the parse plan is evaluated once, not twice."""
-    from serd_spark.operators.canonicalize import (
-        conv_metrics,
-        conv_metrics_from_parsed,
-    )
-    tdf = transcripts_df(spark, 24, mega_every=8, mega_factor=10)
+    """conv_metrics_from_parsed(parsed) — one aggregation, so the parse
+    plan is evaluated once — equals per-conversation counts of the
+    parsed rows: triples emitted and errors quarantined."""
+    from collections import Counter
+
+    from serd_spark.operators.canonicalize import conv_metrics_from_parsed
+
+    tdf = transcripts_df(spark, 24, mega_every=8, mega_factor=10,
+                         with_errors=True)
     parsed = parse_documents_colocated(tdf, chunk_turns=16)
-    a = {tuple(r) for r in
-         conv_metrics(*split_quarantine(parsed)).collect()}
+    rows = parsed.collect()
+    n_tri = Counter(r.conv_id for r in rows if r.err is None)
+    n_err = Counter(r.conv_id for r in rows if r.err is not None)
+    a = {(c, n_tri[c], n_err[c]) for c in {r.conv_id for r in rows}}
     b = {tuple(r) for r in conv_metrics_from_parsed(parsed).collect()}
-    assert a == b and a
+    assert a == b and any(n_err.values())
 
 
 def test_syntax_dispatch_routes_nq_to_line_parser(spark):
@@ -442,7 +583,7 @@ def _strict_pipeline(spark, tdf, tmpdir):
     from serd_spark.pipeline import KGPipeline
 
     KGPipeline(spark, tmpdir, lax=False, chunk_turns=2).run(tdf)
-    tri = read_checkpoint(spark, os.path.join(tmpdir, "triples"))
+    tri = written_triples(spark, tmpdir)
     err = read_checkpoint(spark, os.path.join(tmpdir, "errors"))
     return tri, err
 
