@@ -17,8 +17,8 @@ Layout:
   env          per-document lexical environment (prefixes + base chain)
   turtle       recursive-descent Turtle/TriG parser (per-document)
   ntriples     line-based NTriples/NQuads parser
-  writer       canonical NQuads/NTriples line formatter + Turtle
-               abbreviation writer
+  writer       canonical NQuads/NTriples line formatter
+  writer_serdi the abbreviating Turtle/TriG writer (serd's, byte-exact)
   operators/   Spark DataFrame stages (parse, expand, canonicalize,
                materialize, dedup, similarity, text)
   pipeline     end-to-end KG job with checkpoints/lineage/metrics

@@ -8,16 +8,19 @@ degrees profile the graph (hub documents = template spam), PageRank
 ranks centrality (which near-duplicate is the "canonical" one by
 connectivity).
 
-Scale shape: edges shuffle once per PageRank round keyed by node
-(map-side-combined sum of contributions); ranks localCheckpoint per
-round (lineage truncation — same requirement as ``dup_clusters``);
-out-degrees are computed once and reused every round.  Fixed
-iteration count (not convergence-driven) keeps the operator
-deterministic AND exactly SQL-mirrorable: the oracle unrolls the same
-K rounds as chained CTEs.  The one convergence-driven verb here,
-``bfs_levels``, runs the shared closure loop
-:func:`serd_spark.operators.util.frontier_fixpoint`, which owns the
-visited-set, checkpoint and ``max_iters`` contract.
+Scale shape: both PageRank verbs run one power iteration
+(``_power_iteration``; the unweighted one with every weight 1.0).
+Edges shuffle once per round keyed by node (map-side-combined sum of
+contributions); ranks localCheckpoint per round (lineage truncation —
+same requirement as ``dup_clusters``); weighted out-degrees are
+computed once and reused every round.  Fixed iteration count (not
+convergence-driven) keeps the operator deterministic AND exactly
+SQL-mirrorable: the oracle unrolls the same K rounds as chained CTEs.
+The one convergence-driven verb here, ``bfs_levels``, runs the shared
+closure step :func:`serd_spark.operators.util.frontier_fixpoint`
+(visited set and checkpoints) on the one convergence loop
+:func:`serd_spark.operators.util.fixpoint` (the ``max_iters``
+contract).
 """
 
 from __future__ import annotations
@@ -138,8 +141,8 @@ def kcore_peel(
     edges = _sym_edges(pairs).localCheckpoint()
     for _ in range(n_rounds):
         # keep-set is node-sized; materialize once per round and
-        # broadcast BOTH semi joins (see pagerank's stats note) so
-        # the edge table is never re-shuffled
+        # broadcast BOTH semi joins (see _power_iteration's stats
+        # note) so the edge table is never re-shuffled
         keep = (edges.groupBy("u").agg(F.count("*").alias("_d"))
                 .where(F.col("_d") >= k).select("u")).localCheckpoint()
         edges = (
@@ -183,7 +186,8 @@ def label_propagation(
     from pyspark.sql import Window
 
     for _ in range(n_rounds):
-        # broadcast the node-sized label table — see pagerank's note
+        # broadcast the node-sized label table — see
+        # _power_iteration's stats note
         nl = edges.join(
             F.broadcast(labels.select(F.col("node").alias("v"),
                                       "lbl")), "v")
@@ -200,89 +204,29 @@ def label_propagation(
                          F.col("lbl").alias("label"))
 
 
-def pagerank(
-    pairs: DataFrame, n_iter: int = 5, damping: float = 0.85,
-) -> DataFrame:
-    """PageRank on the symmetrized pair graph, exactly ``n_iter``
-    power-iteration rounds from a uniform start — (doc_id, rank)
-    rounded to 6 dp.  Nodes are those appearing in ≥1 pair (every
-    node then has out-degree ≥ 1: no dangling-mass term needed).
+def _power_iteration(sym: DataFrame, n_iter: int,
+                     damping: float) -> DataFrame:
+    """The PageRank power iteration shared by :func:`pagerank` and
+    :func:`pagerank_weighted`: ``n_iter`` rounds from a uniform start
+    over the symmetric weighted edge table ``sym`` (u, v, w), splitting
+    each node's rank over its edges in proportion to weight,
 
-    rank_{k+1}(v) = (1-d)/n + d * Σ_{u→v} rank_k(u) / outdeg(u)
+    rank_{k+1}(v) = (1-d)/n + d · Σ_{u~v} rank_k(u) · w_uv / W_u
 
-    Float grain: the output quantizes to the e-4 grain via
-    :func:`_rank_e4` (round-6-then-floor-divide) rather than the 6 dp
-    the non-iterative operators use, because the rank is an
-    ITERATIVELY accumulated double — engines that sum contributions
-    in a different order (the DuckDB oracle, a different
-    partitioning) agree only to ~1e-12 absolute, and an exact-hash
-    gate needs the quantization boundary far from that drift; see
-    ``test_pagerank_rounding_survives_summation_order``."""
-    edges = _sym_edges(pairs).localCheckpoint()
-    nodes = edges.select("u").distinct().localCheckpoint()
+    with W_u = Σ_v w_uv.  Nodes are those with ≥1 edge (every node then
+    has W_u > 0: no dangling-mass term needed).  Returns (u, r)."""
+    sym = sym.localCheckpoint()
+    nodes = sym.select("u").distinct().localCheckpoint()
     n = nodes.count()
-    outdeg = edges.groupBy("u").agg(
-        F.count("*").alias("od")).localCheckpoint()
+    wdeg = sym.groupBy("u").agg(F.sum("w").alias("wd")).localCheckpoint()
     ranks = nodes.withColumn("r", F.lit(1.0 / n))
-    # Node-sized tables (ranks, outdeg, contrib) carry UNKNOWN size
+    # Node-sized tables (ranks, wdeg, contrib) carry UNKNOWN size
     # stats after localCheckpoint, so the planner falls back to
     # shuffle joins — re-shuffling the EDGE table twice per round.
     # The explicit broadcast hints (guide §3.1: hint when estimates
     # are wrong) keep the edges unshuffled: one edge scan + map-side
     # partial sums + one node-sized exchange per round.
     for _ in range(n_iter):
-        contrib = (
-            edges.join(F.broadcast(ranks), "u")
-            .join(F.broadcast(outdeg), "u")
-            .select(F.col("v").alias("u"),
-                    (F.col("r") / F.col("od")).alias("c"))
-            .groupBy("u")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(F.broadcast(contrib), "u", "left")
-            .select("u",
-                    (F.lit((1.0 - damping) / n)
-                     + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0)))
-                    .alias("r"))
-            .localCheckpoint()
-        )
-    return ranks.select(F.col("u").alias("doc_id"),
-                        _rank_e4(F.col("r")))
-
-
-def pagerank_weighted(
-    edges: DataFrame, n_iter: int = 3, damping: float = 0.85,
-    src: str = "iri_a", dst: str = "iri_b", weight: str = "n_turns",
-) -> DataFrame:
-    """Weighted PageRank over an undirected weighted edge list (one
-    row per unordered pair, e.g. ``comention_edges`` output):
-    contributions split proportionally to edge weight,
-
-    rank_{k+1}(v) = (1-d)/n + d · Σ_{u~v} rank_k(u) · w_uv / W_u
-
-    with W_u = Σ_v w_uv — entity importance over the co-mention graph
-    (which entities anchor the KG), where the unweighted variant would
-    let one chatty conversation count as much as a thousand.
-
-    Same scale/determinism contract as :func:`pagerank`: one exchange
-    per round keyed by destination with map-side-combined sums,
-    weighted degrees computed once, localCheckpoint lineage
-    truncation, fixed rounds → exact unrolled-CTE SQL mirror.
-    Output: (node, rank) at the e-4 iterative-accumulation grain —
-    see :func:`pagerank`'s float-grain note and :func:`_rank_e4`."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"),
-                     F.col(weight).cast("double").alias("w"))
-    sym = e.union(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"),
-                     F.col(weight).cast("double").alias("w"))
-    ).localCheckpoint()
-    nodes = sym.select("u").distinct()
-    n = nodes.count()
-    wdeg = sym.groupBy("u").agg(F.sum("w").alias("wd")).localCheckpoint()
-    ranks = nodes.withColumn("r", F.lit(1.0 / n))
-    for _ in range(n_iter):
-        # broadcast node-sized sides — see pagerank's stats note
         contrib = (
             sym.join(F.broadcast(ranks), "u")
             .join(F.broadcast(wdeg), "u")
@@ -299,6 +243,56 @@ def pagerank_weighted(
                     .alias("r"))
             .localCheckpoint()
         )
+    return ranks
+
+
+def pagerank(
+    pairs: DataFrame, n_iter: int = 5, damping: float = 0.85,
+) -> DataFrame:
+    """PageRank on the symmetrized pair graph, exactly ``n_iter``
+    power-iteration rounds from a uniform start — (doc_id, rank).
+
+    rank_{k+1}(v) = (1-d)/n + d * Σ_{u→v} rank_k(u) / outdeg(u)
+
+    This is :func:`_power_iteration` with every weight 1.0, which is
+    the same double bit for bit: r·1.0/Σ1.0 = r/outdeg exactly.
+
+    Float grain: the output quantizes to the e-4 grain via
+    :func:`_rank_e4` (round-6-then-floor-divide) rather than the 6 dp
+    the non-iterative operators use, because the rank is an
+    ITERATIVELY accumulated double — engines that sum contributions
+    in a different order (the DuckDB oracle, a different
+    partitioning) agree only to ~1e-12 absolute, and an exact-hash
+    gate needs the quantization boundary far from that drift; see
+    ``test_pagerank_rounding_survives_summation_order``."""
+    ranks = _power_iteration(
+        _sym_edges(pairs).withColumn("w", F.lit(1.0)), n_iter, damping)
+    return ranks.select(F.col("u").alias("doc_id"),
+                        _rank_e4(F.col("r")))
+
+
+def pagerank_weighted(
+    edges: DataFrame, n_iter: int = 3, damping: float = 0.85,
+    src: str = "iri_a", dst: str = "iri_b", weight: str = "n_turns",
+) -> DataFrame:
+    """Weighted PageRank over an undirected weighted edge list (one
+    row per unordered pair, e.g. ``comention_edges`` output):
+    contributions split proportionally to edge weight
+    (:func:`_power_iteration`) — entity importance over the co-mention
+    graph (which entities anchor the KG), where the unweighted variant
+    would let one chatty conversation count as much as a thousand.
+
+    Same scale/determinism contract as :func:`pagerank`: one exchange
+    per round keyed by destination with map-side-combined sums,
+    weighted degrees computed once, localCheckpoint lineage
+    truncation, fixed rounds → exact unrolled-CTE SQL mirror.
+    Output: (node, rank) at the e-4 iterative-accumulation grain —
+    see :func:`pagerank`'s float-grain note and :func:`_rank_e4`."""
+    w = F.col(weight).cast("double").alias("w")
+    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), w) \
+        .union(edges.select(F.col(dst).alias("u"),
+                            F.col(src).alias("v"), w))
+    ranks = _power_iteration(sym, n_iter, damping)
     return ranks.select(F.col("u").alias("node"),
                         _rank_e4(F.col("r")))
 

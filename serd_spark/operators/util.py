@@ -16,9 +16,11 @@ shuffle).  The target is derived from the session
 (``defaultParallelism``), never a constant, and can be pinned with
 ``spark.serd.spread.partitions`` (0 disables).
 
-``frontier_fixpoint`` is the one semi-naive closure loop behind every
-graph closure (``bfs_levels``, the ``bgp_path_quant`` pair closure and
-its seeded form), so the visited-set and checkpoint policy lives here
+``fixpoint`` is the one convergence loop: it owns the round and
+``max_iters`` exhaustion contract for ``dup_clusters`` and for
+``frontier_fixpoint``, the semi-naive closure step behind every graph
+closure (``bfs_levels``, the ``bgp_path_quant`` pair closure and its
+seeded form), so the visited-set and checkpoint policy lives here
 only.
 """
 
@@ -63,6 +65,32 @@ def spread(df: DataFrame, factor: int = 1,
     return out
 
 
+def fixpoint(state, step, max_iters: int, what: str):
+    """Iterate ``state = step(state)`` until ``step`` returns ``None``
+    (the fixpoint: ``state`` is the answer) — the one convergence loop
+    behind every closure and ``dup_clusters``, so the round and
+    exhaustion policy lives here only.  ``step`` cuts its own lineage
+    (one eager ``localCheckpoint``) and runs one emptiness check per
+    round.
+
+    ``max_iters`` is a backstop, not a tuning knob: if it runs out,
+    ONE extra probe round decides — an answer that needed exactly
+    ``max_iters`` rounds is complete and returns, one that still moves
+    raises ``RuntimeError`` (a silently partial answer is a wrong
+    answer).  ``what`` names the caller in that message."""
+    for _ in range(max_iters):
+        nxt = step(state)
+        if nxt is None:
+            return state
+        state = nxt
+    if step(state) is not None:
+        raise RuntimeError(
+            f"{what}: still changing after max_iters={max_iters}"
+            f" rounds — the answer is deeper than the backstop;"
+            f" raise max_iters")
+    return state
+
+
 def frontier_fixpoint(seed: DataFrame, expand, key: list,
                       max_iters: int, what: str) -> DataFrame:
     """Semi-naive closure: ``seed`` plus every row that repeated
@@ -79,27 +107,16 @@ def frontier_fixpoint(seed: DataFrame, expand, key: list,
     23.3 → 18.5 s on the sf1.0 ``p*`` row).  ``seed`` should itself be
     checkpointed and carry the columns ``expand`` emits.
 
-    Stops at the first empty round.  ``max_iters`` is a diameter
-    backstop, not a tuning knob: if it runs out, ONE extra probe round
-    decides — a closure of depth exactly ``max_iters`` is complete and
-    returns, one that still expands raises ``RuntimeError`` (a silently
-    partial closure is a wrong answer).  ``what`` names the caller in
-    that message."""
-    def _new(frontier, visited):
-        return (expand(frontier).distinct()
-                .join(visited.select(*key), key, "left_anti")
-                .localCheckpoint())
-
-    visited = frontier = seed
-    for _ in range(max_iters):
-        nxt = _new(frontier, visited)
+    Stops at the first empty round; :func:`fixpoint` owns the
+    ``max_iters`` contract (a closure deeper than the backstop
+    raises)."""
+    def step(state):
+        visited, frontier = state
+        nxt = (expand(frontier).distinct()
+               .join(visited.select(*key), key, "left_anti")
+               .localCheckpoint())
         if nxt.isEmpty():
-            return visited
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    if not _new(frontier, visited).isEmpty():
-        raise RuntimeError(
-            f"{what}: frontier still expanding after"
-            f" max_iters={max_iters} rounds — the closure is deeper"
-            f" than the backstop; raise max_iters")
-    return visited
+            return None
+        return visited.unionByName(nxt), nxt
+
+    return fixpoint((seed, seed), step, max_iters, what)[0]

@@ -903,7 +903,7 @@ def _chain_closure(spark, which: str, n_edges: int, k: int) -> tuple:
     backstop ``k``; return (got, the full closure it must equal)."""
     from serd_spark.operators.dedup import dup_clusters
     from serd_spark.operators.graph import bfs_levels
-    from serd_spark.operators.kg import bgp, bgp_path_quant
+    from serd_spark.operators.kg import bgp, bgp_path_quant, sameas_closure
 
     chain = [(i, i + 1) for i in range(n_edges)]
     if which == "bfs_levels":
@@ -918,6 +918,13 @@ def _chain_closure(spark, which: str, n_edges: int, k: int) -> tuple:
             max_iter=k)
         return ({(r.doc_id, r.cluster_id) for r in got.collect()},
                 {(i, 0) for i in range(n_edges + 1)})
+    if which == "sameas_closure":
+        same = [(f"n{a}", "http://www.w3.org/2002/07/owl#sameAs",
+                 f"n{b}") for a, b in chain]
+        data = [(f"n{i}", "p", f"v{i}") for i in range(n_edges + 1)]
+        got = sameas_closure(_triples_df(spark, same + data), max_iter=k)
+        return ({tuple(r) for r in got.collect()},
+                {("n0", "p", f"v{i}") for i in range(n_edges + 1)})
     t = _triples_df(spark, [(f"n{a}", "e", f"n{b}") for a, b in chain])
     if which == "bgp_path_quant":
         got = bgp_path_quant(t, "e", 1, None, max_iters=k)
@@ -932,7 +939,7 @@ def _chain_closure(spark, which: str, n_edges: int, k: int) -> tuple:
 
 @pytest.mark.parametrize("which, seed_len", [
     ("bfs_levels", 0), ("bgp_path_quant", 1), ("seeded_bgp_arm", 1),
-    ("dup_clusters", 0)])
+    ("dup_clusters", 0), ("sameas_closure", 0)])
 def test_closure_max_iters_contract(spark, which, seed_len):
     """Every convergence loop shares one exhaustion contract: a closure
     needing exactly ``max_iters`` rounds is returned complete (no false
