@@ -18,15 +18,34 @@ the ANN-recall pytest.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
+# path -> ((st_mtime_ns, st_size, st_ino), schema) of its last read
+_SCHEMAS: dict[str, tuple[tuple[int, int, int], StructType]] = {}
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read one table.  Parquet schema inference runs a Spark job while
+    the plan is only being built, so it runs once per version of the
+    table; a rewrite (new mtime, size or inode) infers again."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path: infer every time
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 # ---------------------------------------------------------------- entry

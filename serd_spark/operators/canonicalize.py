@@ -4,11 +4,12 @@
   a ``row_number`` window whose keys lead with ``SORT_KEY``, so a
   range partitioning on ``SORT_KEY`` serves it and its local sort is
   also the canonical output order (``materialize.sorted_nquads``).
-- ``nquads_line_col``: canonical NQuads spelling as a JVM-side column
+- ``nquads_line_col``: canonical NQuads spelling as one SQL
   expression — whole-stage-codegen string ops, no Python in the hot
-  path.  Parser-emitted IRIs are escape-free by construction (forbidden
-  chars are rejected at parse time), so only literal bodies need the
-  escape chain.
+  path, and one py4j call to build.  Parser-emitted IRIs are
+  escape-free by construction (forbidden chars are rejected at parse
+  time), so only literal bodies need the escape chain, five literal
+  ``replace`` steps.
 - ``intern_nodes``: dictionary-encode terms into a nodes table +
   id-based triples (serd's stack interning re-expressed as a join
   table; shrinks shuffle width for downstream stages).
@@ -18,69 +19,71 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 # The canonical output order; the quad key is it plus s_type.
 SORT_KEY = ["g", "s", "p", "o", "o_type", "o_datatype", "o_lang"]
 QUAD_COLS = SORT_KEY + ["s_type"]
 
 
+# The expressions below are each one SQL string, built with one py4j
+# call: every ``F.*`` call costs several round trips (PySpark captures
+# its call site), and plan building runs on the driver's clock.
+_FIRST_BY_QUAD = (
+    f"row_number() OVER (PARTITION BY {', '.join(QUAD_COLS)} "
+    f"ORDER BY conv_id, stmt_idx)")
+
+
 def dedup_triples(triples: DataFrame) -> DataFrame:
     """Distinct on the quad key, keeping the smallest
     ``(conv_id, stmt_idx)`` for stable lineage (deterministic across
     retries/partitionings)."""
-    w = Window.partitionBy(*QUAD_COLS).orderBy("conv_id", "stmt_idx")
     return (
-        triples.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= 1)
+        triples.withColumn("_rn", F.expr(_FIRST_BY_QUAD))
+        .where("_rn <= 1")
         .drop("_rn")
     )
 
+# The writer's literal escape table (O-25), backslash first.  ``char``
+# keeps backslashes out of the SQL text, whose string literals read
+# differently under ``spark.sql.parser.escapedStringLiterals``.
+_ESCAPES = [("char(92)", "char(92), char(92)"),
+            ("'\"'", "char(92), '\"'"),
+            ("char(10)", "char(92), 'n'"),
+            ("char(13)", "char(92), 'r'"),
+            ("char(9)", "char(92), 't'")]
 
-def _escape_literal_col(c: Column) -> Column:
-    # Order matters: backslash first (writer escape table, O-25).
-    c = F.regexp_replace(c, r"\\", r"\\\\")
-    c = F.regexp_replace(c, '"', '\\\\"')
-    c = F.regexp_replace(c, "\n", r"\\n")
-    c = F.regexp_replace(c, "\r", r"\\r")
-    c = F.regexp_replace(c, "\t", r"\\t")
-    return c
+
+def _term_sql(value: str, type_: str, suffix: str = "''") -> str:
+    """Canonical term spelling (URI=2, BLANK=4, LITERAL=1); a literal
+    is its escaped body plus ``suffix``."""
+    body = value
+    for char, escape in _ESCAPES:
+        body = f"replace({body}, {char}, concat({escape}))"
+    return (f"CASE CAST({type_} AS INT) "
+            f"WHEN 2 THEN concat('<', {value}, '>') "
+            f"WHEN 4 THEN concat('_:', {value}) "
+            f"ELSE concat('\"', {body}, '\"', {suffix}) END")
 
 
-def term_col(value: Column, type_: Column, datatype: Column,
-             lang: Column) -> Column:
-    """Canonical term spelling (URI=2, BLANK=4, LITERAL=1)."""
-    uri = F.concat(F.lit("<"), value, F.lit(">"))
-    blank = F.concat(F.lit("_:"), value)
-    body = F.concat(F.lit('"'), _escape_literal_col(value), F.lit('"'))
-    literal = (
-        F.when(lang.isNotNull(), F.concat(body, F.lit("@"), lang))
-        .when(datatype.isNotNull(),
-              F.concat(body, F.lit("^^<"), datatype, F.lit(">")))
-        .otherwise(body)
-    )
-    return (
-        F.when(type_ == F.lit(2), uri)
-        .when(type_ == F.lit(4), blank)
-        .otherwise(literal)
-    )
+# A language tag wins over a datatype; blank graph labels arrive as
+# '_:...' and IRI graphs bare.
+_NQUADS_LINE = (
+    "concat("
+    + _term_sql("s", "s_type")
+    + ", ' <', p, '> ', "
+    + _term_sql("o", "o_type",
+                "CASE WHEN o_lang IS NOT NULL THEN concat('@', o_lang) "
+                "WHEN o_datatype IS NOT NULL "
+                "THEN concat('^^<', o_datatype, '>') ELSE '' END")
+    + ", CASE WHEN g IS NULL THEN '' "
+    "WHEN startswith(g, '_:') THEN concat(' ', g) "
+    "ELSE concat(' <', g, '>') END, ' .')")
 
 
 def nquads_line_col(df: DataFrame) -> Column:
-    """One canonical NQuads line per triple row (blank graph labels
-    arrive as '_:...' and IRI graphs bare)."""
-    s = term_col(F.col("s"),
-                 F.col("s_type").cast("int"),
-                 F.lit(None).cast("string"), F.lit(None).cast("string"))
-    p = F.concat(F.lit("<"), F.col("p"), F.lit(">"))
-    o = term_col(F.col("o"), F.col("o_type").cast("int"),
-                 F.col("o_datatype"), F.col("o_lang"))
-    g = (
-        F.when(F.col("g").isNull(), F.lit(""))
-        .when(F.col("g").startswith("_:"), F.concat(F.lit(" "), F.col("g")))
-        .otherwise(F.concat(F.lit(" <"), F.col("g"), F.lit(">")))
-    )
-    return F.concat(s, F.lit(" "), p, F.lit(" "), o, g, F.lit(" ."))
+    """One canonical NQuads line per triple row of ``df``."""
+    return F.expr(_NQUADS_LINE)
 
 
 def intern_nodes(triples: DataFrame) -> tuple[DataFrame, DataFrame]:

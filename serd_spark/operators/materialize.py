@@ -15,7 +15,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .canonicalize import SORT_KEY, dedup_triples, nquads_line_col
 
@@ -30,8 +30,7 @@ def sorted_nquads(triples: DataFrame) -> DataFrame:
     sort already orders each partition on ``SORT_KEY``, so the
     ``sortWithinPartitions`` below is planned away.  Reading the part
     files in name order gives the canonical stream."""
-    ranged = triples.repartitionByRange(
-        *[F.col(c).asc_nulls_first() for c in SORT_KEY])
+    ranged = triples.repartitionByRange(*SORT_KEY)  # ascending: nulls first
     deduped = dedup_triples(ranged).sortWithinPartitions(*SORT_KEY)
     return deduped.select(nquads_line_col(deduped).alias("line"))
 
@@ -53,13 +52,9 @@ def _done_marker(path: str) -> str:
     return os.path.join(path, "_DONE.json")
 
 
-def checkpoint_exists(path: str) -> bool:
-    return os.path.exists(_done_marker(path))
-
-
 def write_checkpoint(
     df: DataFrame, path: str, stage: str,
-    validate_readback: bool = False,
+    counts: dict[str, Column] | None = None,
 ) -> dict:
     """Write a stage checkpoint + _DONE marker with its row count.  A
     later run resumes by reading the checkpoint instead of recomputing
@@ -67,29 +62,21 @@ def write_checkpoint(
 
     The row count rides the write itself via ``Observation`` — no
     re-read of the stage just to count (at scale that was one extra
-    full scan per stage).  ``validate_readback=True`` restores the
-    old paranoid mode: re-read the files and compare counts."""
+    full scan per stage).  ``counts`` names further aggregates the
+    same ``Observation`` takes; each is recorded in the marker under
+    its name."""
     from pyspark.sql import Observation
 
     obs = Observation(f"ckpt_{stage}")
-    w = df.observe(obs, F.count(F.lit(1)).alias("rows")) \
-        .write.mode("overwrite")
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    aggs += [c.alias(name) for name, c in (counts or {}).items()]
+    w = df.observe(obs, *aggs).write.mode("overwrite")
     t0 = time.time()
     w.parquet(path)
-    n = obs.get["rows"]
-    if validate_readback:
-        spark = df.sparkSession
-        n_back = spark.read.parquet(path).count()
-        if n_back != n:
-            raise IOError(
-                f"checkpoint {stage}: wrote {n} rows but read back "
-                f"{n_back}")
-    info = {
-        "stage": stage,
-        "rows": n,
-        "elapsed_sec": round(time.time() - t0, 3),
-        "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
+    info = {"stage": stage, **obs.get,
+            "elapsed_sec": round(time.time() - t0, 3),
+            "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
+                                        time.gmtime())}
     with open(_done_marker(path), "w") as f:
         json.dump(info, f)
     return info

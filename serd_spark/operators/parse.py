@@ -498,7 +498,7 @@ def parse_ntriples_lines(
 
 def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(triples, errors) — serd's lax semantics as a filter pair."""
-    triples = parsed.where(F.col("err").isNull()).drop("err")
-    errors = parsed.where(F.col("err").isNotNull()).select(
-        "conv_id", F.col("stmt_idx").alias("err_idx"), "err")
+    triples = parsed.where("err IS NULL").drop("err")
+    errors = parsed.where("err IS NOT NULL").selectExpr(
+        "conv_id", "stmt_idx AS err_idx", "err")
     return triples, errors

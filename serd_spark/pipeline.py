@@ -1,12 +1,24 @@
 """End-to-end KG-construction pipeline (the serdi analogue, O-5).
 
-transcripts → ``parsed`` (parse, one checkpoint of triples and
-quarantined errors) → ``errors`` (the quarantine ledger) →
-``metrics`` (per-conversation triple and error counts) → ``nquads``
-(dedup + globally sorted NQuads, one plan).  Each stage writes a
-parquet checkpoint with a _DONE marker, and a re-run skips every stage
-whose marker exists; only ``parsed`` is read back, as the input of the
-other three.
+Three stages, each a parquet checkpoint with a ``_DONE.json`` marker:
+
+- ``parsed``: the parse, one row per triple or quarantined error
+  (``err`` set).  This checkpoint is also the quarantine ledger: its
+  error rows are ``split_quarantine(parsed)[1]``, so no stage re-writes
+  them.
+- ``metrics``: per-conversation triple and error counts.
+- ``nquads``: dedup + globally sorted NQuads, one plan.
+
+A re-run skips every stage whose marker exists; only ``parsed`` is
+read back, as the input of the other two.  A ``parsed`` marker without
+the error count (one written before the count was observed) is not
+finished, so that stage runs again.  The summary's counts come
+from the markers, which the writes' own ``Observation``s fill:
+``n_errors`` is the ``parsed`` write's ``err IS NOT NULL`` count,
+``n_convs`` the ``metrics`` rows and ``n_triples`` the ``nquads``
+rows; its per-part-file ``partitions`` come from the NQuads parquet
+footers.  So the run ends without a counting job, and a re-run of a
+finished job starts none at all.
 
 Run via spark-submit:
     spark-submit --py-files serd_spark.zip -m serd_spark.pipeline \
@@ -27,10 +39,6 @@ indices are pure functions of input coordinates so retries/speculative
 tasks are safe; the only wide operations are the parse repartition,
 the one range Exchange that feeds both the dedup and the sorted
 NQuads write (``sorted_nquads``), and the ``metrics`` aggregation.
-The summary's counts come from the stage writes' own row counts and
-its per-part-file ``partitions`` from the NQuads parquet footers, so
-the run ends without a counting job, and a re-run of a finished job
-starts none at all.
 """
 
 from __future__ import annotations
@@ -40,11 +48,10 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators.canonicalize import conv_metrics_from_parsed
 from .operators.materialize import (
-    checkpoint_exists,
     checkpoint_info,
     part_rows,
     sorted_nquads,
@@ -88,42 +95,44 @@ class KGPipeline:
     def _path(self, stage: str) -> str:
         return os.path.join(self.workdir, stage)
 
-    def _stage(self, name: str, build) -> int:
+    def _stage(self, name: str, build, counts=None) -> dict:
         """Run one checkpointed stage unless an earlier run finished it,
-        and return its rows: counted by the write itself, or on resume
-        read from the checkpoint's marker."""
+        and return its info: ``rows`` and each of ``counts`` (named
+        aggregates, see ``write_checkpoint``), observed by the write
+        itself or on resume read from the checkpoint's marker.  A
+        marker that lacks one of ``counts`` (written before the count
+        existed) does not count as finished."""
         path = self._path(name)
-        if checkpoint_exists(path):
+        done = checkpoint_info(path)
+        keys = ["rows", *(counts or {})]
+        if done is not None and all(k in done for k in keys):
             info = {"stage": name, "resumed": True,
-                    "rows": checkpoint_info(path)["rows"]}
+                    **{k: done[k] for k in keys}}
         else:
-            info = write_checkpoint(build(), path, name)
+            info = write_checkpoint(build(), path, name, counts=counts)
         self.stage_infos.append(info)
-        return info["rows"]
+        return info
 
     def run(self, transcripts: DataFrame) -> dict:
         t0 = time.time()
 
-        if self.syntax in ("ntriples", "nquads"):
-            self._stage(
-                "parsed",
-                lambda: parse_documents(transcripts, self.syntax, self.lax),
-            )
-        else:
-            self._stage(
-                "parsed",
-                lambda: parse_documents_colocated(
-                    transcripts, self.chunk_turns, self.syntax, self.lax),
-            )
+        def parse():
+            if self.syntax in ("ntriples", "nquads"):
+                return parse_documents(transcripts, self.syntax, self.lax)
+            return parse_documents_colocated(
+                transcripts, self.chunk_turns, self.syntax, self.lax)
+
+        n_errors = self._stage(
+            "parsed", parse, counts={"errors": F.count("err")})["errors"]
         # every parse pass emits PARSED_SCHEMA: no schema-inference job
         parsed = self.spark.read.schema(PARSED_SCHEMA).parquet(
             self._path("parsed"))
-        triples, errors = split_quarantine(parsed)
+        triples, _ = split_quarantine(parsed)
 
-        n_errors = self._stage("errors", lambda: errors)
         n_convs = self._stage(
-            "metrics", lambda: conv_metrics_from_parsed(parsed))
-        n_triples = self._stage("nquads", lambda: sorted_nquads(triples))
+            "metrics", lambda: conv_metrics_from_parsed(parsed))["rows"]
+        n_triples = self._stage(
+            "nquads", lambda: sorted_nquads(triples))["rows"]
 
         out_path = self._path("nquads")
         summary = {

@@ -88,6 +88,28 @@ def test_query_matches_oracle(spark, name):
     assert not mism, f"{name}: first mismatches {mism[:3]}"
 
 
+def test_table_schema_inferred_once_per_version(spark, tmpdir_path):
+    """A second read of a table starts no Spark job, and a table
+    rewritten in place with another schema is read with the new one."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    path = os.path.join(tmpdir_path, "t.parquet")
+    spark.range(3).selectExpr("id AS a").write.parquet(path)
+    assert entrymod._t(spark, tmpdir_path, "t").columns == ["a"]
+    before = last_job()
+    again = entrymod._t(spark, tmpdir_path, "t")
+    assert last_job() == before
+    assert sorted(r.a for r in again.collect()) == [0, 1, 2]
+    spark.range(2).selectExpr("id AS a", "'x' AS b").write.mode(
+        "overwrite").parquet(path)
+    new = entrymod._t(spark, tmpdir_path, "t")
+    assert new.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in new.collect()) == [(0, "x"), (1, "x")]
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.collect()

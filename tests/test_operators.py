@@ -50,6 +50,52 @@ def test_nquads_lines_canonical(spark):
     assert len(triples) == 4
 
 
+@pytest.mark.parametrize("escaped_literals", ["false", "true"])
+def test_nquads_line_bytes(spark, escaped_literals):
+    """The exact NQuads spelling of every term form, under either
+    setting of the SQL parser's string-literal mode, and each line
+    re-parses to the row it came from (a language tag wins over a
+    datatype)."""
+    from serd_spark.ntriples import parse_nt_line
+    from serd_spark.operators.canonicalize import nquads_line_col
+
+    xsd_int = "http://www.w3.org/2001/XMLSchema#integer"
+    xsd_str = "http://www.w3.org/2001/XMLSchema#string"
+    rows = [
+        (None, "http://a/s", 2, "http://a/p", 'a\\b"c\nd\re\tf', 1,
+         None, None),
+        ("http://g/", "http://a/s", 2, "http://a/p", "", 1, None, None),
+        ("_:g1", "b1", 4, "http://a/p", "x", 1, xsd_str, "en"),
+        (None, "b2", 4, "http://a/p", "42", 1, xsd_int, None),
+        ("_:g1", "http://a/s", 2, "http://a/p", "b3", 4, None, None),
+        ("http://g/", "http://a/s", 2, "http://a/p", "http://a/o", 2,
+         None, None),
+    ]
+    want = [
+        '<http://a/s> <http://a/p> "a\\\\b\\"c\\nd\\re\\tf" .',
+        '<http://a/s> <http://a/p> "" <http://g/> .',
+        '_:b1 <http://a/p> "x"@en _:g1 .',
+        f'_:b2 <http://a/p> "42"^^<{xsd_int}> .',
+        "<http://a/s> <http://a/p> _:b3 _:g1 .",
+        "<http://a/s> <http://a/p> <http://a/o> <http://g/> .",
+    ]
+    df = spark.createDataFrame(
+        rows, "g string, s string, s_type int, p string, o string, "
+        "o_type int, o_datatype string, o_lang string")
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key)
+    spark.conf.set(key, escaped_literals)
+    try:
+        got = [r[0] for r in df.select(nquads_line_col(df)).collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    for row, line in zip(rows, got):
+        g, s, s_type, p, o, o_type, dt, lang = row
+        assert tuple(parse_nt_line(line)) == (
+            g, s, s_type, p, o, o_type, None if lang else dt, lang)
+
+
 def test_intern_nodes_roundtrip(spark):
     from serd_spark.operators.canonicalize import intern_nodes
 
@@ -264,8 +310,8 @@ def test_ngram_jaccard_shuffle_fallback(spark):
 
 
 def test_write_checkpoint_no_rescan(spark, tmpdir_path):
-    """Row count comes from the write-side Observation, not a re-read;
-    readback validation is opt-in."""
+    """Row count, and any further named count, come from the
+    write-side Observation, not a re-read, and land in the marker."""
     from serd_spark.operators.materialize import (
         checkpoint_info,
         write_checkpoint,
@@ -277,8 +323,10 @@ def test_write_checkpoint_no_rescan(spark, tmpdir_path):
     assert info["rows"] == 1234
     assert checkpoint_info(p)["rows"] == 1234
     p2 = os.path.join(tmpdir_path, "ckpt2")
-    info2 = write_checkpoint(df, p2, "stage2", validate_readback=True)
-    assert info2["rows"] == 1234
+    odd = F.count(F.when(F.col("x") % 2 == 1, F.lit(1)))
+    info2 = write_checkpoint(df, p2, "stage2", counts={"odd": odd})
+    assert (info2["rows"], info2["odd"]) == (1234, 617)
+    assert checkpoint_info(p2)["odd"] == 617
 
 
 def test_dup_clusters_chain_and_singletons(spark):

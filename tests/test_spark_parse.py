@@ -11,6 +11,7 @@ from serd_spark.compare import match_counts
 from serd_spark.nodes import Triple
 from serd_spark.operators.parse import (
     DEFAULT_BASE_TEMPLATE,
+    PARSED_SCHEMA,
     _rows_for_doc,
     fold_patches,
     parse_documents,
@@ -49,6 +50,13 @@ def written_lines(workdir) -> list[str]:
             for ln in pq.read_table(os.path.join(path, name),
                                     columns=["line"]).column(0)
             .to_pylist()]
+
+
+def parsed_errors(spark, workdir):
+    """A pipeline's quarantine ledger: the error rows of its ``parsed``
+    checkpoint."""
+    return split_quarantine(spark.read.schema(PARSED_SCHEMA).parquet(
+        os.path.join(workdir, "parsed")))[1]
 
 
 def written_triples(spark, workdir):
@@ -215,7 +223,8 @@ def test_pipeline_end_to_end_and_resume(spark, tmpdir_path):
     pipe2 = KGPipeline(spark, tmpdir_path, chunk_turns=8)
     s2 = pipe2.run(tdf)
     resumed = [st for st in s2["stages"] if st.get("resumed")]
-    assert len(resumed) >= 4
+    assert [st["stage"] for st in resumed] == [
+        "parsed", "metrics", "nquads"]
     assert [st["rows"] for st in resumed] == [
         st["rows"] for st in s1["stages"]]
     for k in ("n_triples", "n_errors", "n_convs"):
@@ -232,12 +241,36 @@ def test_lax_quarantine_through_pipeline(spark, tmpdir_path):
     assert s["n_triples"] > 0      # job still succeeds (lax, O-17)
     # the summary's counts are the written datasets' sizes
     tri = written_triples(spark, tmpdir_path)
-    err = spark.read.parquet(os.path.join(tmpdir_path, "errors"))
+    err = parsed_errors(spark, tmpdir_path)
     assert (s["n_triples"], s["n_errors"]) == (tri.count(), err.count())
     assert s["n_convs"] == 15
     s2 = KGPipeline(spark, tmpdir_path, chunk_turns=8).run(tdf)
     for k in ("n_triples", "n_errors", "n_convs"):
         assert s2[k] == s[k], k
+
+
+def test_pipeline_reruns_parse_without_error_count(spark, tmpdir_path):
+    """A ``parsed`` marker without the error count (as written before
+    the count was observed) is not finished: the re-run parses again,
+    resumes the other stages and reports the same summary."""
+    from serd_spark.pipeline import KGPipeline
+
+    tdf = transcripts_df(spark, 15, mega_every=0, with_errors=True)
+    s1 = KGPipeline(spark, tmpdir_path, chunk_turns=8).run(tdf)
+    marker = os.path.join(tmpdir_path, "parsed", "_DONE.json")
+    with open(marker) as f:
+        info = json.load(f)
+    del info["errors"]
+    with open(marker, "w") as f:
+        json.dump(info, f)
+    s2 = KGPipeline(spark, tmpdir_path, chunk_turns=8).run(tdf)
+    assert [st["stage"] for st in s2["stages"] if st.get("resumed")] == [
+        "metrics", "nquads"]
+    assert s1["n_errors"] > 0
+    for k in ("n_triples", "n_errors", "n_convs", "partitions"):
+        assert s2[k] == s1[k], k
+    with open(marker) as f:
+        assert json.load(f)["errors"] == s1["n_errors"]
 
 
 @pytest.fixture(scope="module")
@@ -300,15 +333,18 @@ def test_pipeline_nquads_sorted_and_duplicate_free(finished_run):
 
 
 def test_pipeline_tail_is_one_range_exchange(finished_run):
-    """After the parse the run plans two Exchanges: the range Exchange
-    the dedup and the sorted NQuads write share, and the ``metrics``
-    aggregation's.  The NQuads write sorts once."""
+    """The run writes three stages, and after the parse it plans two
+    Exchanges: the range Exchange the dedup and the sorted NQuads write
+    share, and the ``metrics`` aggregation's.  The NQuads write sorts
+    once."""
     _, _, _, execs = finished_run
     writes = {stage: names for desc, names in execs
               for stage in ("parsed", "errors", "metrics", "nquads")
               if "InsertIntoHadoopFsRelationCommand" in desc
               and f"/{stage}," in desc}
-    assert set(writes) == {"parsed", "errors", "metrics", "nquads"}
+    assert set(writes) == {"parsed", "metrics", "nquads"}
+    assert sum("InsertIntoHadoopFsRelationCommand" in desc
+               for desc, _ in execs) == 3
     tail = [names for desc, names in execs
             if "MapInArrow" not in desc]
     assert sum(names.count("Exchange") for names in tail) == 2
@@ -579,13 +615,10 @@ def test_nt_strict_stops_at_first_error(spark):
 
 
 def _strict_pipeline(spark, tdf, tmpdir):
-    from serd_spark.operators.materialize import read_checkpoint
     from serd_spark.pipeline import KGPipeline
 
     KGPipeline(spark, tmpdir, lax=False, chunk_turns=2).run(tdf)
-    tri = written_triples(spark, tmpdir)
-    err = read_checkpoint(spark, os.path.join(tmpdir, "errors"))
-    return tri, err
+    return written_triples(spark, tmpdir), parsed_errors(spark, tmpdir)
 
 
 @pytest.mark.parametrize("run", [
